@@ -242,6 +242,9 @@ def decode_avi_frames(data: bytes) -> list[np.ndarray]:
             body0, body1 = pos + 8, pos + 8 + size
             if fourcc == b"LIST":
                 walk(buf, body0 + 4, body1)
+                # a strh binds only the strf of its own strl: a stray strf
+                # after the LIST closes must not inherit the last stream type
+                cur_stream[0] = b""
             elif fourcc == b"strh":
                 cur_stream[0] = buf[body0 : body0 + 4]
             elif fourcc == b"strf" and cur_stream[0] == b"vids" and not dims:

@@ -26,19 +26,28 @@ State layout (crash-safe, O(touched) I/O per micro-batch):
 
   key-state is hash-partitioned into N_BUCKETS by pmod(xxhash64(key), B).
   Each micro-batch READS only the buckets its keys hash into, WRITES merged
-  versions of only those buckets to a fresh `v{batch_id}` directory
-  (partitioned by bucket), and then COMMITS by atomically renaming a JSON
-  manifest that maps bucket -> current parquet dir (the io.py tmp+os.replace
-  pattern). Consequences:
-    - a crash mid-write leaves the old manifest (and old bucket dirs)
-      untouched -> the replayed batch recomputes against intact state and
-      overwrites its own half-written v-dir idempotently;
+  versions of only those buckets as ONE plain parquet file set under a fresh
+  `v{batch_id}` directory (`bucket` and `version` are data columns; one
+  AQE-sized shuffle on bucket, so a small micro-batch writes one file, each
+  bucket's rows sit in one file, and a bucket filter prunes row groups), and
+  then COMMITS by atomically renaming a JSON manifest that maps each bucket
+  to the version dir holding its live rows (the io.py tmp+os.replace
+  pattern). A read scans the live version dirs once, with the known schema,
+  keeping only rows whose (version, bucket) the manifest maps; a version dir
+  is deleted once no bucket maps to it. Consequences:
+    - a crash mid-write leaves the old manifest (and the version dirs it
+      maps) untouched -> the replayed batch recomputes against intact state
+      and overwrites its own half-written v-dir idempotently;
     - a MISSING state dir means empty state, but a read error on state the
       manifest points to RAISES instead of silently resetting accumulated
       clusters;
     - per-batch I/O is proportional to the touched buckets, not O(|state|):
-      untouched bucket files are never rewritten (asserted by mtime in
-      tests/test_streaming.py)."""
+      untouched buckets' version dirs are never rewritten (asserted by mtime
+      in tests/test_streaming.py);
+    - state written by the earlier per-bucket layout (`v{id}/bucket=b` leaf
+      dirs, no bucket column) stays readable: such a pointer's leaf dir
+      holds exactly its bucket's live rows, and the bucket's next commit
+      moves it to the current layout."""
 
 from __future__ import annotations
 
@@ -153,15 +162,29 @@ class StreamState:
         Read errors propagate: the manifest is the source of truth, and a
         path it references that fails to read is corruption, not emptiness."""
         man = self.manifest()
-        empty = spark.createDataFrame([], self.columns)
-        if man is None:
-            return empty
-        self._check_key_format(man)
-        paths = [man["buckets"][str(b)] for b in buckets if str(b) in man["buckets"]]
-        if not paths:
-            return empty
+        live: dict[str, list[int]] = {}
+        if man is not None:
+            self._check_key_format(man)
+            for b in buckets:
+                if str(b) in man["buckets"]:
+                    live.setdefault(man["buckets"][str(b)], []).append(b)
+        if not live:
+            return spark.createDataFrame([], self.columns)
         cols = [c.strip().split()[0] for c in self.columns.split(",")]
-        return spark.read.parquet(*paths).select(*cols)
+        # one scan over every live pointer. A version dir may still hold
+        # superseded rows of buckets a later version rewrote, so each keeps
+        # only the buckets mapped to it; a pointer of the earlier per-bucket
+        # layout (`v{id}/bucket=b`, files without bucket/version columns,
+        # so NULL here) is a leaf dir of exactly its bucket's live rows
+        keep = F.col("version").isNull()
+        for p, bs in live.items():
+            if not _legacy(p):
+                version = int(os.path.basename(p)[1:])
+                keep = keep | ((F.col("version") == version) & F.col("bucket").isin(bs))
+        return (
+            spark.read.schema(f"{self.columns}, bucket int, version long")
+            .parquet(*live).where(keep).select(*cols)
+        )
 
     def commit(
         self, merged: DataFrame, touched: list[int], batch_id: int, gc: bool = True,
@@ -173,18 +196,19 @@ class StreamState:
         Replay-safe: if a crash lands between the manifest swing and Spark's
         checkpoint commit, the replayed batch arrives here with a batch_id the
         manifest has ALREADY folded (the min-merge is idempotent). Re-running
-        the write would target v{batch_id} — the very dirs the manifest points
+        the write would target v{batch_id} — the very dir the manifest points
         at — and mode=overwrite would delete the only copy of the touched
         buckets before the (lazy) state read ran. So a committed batch_id is
         an early return, never a rewrite.
 
-        gc=False skips deleting the superseded bucket dirs and returns them
-        for the CALLER to delete once every job whose lineage may still read
-        them has run: persist() alone does not close that window on a real
-        cluster — a lost executor recomputes cached partitions through the
-        original lineage, and MEMORY_AND_DISK survives memory pressure, not
-        executor death. Deferred orphans from a crash are never referenced
-        again (the manifest already points past them)."""
+        gc=False skips deleting the version dirs no bucket maps to any more
+        and returns them for the CALLER to delete once every job whose
+        lineage may still read them has run: persist() alone does not close
+        that window on a real cluster — a lost executor recomputes cached
+        partitions through the original lineage, and MEMORY_AND_DISK
+        survives memory pressure, not executor death. Deferred orphans from
+        a crash are never referenced again (the manifest already points past
+        them)."""
         man = self.manifest()
         if man is not None:
             self._check_key_format(man)
@@ -195,41 +219,48 @@ class StreamState:
             # check_batch_monotonic BEFORE the batch publishes any output
             self.check_batch_monotonic(batch_id, man)
         vdir = os.path.join(self.root, f"v{batch_id:09d}")
-        # repartition on the bucket column first: otherwise every shuffle
-        # task writes a file into every bucket dir it sees (up to
-        # tasks x n_buckets small files PER COMMIT, compounding into the
-        # next batch's state reads); keyed on bucket, each dir gets ~1 file
-        merged.repartition(self.n_buckets, "bucket").write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(vdir)
+        # shuffle on bucket with no fixed partition count: AQE sizes the file
+        # count (one file for a small micro-batch), each bucket's rows land in
+        # one file, and sorting by bucket keeps them in contiguous row groups
+        merged.withColumn("version", F.lit(batch_id).cast("long")).repartition(
+            "bucket"
+        ).sortWithinPartitions("bucket").write.mode("overwrite").parquet(vdir)
         man = man or {"n_buckets": self.n_buckets, "buckets": {}, "key_format": KEY_FORMAT}
         if self.key_params is not None:
             man["key_params"] = self.key_params
         assert man.get("n_buckets", self.n_buckets) == self.n_buckets, (
             "n_buckets changed mid-stream; state is keyed on it"
         )
-        replaced = []
+        before = {_vdir(p) for p in man["buckets"].values()}
         # every touched bucket materializes: `touched` is the distinct bucket
         # set of this batch's keys, state rows were read from those buckets
-        # only, and the min-merge never drops a key — so the written
-        # partition set IS `touched`, with no listing (FS-portable) and no
-        # read-back job of the files just written
+        # only, and the min-merge never drops a key — so the written bucket
+        # set IS `touched`, with no listing (FS-portable) and no read-back
+        # job of the files just written
         for b in touched:
-            old = man["buckets"].get(str(b))
-            new = os.path.join(vdir, f"bucket={b}")
-            man["buckets"][str(b)] = new
-            if old and old != new:  # never GC the dir just committed
-                replaced.append(old)
+            man["buckets"][str(b)] = vdir
         man["batch_id"] = batch_id
         self.fs.mkdirs(self.root)
         write_json_atomic(self.fs, self._manifest_path(), man)
-        # GC superseded bucket dirs AFTER the commit point (a crash here only
-        # leaves orphans; the manifest never references them again)
+        # GC version dirs no bucket maps to any more, AFTER the commit point
+        # (a crash here only leaves orphans; the manifest never references
+        # them again). vdir itself is always still mapped.
+        replaced = sorted(before - {_vdir(p) for p in man["buckets"].values()})
         if not gc:
             return replaced
         for old in replaced:
             self.fs.delete(old, recursive=True)
         return []
+
+
+def _legacy(pointer: str) -> bool:
+    """A manifest pointer of the earlier per-bucket layout (`v{id}/bucket=b`)."""
+    return os.path.basename(pointer).startswith("bucket=")
+
+
+def _vdir(pointer: str) -> str:
+    """The version dir a manifest pointer lives in (the unit of GC)."""
+    return os.path.dirname(pointer) if _legacy(pointer) else pointer
 
 
 def _batch_assignments(keyed: DataFrame, hit: DataFrame) -> DataFrame:
@@ -512,8 +543,8 @@ def _fuzzy_tier_body(spark, assigned, hit, cfg, band_state, sim_state, keyed_b, 
     handles.append(remap)
     # force the cached tables now, while the exact-tier state dirs this
     # plan's lineage reads (via hit -> seen) still exist: the exact commit
-    # that runs between here and the fuzzy commits GCs its superseded
-    # bucket dirs, and a lazy re-read of them from inside the state folds
+    # that runs between here and the fuzzy commits GCs the version dirs it
+    # supersedes, and a lazy re-read of them from inside the state folds
     # would hit FileNotFound. persist() is MEMORY_AND_DISK, so a pressured
     # executor spills rather than recomputes through the dead lineage.
     # (keyed_b/keyed_s were materialized by the touched-bucket collects.)
@@ -550,8 +581,8 @@ def _fuzzy_tier_body(spark, assigned, hit, cfg, band_state, sim_state, keyed_b, 
         if tb:
             # defer the band GC past the sim commit: the sim fold job may
             # recompute persisted lineage (remap -> seen_b) through the
-            # superseded band dirs on executor loss — the same window the
-            # exact tier's deferred GC closes in _commit_batch
+            # superseded band version dirs on executor loss — the same window
+            # the exact tier's deferred GC closes in _commit_batch
             deferred = band_state.commit(
                 _capped_fold(seen_b, keyed_b, "caption", band_state), tb, batch_id,
                 gc=not ts,
@@ -626,8 +657,7 @@ def _assign_batch_body(spark, keyed, state, out_dir, batch_id, warehouse, fuzzy,
         # empty micro-batch (e.g. a zero-row input file): nothing to assign,
         # nothing to fold into state. Skipping the commit entirely is safe —
         # replaying an empty batch is a no-op — and avoids writing a dataless
-        # version dir that the partition-discovery read-back cannot re-infer
-        # a schema from (UNABLE_TO_INFER_SCHEMA).
+        # version dir every empty trigger.
         return
     seen = state.read_buckets(spark, touched)
     # inner join: only rows with at least one state match appear; min-struct

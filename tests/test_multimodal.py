@@ -124,6 +124,36 @@ def test_avi_audio_first_stream_and_empty_frames():
         multimodal.encode_avi_raw([])
 
 
+def test_avi_stray_strf_outside_its_strl_is_ignored():
+    # malformed file: a strl holding only a 'vids' strh, then a stray strf
+    # OUTSIDE that strl with an unsupported pixel format. The strh must not
+    # carry over past its own strl, so the stray strf is skipped and the
+    # real video strl that follows decodes pixel-exact.
+    import struct
+
+    rng = np.random.default_rng(12)
+    frames = [rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint8) for _ in range(2)]
+    data = bytearray(multimodal.encode_avi_raw(frames))
+
+    def ck(fourcc, payload):
+        return fourcc + struct.pack("<I", len(payload)) + payload + (
+            b"\x00" if len(payload) & 1 else b"")
+
+    vids_strh = ck(b"strh", struct.pack("<4s4s", b"vids", b"DIB ") + b"\x00" * 48)
+    stray_strf = ck(b"strf", struct.pack("<IiiHHIIiiII", 40, 99, 99, 1, 8, 0, 0, 0, 0, 0, 0))
+    splice = ck(b"LIST", b"strl" + vids_strh) + stray_strf
+    i = bytes(data).index(b"LIST", 12, 200)  # hdrl LIST
+    insert_at = bytes(data).index(b"strl") - 8  # the real video strl's LIST header
+    data[insert_at:insert_at] = splice
+    for pos in (4, i + 4):  # grow RIFF and hdrl LIST sizes
+        (sz,) = struct.unpack("<I", data[pos : pos + 4])
+        data[pos : pos + 4] = struct.pack("<I", sz + len(splice))
+    got = multimodal.decode_avi_frames(bytes(data))
+    assert len(got) == 2
+    for a, b in zip(frames, got):
+        assert np.array_equal(a, b)
+
+
 def test_sample_frames_even_spacing_and_route():
     frames = [np.full((16, 16, 3), i * 10, dtype=np.uint8) for i in range(9)]
     data = multimodal.encode_avi_raw(frames)

@@ -845,3 +845,230 @@ def test_fuzzy_crash_between_band_and_sim_commits_replays_clean(spark, tmp_path)
     assert replay_rows == clean_rows
     got2 = {r["image_id"]: r["cluster_id"] for r in spark.read.parquet(asg_dir).collect()}
     assert got2 == got1
+
+
+def _fold(spark, state, pairs, batch_id, gc=True):
+    """One state fold as the exact tier does it: read the touched buckets,
+    min-merge the new (key, rep_id) pairs in, commit."""
+    from pyspark.sql import functions as F
+
+    new = spark.createDataFrame(pairs, "key string, rep_id string")
+    touched = sorted(
+        r["b"] for r in new.select(state.bucket_col("key").alias("b")).distinct().collect()
+    )
+    merged = (
+        state.read_buckets(spark, touched).unionByName(new)
+        .groupBy("key").agg(F.min("rep_id").alias("rep_id"))
+        .withColumn("bucket", state.bucket_col("key"))
+    )
+    return state.commit(merged, touched, batch_id, gc=gc)
+
+
+def _vdirs_on_disk(root):
+    return {os.path.join(root, d) for d in os.listdir(root) if d.startswith("v")}
+
+
+def _bucket_range_folds(spark, state, spans):
+    """One fold per (lo, hi, tag): every pool key whose bucket is in
+    [lo, hi], with rep `tag|key` — a later, smaller tag lowers the rep of
+    keys already in state, and the pool holds keys no earlier fold had."""
+    pool = [f"k{i:04d}" for i in range(600)]
+    df = spark.createDataFrame([(k,) for k in pool], "key string")
+    bucket = {r["key"]: r["b"] for r in df.withColumn("b", state.bucket_col("key")).collect()}
+    return [[(k, f"{tag}|{k}") for k in pool if lo <= bucket[k] <= hi] for lo, hi, tag in spans]
+
+
+def test_read_buckets_returns_only_live_versions(spark, tmp_path):
+    """Three micro-batches touching different bucket subsets leave
+    superseded rows inside version dirs that other buckets still map to;
+    read_buckets(all) must equal a brute-force min-merge of every key —
+    no stale row from a superseded version, nothing missing."""
+    from dedup.streaming import StreamState
+
+    state = StreamState(str(tmp_path / "state"))
+    folded: list[tuple[str, str]] = []
+    spans = [(0, 63, "r9"), (0, 23, "r5"), (16, 40, "r7")]
+    for bid, pairs in enumerate(_bucket_range_folds(spark, state, spans)):
+        _fold(spark, state, pairs, bid)
+        folded += pairs
+    want: dict[str, str] = {}
+    for k, r in folded:
+        want[k] = min(r, want.get(k, r))
+    got = [(r["key"], r["rep_id"]) for r in state.read_buckets(spark, list(range(64))).collect()]
+    assert len(got) == len({k for k, _ in got})  # one row per key
+    assert dict(got) == want
+    # the test's premise: v0 is still mapped AND physically holds rows that
+    # later versions superseded
+    v0 = str(tmp_path / "state" / "v000000000")
+    assert v0 in state.manifest()["buckets"].values()
+    stale = {r["key"]: r["rep_id"] for r in spark.read.parquet(v0).collect()}
+    assert any(want[k] != r for k, r in stale.items())
+
+
+def test_version_dir_gc_follows_manifest_refcount(spark, tmp_path):
+    """A version dir is deleted exactly when no bucket maps to it any more:
+    with gc=True the dirs on disk are always exactly the mapped ones; with
+    gc=False the commit deletes nothing and returns exactly the unmapped
+    dirs for the caller to delete."""
+    from dedup.streaming import StreamState
+
+    for gc in (True, False):
+        root = str(tmp_path / f"state_gc{gc}")
+        state = StreamState(root)
+        # v0 maps every bucket; fold 1 remaps < 24 (v0 still live), fold 2
+        # remaps >= 24 (v0 unmapped), fold 3 remaps < 24 again (v1 unmapped)
+        spans = [(0, 63, "r9"), (0, 23, "r5"), (24, 63, "r5"), (0, 23, "r3")]
+        vdir = lambda i: os.path.join(root, f"v{i:09d}")  # noqa: E731
+        unmapped = {0: [], 1: [], 2: [vdir(0)], 3: [vdir(1)]}
+        for bid, pairs in enumerate(_bucket_range_folds(spark, state, spans)):
+            before = _vdirs_on_disk(root) if bid else set()
+            ret = _fold(spark, state, pairs, bid, gc=gc)
+            mapped = set(state.manifest()["buckets"].values())
+            on_disk = _vdirs_on_disk(root)
+            assert mapped <= on_disk  # nothing still mapped is ever deleted
+            if gc:
+                assert ret == [] and on_disk == mapped, bid
+            else:
+                assert ret == unmapped[bid] and on_disk == before | {vdir(bid)}, bid
+                for d in ret:
+                    state.fs.delete(d, recursive=True)
+                assert _vdirs_on_disk(root) == mapped, bid
+
+
+def test_fuzzy_tiers_gc_unmapped_version_dirs(spark, tmp_path):
+    """The fuzzy tiers' deferred band GC and the exact tier's deferred GC
+    leave, after every micro-batch, exactly the mapped version dirs of each
+    state on disk; a batch repeating the previous batch's keys unmaps (and
+    so deletes) that batch's dirs in all three states."""
+    import json
+
+    from dedup.streaming import _assign_batch
+
+    wh = str(tmp_path / "wh")
+    batches = [
+        [_row("a0000001", CAP_A, 0x0123456789ABCDEF, b"\x01")],
+        [_row("b0000001", CAP_FAR, 0x7FFFFFFFFFFF0000, b"\x02")],
+        # same bytes/caption/pHash as batch 1: the same keys in every state
+        [_row("c0000001", CAP_FAR, 0x7FFFFFFFFFFF0000, b"\x02")],
+    ]
+    states = [os.path.join(wh, s) for s in ("stream_state", "band_state", "simhash_state")]
+    for bid, rows in enumerate(batches):
+        _assign_batch(spark.createDataFrame(synth.to_arrow(rows).to_pandas()), bid, wh, fuzzy=True)
+        for root in states:
+            with open(os.path.join(root, "_state_manifest.json")) as f:
+                mapped = set(json.load(f)["buckets"].values())
+            assert _vdirs_on_disk(root) == mapped, (bid, root)
+            assert os.path.join(root, f"v{bid:09d}") in mapped
+    for root in states:
+        assert not os.path.exists(os.path.join(root, "v000000001")), root
+    got = {
+        r["image_id"]: r["cluster_id"]
+        for r in spark.read.parquet(os.path.join(wh, "stream_assignments")).collect()
+    }
+    assert got["c0000001"] == got["b0000001"] == "b0000001"
+
+
+def test_micro_batch_state_is_one_file_set_with_no_listing_job(spark, tmp_path):
+    """After a 200-row micro-batch the version dir is a plain file set: at
+    most spark.sql.shuffle.partitions data files, no bucket= subdirs. The
+    next micro-batch reads it back with no "Listing leaf files" job and no
+    job of n_buckets tasks (the old per-bucket write and listing shape)."""
+    from dedup.streaming import N_BUCKETS, StreamState, _assign_batch
+
+    wh = str(tmp_path / "wh")
+    rows = synth.generate(260, seed=11)
+    _assign_batch(spark.createDataFrame(synth.to_arrow(rows[:200]).to_pandas()), 0, wh)
+    v0 = os.path.join(wh, "stream_state", "v000000000")
+    entries = os.listdir(v0)
+    data = [e for e in entries if e.endswith(".parquet")]
+    assert 1 <= len(data) <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert not any(os.path.isdir(os.path.join(v0, e)) for e in entries)
+    # 180 keys of the next batch touch far more than the 32 paths above which
+    # a parallel listing job would start
+    assert len(StreamState(os.path.join(wh, "stream_state")).manifest()["buckets"]) > 32
+
+    sc = spark.sparkContext
+    group = f"job-shape-{tmp_path.name}"
+    sc.setJobGroup(group, "job shape probe")
+    try:
+        _assign_batch(spark.createDataFrame(synth.to_arrow(rows[200:]).to_pandas()), 1, wh)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    assert jobs
+    descriptions = {}
+    it = sc._jsc.sc().statusStore().jobsList(None).iterator()
+    while it.hasNext():
+        j = it.next()
+        d = j.description()
+        descriptions[j.jobId()] = d.get() if d.isDefined() else ""
+    for jid in jobs:
+        assert not descriptions.get(jid, "").startswith("Listing leaf files"), jid
+        for sid in st.getJobInfo(jid).stageIds:
+            info = st.getStageInfo(sid)
+            assert info is None or info.numTasks != N_BUCKETS, (jid, sid)
+
+
+def _to_parent_layout(spark, root):
+    """Rewrite a state dir into the earlier per-bucket layout as that code
+    wrote it: one `v{id}/bucket=b` leaf dir per bucket holding parquet files
+    WITHOUT a bucket column, and a manifest pointing at the leaf dirs."""
+    import shutil
+
+    from dedup.fs import write_json_atomic
+    from dedup.streaming import StreamState
+
+    state = StreamState(root)
+    man = state.manifest()
+    rows = (
+        state.read_buckets(spark, list(range(state.n_buckets)))
+        .withColumn("bucket", state.bucket_col("key"))
+        .toPandas()
+    )
+    shutil.rmtree(root)
+    vdir = os.path.join(root, f"v{man['batch_id']:09d}")
+    df = spark.createDataFrame(rows, "key string, rep_id string, bucket int")
+    df.repartition(state.n_buckets, "bucket").write.partitionBy("bucket").parquet(vdir)
+    man["buckets"] = {str(b): os.path.join(vdir, f"bucket={b}") for b in set(rows["bucket"])}
+    write_json_atomic(state.fs, os.path.join(root, "_state_manifest.json"), man)
+    return len(rows)
+
+
+def test_parent_layout_state_folds_and_late_copies_join(spark, tmp_path):
+    """State committed by the earlier per-bucket layout (leaf dirs without a
+    bucket column) keeps working: late exact copies join their originals
+    while every touched bucket is still legacy, and again once the state
+    mixes migrated and legacy buckets; untouched legacy buckets stay put."""
+    from dedup.streaming import StreamState, _assign_batch
+
+    wh = str(tmp_path / "wh")
+    root = os.path.join(wh, "stream_state")
+    rows = synth.generate(60, seed=5)
+    _assign_batch(spark.createDataFrame(synth.to_arrow(rows).to_pandas()), 0, wh)
+    n_rows = _to_parent_layout(spark, root)
+    state = StreamState(root)
+    assert state.read_buckets(spark, list(range(64))).count() == n_rows
+
+    def late(src, tag):
+        out = []
+        for i, r in enumerate(src):
+            c = dict(r)
+            c["image_id"] = f"late{tag}{i:05d}"
+            out.append(c)
+        return out
+
+    asg_dir = os.path.join(wh, "stream_assignments")
+    # batch 1 reads legacy buckets only; batch 2 re-hits some of batch 1's
+    # (now migrated) buckets plus legacy ones
+    for bid, src in ((1, rows[:5]), (2, rows[3:10])):
+        _assign_batch(spark.createDataFrame(synth.to_arrow(late(src, bid)).to_pandas()), bid, wh)
+        got = {r["image_id"]: r["cluster_id"] for r in spark.read.parquet(asg_dir).collect()}
+        for i, r in enumerate(src):
+            assert got[f"late{bid}{i:05d}"] == got[r["image_id"]], (bid, i)
+    man = state.manifest()
+    legacy = [p for p in man["buckets"].values() if os.path.basename(p).startswith("bucket=")]
+    assert legacy and all(os.path.isdir(p) for p in legacy)
+    assert any(p.endswith("v000000002") for p in man["buckets"].values())
+    assert state.read_buckets(spark, list(range(64))).count() == n_rows
