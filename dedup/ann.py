@@ -53,8 +53,8 @@ def batch_topk(
     probe_id_col: str = "probe_id", probe_vec_col: str = "qe",
     exclude_self: bool = True,
     max_pairs: int | None = 1_000_000_000,
-    n_corpus: int | None = None,
-    n_probes: int | None = None,
+    n_corpus_max: int | None = None,
+    n_probes_max: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k for a whole PROBE TABLE at once — the reference's
     batch scoring of a test split (/root/reference/eridu/train/utils.py:153-235),
@@ -73,18 +73,19 @@ def batch_topk(
     silently running it would hold a 100 TB cluster hostage to one gemm-less
     cross join. Pass max_pairs=None to force the exact path regardless.
 
-    n_corpus / n_probes: caller-known row counts (or safe UPPER bounds —
-    the guard only compares their product against max_pairs, so an
-    overestimate can only route more conservatively). Each one provided
-    skips one count() job that would re-execute that side's upstream
-    lineage on every call (the ivf_centroids n_rows pattern)."""
+    n_corpus_max / n_probes_max: caller-known UPPER bounds on the row
+    counts (an exact count is the tightest one). They are trusted, not
+    checked: the guard only compares their product against max_pairs, so
+    an overestimate can only route more conservatively, while an
+    UNDERestimate can keep an oversized probe table on the exact path.
+    Each one provided skips one count() job that would re-execute that
+    side's upstream lineage on every call (the ivf_centroids n_rows
+    pattern)."""
     from pyspark.sql import Window
 
     if max_pairs is not None:
-        if n_corpus is None:
-            n_corpus = embeddings.count()
-        if n_probes is None:
-            n_probes = probes.count()
+        n_corpus = embeddings.count() if n_corpus_max is None else n_corpus_max
+        n_probes = probes.count() if n_probes_max is None else n_probes_max
         if n_corpus * n_probes > max_pairs:
             dim = embeddings.select(F.size(vec_col).alias("d")).first()["d"]
             print(

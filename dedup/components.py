@@ -147,6 +147,29 @@ def _driver_union_find(edges: DataFrame) -> tuple[DataFrame, int]:
     return spark.createDataFrame(roots), roots.nbytes
 
 
+def cc_route(
+    n_edges: int, edge_bytes: int, cfg: DedupConfig = DEFAULT,
+    driver_edge_threshold: int | None = None,
+) -> dict:
+    """The route connected_components takes for an edge set of `n_edges`
+    raw rows and `edge_bytes` estimated driver heap, with the gate values
+    that chose it: "driver" (union-find on the driver) when there is at
+    least one edge and both values are within bounds, else "star" (the
+    distributed large-star/small-star loop). The pipeline records this dict
+    in the assignments manifest, so the decision is read from the warehouse
+    rather than re-derived."""
+    if driver_edge_threshold is None:
+        driver_edge_threshold = cfg.cc_driver_edge_threshold
+    driver = 0 < n_edges <= driver_edge_threshold and edge_bytes <= cfg.cc_driver_max_bytes
+    return {
+        "route": "driver" if driver else "star",
+        "edges": n_edges,
+        "edge_bytes_est": edge_bytes,
+        "driver_edge_threshold": driver_edge_threshold,
+        "driver_max_bytes": cfg.cc_driver_max_bytes,
+    }
+
+
 def connected_components(
     edges: DataFrame, vertices: DataFrame, max_iter: int = 40,
     driver_edge_threshold: int | None = None, cfg: DedupConfig = DEFAULT,
@@ -166,8 +189,6 @@ def connected_components(
     skips the gate aggregate here entirely. Over-estimates are safe (the
     gate is conservative); the routing never changes results."""
     spark = edges.sparkSession
-    if driver_edge_threshold is None:
-        driver_edge_threshold = cfg.cc_driver_edge_threshold
     raw = edges.select(F.col("src").cast("string"), F.col("dst").cast("string")).where(
         F.col("src") != F.col("dst")
     )
@@ -179,7 +200,7 @@ def connected_components(
     # (same fixpoint), and at 1M/local[32] that distinct was ~2s of pure
     # overhead.
     prev = (pre_gate[0], 0, pre_gate[1]) if pre_gate is not None else _checksum(raw)
-    if 0 < prev[0] <= driver_edge_threshold and prev[2] <= cfg.cc_driver_max_bytes:
+    if cc_route(prev[0], prev[2], cfg, driver_edge_threshold)["route"] == "driver":
         roots, roots_nbytes = _driver_union_find(raw)
         # join-back: the roots side holds only edge-touched vertices —
         # broadcast it so the big vertex table never shuffles; singletons

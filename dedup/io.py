@@ -19,7 +19,10 @@ the two re-runs the stage idempotently (mode=overwrite).
 
 Row counts ride the write job itself as an `Observation` — no second pass
 over the data (the reference's repeated-count() inefficiency, SURVEY.md §3.1)
-and no driver-side parquet-footer reads (which only worked on local disk)."""
+and no driver-side parquet-footer reads (which only worked on local disk).
+The manifest also records the written DataFrame's schema (`schema`, Spark's
+JSON form), so reading a committed stage back hands the reader the schema
+instead of launching a footer-merging inference job per stage read."""
 
 from __future__ import annotations
 
@@ -30,6 +33,7 @@ import threading
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .fs import get_fs, read_json, write_json_atomic
 
@@ -104,7 +108,15 @@ class Warehouse:
         return False
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self._dir(stage))
+        """The committed stage as a DataFrame, read with the schema its
+        manifest recorded: no schema-inference job (a one-task footer merge
+        per read). Parquet readers make every field nullable either way, so
+        the result matches an inferred read. A manifest without `schema`
+        (written before the field existed) or no manifest at all falls back
+        to inference."""
+        schema = (self.manifest(stage) or {}).get("schema")
+        reader = spark.read if schema is None else spark.read.schema(StructType.fromJson(schema))
+        return reader.parquet(self._dir(stage))
 
     def write(
         self,
@@ -160,6 +172,7 @@ class Warehouse:
             "wall_ms": wall_ms + exec_ms,  # build (incl. eager actions) + execution
             "exec_ms": exec_ms,
             "committed_at": int(time.time() * 1000),
+            "schema": df.schema.jsonValue(),
             # the stage's actual input stages: invalidate_after walks this
             # DAG instead of guessing dependents from commit order, which
             # the concurrent tail makes racy (an independent stage that

@@ -39,7 +39,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import lsh, verify
-from .components import connected_components
+from .components import cc_route, connected_components
 from .config import DedupConfig, DEFAULT
 from .io import Warehouse
 
@@ -224,13 +224,14 @@ def member_scores(assignments: DataFrame, pairs: DataFrame) -> DataFrame:
                            a cluster gets 0.0; every member of an all-exact
                            cluster, and every singleton, gets 1.0)
 
-    Shapes: per-pair max -> endpoint-union -> groupBy(member) ->
-    groupBy(cluster) max -> joins on (image_id, cluster_id) —
-    partial-aggregated and AQE-planned, no windows, no per-row Python."""
+    Shapes: per-pair max -> both endpoints of each pair as rows
+    (explode(array(id_a, id_b)), so the per-pair aggregate runs once, not
+    once per endpoint) -> groupBy(member) -> groupBy(cluster) max -> joins
+    on (image_id, cluster_id) — partial-aggregated and AQE-planned, no
+    windows, no per-row Python."""
     uniq = pairs.groupBy("id_a", "id_b").agg(F.max("score").alias("score"))
-    d = (1 - F.col("score")).alias("d")
-    ends = uniq.select(F.col("id_a").alias("image_id"), d).unionByName(
-        uniq.select(F.col("id_b").alias("image_id"), d)
+    ends = uniq.select(
+        F.explode(F.array("id_a", "id_b")).alias("image_id"), (1 - F.col("score")).alias("d")
     )
     md = ends.groupBy("image_id").agg(F.avg("d").alias("m"))
     j = assignments.join(md, "image_id", "left").na.fill({"m": 0.0})
@@ -247,6 +248,67 @@ def member_scores(assignments: DataFrame, pairs: DataFrame) -> DataFrame:
             )
             + F.lit(0.0)
         ).alias("cluster_probability"),
+    )
+
+
+def cluster_metrics(
+    assignments: DataFrame, pairs: DataFrame, scored: DataFrame, jaccard_threshold: float
+) -> DataFrame:
+    """metrics stage body: per-cluster size/score rollup PLUS the reference's
+    cluster-quality distance columns (eridu/etl/analyze.py:60-67,120-157):
+
+      intra_mean_dist  mean (1 - score) over within-cluster pairs
+      rep_mean_dist    mean (1 - score) over pairs touching the cluster root
+                       (the distance-to-centroid analog: the root IS the
+                       cluster's representative); NULL when no pair touches
+                       it
+      inter_mean_dist  mean (1 - exact Jaccard) over the hash-sampled LSH
+                       near-misses (`scored` rows below the threshold) across
+                       cluster boundaries — the margin to the nearest other
+                       clusters, priced at sampling time inside the fused
+                       band join. A cross-cluster near-miss counts in BOTH
+                       endpoint clusters.
+
+    All three are relational rollups over already-committed stages: no new
+    verify pass. rep_mean_dist is a conditional average inside the
+    per-cluster pair aggregate, and each cross-cluster near-miss emits its
+    two clusters with explode(array(...)), so every input is joined and
+    aggregated once. groupBy-then-join throughout, no windows (the
+    exact_member_edges skew contract)."""
+    asg_a = assignments.withColumnRenamed("image_id", "id_a")
+    pa = pairs.join(asg_a, "id_a")
+    touches_root = (F.col("id_a") == F.col("cluster_id")) | (F.col("id_b") == F.col("cluster_id"))
+    per_pair = pa.groupBy("cluster_id").agg(
+        F.avg("score").alias("avg_score"),
+        F.min("score").alias("min_score"),
+        F.round(1 - F.avg("score"), 4).alias("intra_mean_dist"),
+        F.sum(F.when(F.col("match_type") == "exact", 1).otherwise(0)).alias("n_exact"),
+        F.sum(F.when(F.col("match_type") == "minhash", 1).otherwise(0)).alias("n_minhash"),
+        F.sum(F.when(F.col("match_type") == "simhash", 1).otherwise(0)).alias("n_simhash"),
+        F.sum(F.when(F.col("match_type") == "substring", 1).otherwise(0)).alias("n_substring"),
+        F.round(1 - F.avg(F.when(touches_root, F.col("score"))), 4).alias("rep_mean_dist"),
+    )
+    # near-misses were hash-sampled and scored INSIDE the fused band join
+    # (cfg.metrics_inter_sample_mod); verified rows become same-cluster
+    # edges, so the below-threshold remainder is exactly the cross-cluster
+    # margin pool. distinct: cross-group band collisions of the same
+    # sampled pair
+    near = scored.where(F.col("score") < jaccard_threshold).distinct()
+    cross = (
+        near.join(asg_a, "id_a")
+        .join(assignments.withColumnsRenamed({"image_id": "id_b", "cluster_id": "cb"}), "id_b")
+        .where(F.col("cluster_id") != F.col("cb"))
+    )
+    inter = (
+        cross.select(F.explode(F.array("cluster_id", "cb")).alias("cluster_id"), "score")
+        .groupBy("cluster_id")
+        .agg(F.round(1 - F.avg("score"), 4).alias("inter_mean_dist"))
+    )
+    sizes = assignments.groupBy("cluster_id").agg(F.count("*").alias("size"))
+    return (
+        sizes.join(per_pair, "cluster_id", "left")
+        .join(inter, "cluster_id", "left")
+        .na.fill({"n_exact": 0, "n_minhash": 0, "n_simhash": 0, "n_substring": 0})
     )
 
 
@@ -312,8 +374,6 @@ class Pipeline:
         # compare to the stored column — BASELINE.json:input_hint). sha2 is
         # JVM-side; decode/pHash is numpy inside mapInPandas (Arrow batches,
         # no per-row Python at the Spark layer). Raises if any row fails.
-        fid_obs: list = []
-
         def build_keys() -> DataFrame:
             with_sha = images.withColumn("sha", F.sha2(F.col("bytes"), 256))
             if not check_fidelity:
@@ -322,7 +382,6 @@ class Pipeline:
                     F.lit(True).alias("decode_ok"), F.lit(True).alias("phash_ok"),
                 )
             import pandas as pd
-            from pyspark.sql import Observation
 
             from . import imaging
 
@@ -347,27 +406,27 @@ class Pipeline:
                         }
                     )
 
-            out = with_sha.mapInPandas(
+            return with_sha.mapInPandas(
                 check,
                 "image_id string, sha string, caption string, phash long, "
                 "decode_ok boolean, phash_ok boolean",
             )
-            # fidelity failures are counted via observe() ON the stage-write
-            # job itself — no second pass over the table (the r02 per-stage
-            # constant-overhead finding): the metric rides the write action
-            obs = Observation("fidelity")
-            fid_obs.append(obs)
-            return out.observe(
-                obs,
-                F.sum((~F.col("decode_ok") | ~F.col("phash_ok")).cast("int")).alias("bad"),
-            )
 
-        keys = self._stage(spark, "keys", build_keys, deps=())
+        # fidelity failures are counted ON the stage-write job itself — no
+        # second pass over the table (the r02 per-stage constant-overhead
+        # finding) — and land in the manifest, so a resumed run reads the
+        # count instead of re-scanning
+        keys = self._stage(
+            spark, "keys", build_keys, deps=(),
+            observe_cols={"bad_rows": F.coalesce(
+                F.sum((~F.col("decode_ok") | ~F.col("phash_ok")).cast("int")), F.lit(0)
+            )},
+        )
         if check_fidelity:
-            if fid_obs:
-                bad = fid_obs[0].get["bad"] or 0  # came free with the write
-            else:
-                # resumed run: the committed slim table re-checks cheaply
+            bad = (self.wh.manifest("keys").get("observed") or {}).get("bad_rows")
+            if bad is None:
+                # a keys manifest from before the observation: re-check the
+                # committed slim table
                 bad = keys.where(~F.col("decode_ok") | ~F.col("phash_ok")).count()
             if bad:
                 raise ValueError(f"{bad} rows failed the per-row fidelity invariant")
@@ -659,83 +718,29 @@ class Pipeline:
             # pairs rows always have id_a < id_b, so the src!=dst filter
             # drops nothing: the committed count/bytes ARE the gate values
             gate = (pairs_man["row_count"], pairs_man["observed"]["edge_bytes_est"])
-        assignments = self._stage(
-            spark, "assignments",
-            lambda: connected_components(
+
+        def build_assignments():
+            asg = connected_components(
                 pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
                 keys.select("image_id"),
                 cfg=cfg,
                 pre_gate=gate,
-            ),
-            deps=("pairs", "keys"),
-        )
+            )
+            # the CC route and the gate values behind it, as a manifest
+            # field (unknown here only for a pairs manifest from before the
+            # gate observation: connected_components then gates itself)
+            return asg, ({"cc": cc_route(*gate, cfg)} if gate is not None else None)
+
+        assignments = self._stage(spark, "assignments", build_assignments, deps=("pairs", "keys"))
 
         # ---- stage: per-cluster metrics ------------------------------------
-        # Size/score rollup PLUS the reference's cluster-quality distance
-        # columns (/root/reference/eridu/etl/analyze.py:60-67,120-157):
-        #   intra_mean_dist  mean (1 - score) over within-cluster pairs
-        #   rep_mean_dist    mean (1 - score) over pairs touching the cluster
-        #                    root (the distance-to-centroid analog: the root
-        #                    IS the cluster's representative)
-        #   inter_mean_dist  mean (1 - exact Jaccard) over the hash-sampled
-        #                    LSH near-misses (scored_minhash rows below the
-        #                    threshold) across cluster boundaries — the
-        #                    margin to the nearest other clusters, priced at
-        #                    sampling time inside the fused band join. All
-        #                    three are relational rollups over
-        #                    already-committed stages: no new verify pass.
-        def build_metrics() -> DataFrame:
-            asg_a = assignments.withColumnsRenamed({"image_id": "id_a", "cluster_id": "cluster_id"})
-            pa = pairs.join(asg_a, "id_a")
-            per_pair = pa.groupBy("cluster_id").agg(
-                F.avg("score").alias("avg_score"),
-                F.min("score").alias("min_score"),
-                F.round(1 - F.avg("score"), 4).alias("intra_mean_dist"),
-                F.sum(F.when(F.col("match_type") == "exact", 1).otherwise(0)).alias("n_exact"),
-                F.sum(F.when(F.col("match_type") == "minhash", 1).otherwise(0)).alias("n_minhash"),
-                F.sum(F.when(F.col("match_type") == "simhash", 1).otherwise(0)).alias("n_simhash"),
-                F.sum(F.when(F.col("match_type") == "substring", 1).otherwise(0)).alias("n_substring"),
-            )
-            rep = (
-                pa.where((F.col("id_a") == F.col("cluster_id")) | (F.col("id_b") == F.col("cluster_id")))
-                .groupBy("cluster_id")
-                .agg(F.round(1 - F.avg("score"), 4).alias("rep_mean_dist"))
-            )
-            # near-misses were hash-sampled and scored INSIDE the fused band
-            # join (cfg.metrics_inter_sample_mod); verified rows become
-            # same-cluster edges, so the below-threshold remainder is
-            # exactly the cross-cluster margin pool
-            # distinct: cross-group band collisions of the same sampled pair
-            near = scored.where(F.col("score") < cfg.jaccard_threshold).distinct()
-            cross = (
-                near.join(asg_a.select("id_a", "cluster_id"), "id_a")
-                .join(
-                    assignments.withColumnsRenamed({"image_id": "id_b", "cluster_id": "cb"}),
-                    "id_b",
-                )
-                .where(F.col("cluster_id") != F.col("cb"))
-            )
-            # each cross-cluster near-miss contributes to BOTH endpoint clusters
-            inter = (
-                cross.select("cluster_id", "score")
-                .unionByName(cross.select(F.col("cb").alias("cluster_id"), "score"))
-                .groupBy("cluster_id")
-                .agg(F.round(1 - F.avg("score"), 4).alias("inter_mean_dist"))
-            )
-            sizes = assignments.groupBy("cluster_id").agg(F.count("*").alias("size"))
-            return (
-                sizes.join(per_pair, "cluster_id", "left")
-                .join(rep, "cluster_id", "left")
-                .join(inter, "cluster_id", "left")
-                .na.fill({"n_exact": 0, "n_minhash": 0, "n_simhash": 0, "n_substring": 0})
-            )
-
         # metrics and member_scores both consume (assignments, pairs) but not
         # each other — overlap them the same way as the post-keys fan-out
         t_metrics = _spawn(
             "metrics",
             lambda: self._stage(
-                spark, "metrics", build_metrics,
+                spark, "metrics",
+                lambda: cluster_metrics(assignments, pairs, scored, cfg.jaccard_threshold),
                 deps=("assignments", "pairs", *group_names),  # `scored` view
             ),
         )

@@ -1334,10 +1334,10 @@ def q43(spark, sf):
     probes = e.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("qe")
     )
-    # n_probes=5 is an upper bound BY CONSTRUCTION (vec_id < 5): the guard
-    # only multiplies it against the corpus count, so the bound skips the
+    # 5 is an upper bound BY CONSTRUCTION (vec_id < 5): the guard only
+    # multiplies it against the corpus count, so the bound skips the
     # probe-side count() job (a filtered scan) without loosening the guard
-    return batch_topk(e, probes, k=10, n_probes=5)
+    return batch_topk(e, probes, k=10, n_probes_max=5)
 
 
 @q(

@@ -27,8 +27,9 @@ def _warm_session(spark: SparkSession, cores: int) -> None:
     of `cores` daemon-forked workers imports pandas/numpy/pyarrow on its
     first Arrow UDF task). Measured on the round-6 host: the first query of
     a session (a 600k-row groupBy) ran 4.98s cold vs 0.98s after this
-    warmup, and the first Arrow-UDF query dropped 6.3s -> 4.0s
-    (tools/profile_warmup.py). None of this touches any input table or
+    warmup, and the first Arrow-UDF query dropped 6.3s -> 4.0s (the
+    session's own cost is `session.get_spark_s` in `perfbench/run.py
+    --trace 1`). None of this touches any input table or
     caches any query result — it runs on a throwaway 10k-row range written
     to a temp file and deleted — so every bench/oracle invocation still
     computes entirely from its parquet inputs; what moves out of the timed

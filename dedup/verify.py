@@ -191,7 +191,8 @@ def _containment_hits(
     container can reach `sa_min_container_len`, the suffix-array branch is
     omitted from the PLAN — the r06 profile measured ~1.3s of guaranteed-
     empty dropDuplicates/applyInPandas/union stages per call on short-text
-    corpora (tools/profile_substr.py). None (the default) keeps both
+    corpora (per-stage layers: `perfbench/run.py --trace 1`, layer
+    verify.edges_substring). None (the default) keeps both
     branches: correct at any length, which is the only safe assumption at
     scale."""
 
@@ -214,7 +215,7 @@ def _containment_hits(
     # is actually under-parallel (a single small parquet file): the
     # unconditional repartition(2*dp) of an already well-partitioned input
     # cost ~2.5s of pure shuffle/stage overhead per call in the r06 profile
-    # (tools/profile_substr.py: short-branch 3.7s -> 1.3s without it). AQE's
+    # (short-branch 3.7s -> 1.3s without it). AQE's
     # byte-based coalescing is still kept away from the UDF stage by the
     # repartition when it IS needed (small files carry tiny byte sizes that
     # AQE would serialize onto one task).

@@ -115,3 +115,25 @@ def test_cc_byte_gate_forces_distributed(spark, monkeypatch):
         for r in components.connected_components(e, v).collect()
     }
     assert calls and res2 == res
+
+
+def test_cc_route_gate_values():
+    """cc_route is the gate connected_components applies: driver only for
+    a non-empty edge set within both bounds; the explicit row threshold
+    overrides the config's."""
+    import dataclasses
+
+    from dedup.components import cc_route
+    from dedup.config import DEFAULT
+
+    r = cc_route(10, 1000)
+    assert r == {
+        "route": "driver", "edges": 10, "edge_bytes_est": 1000,
+        "driver_edge_threshold": DEFAULT.cc_driver_edge_threshold,
+        "driver_max_bytes": DEFAULT.cc_driver_max_bytes,
+    }
+    assert cc_route(0, 0)["route"] == "star"
+    assert cc_route(10, 1000, driver_edge_threshold=9)["route"] == "star"
+    assert cc_route(10, 1000, driver_edge_threshold=10)["route"] == "driver"
+    tiny = dataclasses.replace(DEFAULT, cc_driver_max_bytes=999)
+    assert cc_route(10, 1000, tiny)["route"] == "star"

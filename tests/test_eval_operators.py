@@ -202,3 +202,89 @@ def test_export_error_categories(spark, tmp_path):
         for r in back.groupBy("error_category").agg(F.count("*").alias("n")).collect()
     }
     assert got == rollup
+
+
+def test_rollups_match_brute_force(spark):
+    """metrics and member_scores against a pandas brute force over
+    hand-built stage rows, covering: a singleton (z); a cluster with no
+    root-touching pair (d: rep_mean_dist NULL); cross-cluster near-misses
+    counted in both endpoint clusters' inter_mean_dist (c-e, b-g, f-z; c-e
+    sampled by two band groups, counted once); a pair found by two tiers
+    (a-b) counted once, at its best score, in member_scores."""
+    import math
+
+    import pandas as pd
+
+    from dedup.pipeline import cluster_metrics, member_scores
+
+    thr = 0.6
+    asg_rows = [("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"), ("f", "d"),
+                ("g", "g"), ("h", "g"), ("z", "z")]
+    pair_rows = [
+        ("a", "b", "exact", 1.0), ("a", "b", "minhash", 0.8), ("b", "c", "minhash", 0.7),
+        ("a", "c", "substring", 0.9), ("e", "f", "substring", 0.85), ("e", "f", "simhash", 0.9),
+        ("g", "h", "simhash", 0.95),  # no pair touches root d
+    ]
+    scored_rows = [
+        ("a", "b", 0.8),  # verified: not a near-miss
+        ("c", "e", 0.3), ("c", "e", 0.3),  # one near-miss, two band groups
+        ("b", "g", 0.45), ("a", "c", 0.4),  # cross / same-cluster near-miss
+        ("f", "z", 0.2),  # cross-cluster near-miss touching the singleton
+    ]
+    asg = spark.createDataFrame(asg_rows, "image_id string, cluster_id string")
+    pairs = spark.createDataFrame(pair_rows, "id_a string, id_b string, match_type string, score double")
+    scored = spark.createDataFrame(scored_rows, "id_a string, id_b string, score double")
+
+    A = pd.DataFrame(asg_rows, columns=["image_id", "cluster_id"])
+    P = pd.DataFrame(pair_rows, columns=["id_a", "id_b", "match_type", "score"])
+    S = pd.DataFrame(scored_rows, columns=["id_a", "id_b", "score"])
+    cl = dict(asg_rows)
+    P["cluster_id"] = P["id_a"].map(cl)
+    near = S[S["score"] < thr].drop_duplicates()
+    cross = [(cl[a], cl[b], s) for a, b, s in near.itertuples(index=False) if cl[a] != cl[b]]
+
+    want = {}
+    for cid, members in A.groupby("cluster_id")["image_id"]:
+        cp = P[P["cluster_id"] == cid]
+        root = cp[(cp["id_a"] == cid) | (cp["id_b"] == cid)]
+        inter = [s for x, y, s in cross if cid in (x, y)]
+        want[cid] = {
+            "size": len(members),
+            "avg_score": cp["score"].mean() if len(cp) else None,
+            "min_score": cp["score"].min() if len(cp) else None,
+            "intra_mean_dist": 1 - cp["score"].mean() if len(cp) else None,
+            **{f"n_{t}": int((cp["match_type"] == t).sum())
+               for t in ("exact", "minhash", "simhash", "substring")},
+            "rep_mean_dist": 1 - root["score"].mean() if len(root) else None,
+            "inter_mean_dist": 1 - sum(inter) / len(inter) if inter else None,
+        }
+    got = {r["cluster_id"]: r.asDict() for r in cluster_metrics(asg, pairs, scored, thr).collect()}
+    assert set(got) == set(want)
+    for cid, w in want.items():
+        for k, v in w.items():
+            g = got[cid][k]
+            if v is None:
+                assert g is None, (cid, k, g)
+            else:
+                assert g is not None and math.isclose(g, v, abs_tol=5e-5), (cid, k, g, v)
+    assert got["z"]["size"] == 1 and got["z"]["intra_mean_dist"] is None
+    assert got["d"]["rep_mean_dist"] is None and got["d"]["intra_mean_dist"] is not None
+    assert got["a"]["inter_mean_dist"] == round(1 - (0.3 + 0.45) / 2, 4)
+    assert got["d"]["inter_mean_dist"] == round(1 - (0.3 + 0.2) / 2, 4)
+
+    best = P.groupby(["id_a", "id_b"])["score"].max().reset_index()
+    dist: dict = {}
+    for a, b, s in best.itertuples(index=False):
+        for m in (a, b):
+            dist.setdefault(m, []).append(1 - s)
+    m = {i: (sum(dist[i]) / len(dist[i]) if i in dist else 0.0) for i in cl}
+    mx = {c: max(m[i] for i in cl if cl[i] == c) for c in set(cl.values())}
+    ms = {r["image_id"]: r for r in member_scores(asg, pairs).collect()}
+    assert set(ms) == set(cl)
+    for i, c in cl.items():
+        assert ms[i]["cluster_id"] == c
+        assert math.isclose(ms[i]["outlier_score"], m[i], abs_tol=5e-5), (i, ms[i], m[i])
+        p = 1 - m[i] / mx[c] if mx[c] > 0 else 1.0
+        assert math.isclose(ms[i]["cluster_probability"], p, abs_tol=5e-5), (i, ms[i], p)
+    assert ms["a"]["outlier_score"] == 0.05  # (0 for a-b at its exact 1.0 + 0.1) / 2
+    assert ms["z"]["outlier_score"] == 0.0 and ms["z"]["cluster_probability"] == 1.0
