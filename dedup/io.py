@@ -53,9 +53,10 @@ class Warehouse:
         self._fs = None
         self._obs_seq = 0
         self._warned_stale: set[str] = set()
-        # independent stages commit concurrently (pipeline tail overlap):
-        # manifests are per-stage files, but the shared lineage journal and
-        # the observation counter need serialization
+        # side stages commit concurrently with the critical chain (the
+        # pipeline's scheduler): manifests are per-stage files, but the
+        # shared lineage journal and the observation counter need
+        # serialization
         self._lock = threading.Lock()
 
     @property
@@ -138,10 +139,10 @@ class Warehouse:
 
         extra values may be CALLABLES: they are resolved after the parquet
         write completes, just before the manifest is serialized — a caller
-        can launch a side-statistics job on its own thread at build time
-        and pass a join-and-return thunk, overlapping the stats job with
-        the write instead of serializing ~1s ahead of it (r06: the LSH
-        band-group skew stats)."""
+        can submit a side-statistics job as a future at build time and pass
+        its `result`, overlapping the stats job with the write instead of
+        serializing ~1s ahead of it (r06: the LSH band-group skew stats). A
+        failed future raises here, and the stage commits no manifest."""
         path = self._dir(stage)
         # the row count is observed ON the write job — zero extra passes,
         # works on any filesystem (names are unique per (warehouse, write))
@@ -175,7 +176,7 @@ class Warehouse:
             "schema": df.schema.jsonValue(),
             # the stage's actual input stages: invalidate_after walks this
             # DAG instead of guessing dependents from commit order, which
-            # the concurrent tail makes racy (an independent stage that
+            # concurrent side stages make racy (an independent stage that
             # happened to commit later would be dropped and recomputed).
             # None = caller didn't record deps (ad-hoc writers): the field
             # stays absent and invalidation falls back to the time cut;
@@ -234,7 +235,7 @@ class Warehouse:
         With no explicit list, the cut walks the RECORDED dependency DAG
         (each manifest's "deps" names its actual input stages): drop `stage`
         plus its transitive dependents, and nothing else. Commit ORDER is not
-        a safe proxy in either direction — the concurrent tail makes the
+        a safe proxy in either direction — concurrent side stages make the
         order of independent stages racy (an independent stage that happened
         to commit later would be dropped and recomputed: wasteful, and flaky
         for resume tests), and journal first-seen order spans regroupings

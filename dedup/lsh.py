@@ -48,21 +48,13 @@ def band_keys_expr(cfg: DedupConfig = DEFAULT) -> str:
     return f"transform(sequence(0, {b - 1}), b -> xxhash64(b, slice(minhash, b * {r} + 1, {r})))"
 
 
-def minhash_candidates(
-    sigs: DataFrame, id_col: str = "rep_id", cfg: DedupConfig = DEFAULT,
-    band_lo: int = 0, band_hi: int | None = None, persist: bool = True,
+def _banded(
+    sigs: DataFrame, id_col: str, cfg: DedupConfig, band_lo: int, band_hi: int | None,
+    persist: bool, payload: tuple[str, ...] = (),
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(candidate pairs, bucket skew stats, persisted banded handle) from a
-    signature table.
-
-    Pairs are generated by a self-join on (band, band_hash) with id_a < id_b —
-    the salted, skew-aware shuffle of the north rule: the shuffle key is the
-    band bucket, AQE skew-join splits oversized partitions, and bucket sizes
-    are accounted explicitly.
-
-    [band_lo, band_hi] restricts to a band range so the pipeline can commit
-    (and resume) the LSH pass one band group at a time — the north rule's
-    "resumes mid-band".
+    """(banded rows (id, *payload, band, bh), bucket skew stats, persisted
+    handle) for bands [band_lo, band_hi] of a signature table — the shared
+    front of minhash_candidates and minhash_scored_band.
 
     The banded table is persisted (consumed by the skew-stats action AND both
     self-join sides) and returned so the CALLER can `unpersist()` it once the
@@ -75,6 +67,7 @@ def minhash_candidates(
     band_hi = cfg.lsh_bands - 1 if band_hi is None else band_hi
     banded = sigs.select(
         F.col(id_col).alias("id"),
+        *payload,
         F.posexplode(F.expr(band_keys_expr(cfg))).alias("band", "bh"),
     ).where(
         (F.col("band") >= band_lo) & (F.col("band") <= band_hi)
@@ -98,6 +91,25 @@ def minhash_candidates(
             .where(F.col("bucket_size") <= cfg.bucket_cap)
             .drop("bucket_size")
         )
+    return banded, skew, persisted
+
+
+def minhash_candidates(
+    sigs: DataFrame, id_col: str = "rep_id", cfg: DedupConfig = DEFAULT,
+    band_lo: int = 0, band_hi: int | None = None, persist: bool = True,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(candidate pairs, bucket skew stats, persisted banded handle) from a
+    signature table.
+
+    Pairs are generated by a self-join on (band, band_hash) with id_a < id_b —
+    the salted, skew-aware shuffle of the north rule: the shuffle key is the
+    band bucket, AQE skew-join splits oversized partitions, and bucket sizes
+    are accounted explicitly.
+
+    [band_lo, band_hi] restricts to a band range so the pipeline can commit
+    (and resume) the LSH pass one band group at a time — the north rule's
+    "resumes mid-band". `persist` and the handle: see _banded."""
+    banded, skew, persisted = _banded(sigs, id_col, cfg, band_lo, band_hi, persist)
     # slim rows (id, band, bh) with no payload -> shuffle-hash beats SMJ's
     # two sorts (same evidence as phash_candidates; the FUSED band join in
     # minhash_scored_band stays SMJ because its rows carry shingle arrays)
@@ -133,36 +145,11 @@ def minhash_scored_band(
     Returns (scored pairs(id_a, id_b, score), skew stats, banded handle) —
     unpersist the handle after the output is materialized. The unfused
     two-step path (minhash_candidates + verify.verify_jaccard) remains for
-    candidate inspection (q26) and ad-hoc verification (q27).
-
-    persist=False (see minhash_candidates): skip the banded cache when the
-    input signatures are a committed parquet stage — the explode recompute
-    per consumer is cheaper than building and re-reading a cached columnar
-    copy of the shingle arrays; forced back on under cfg.hard_cap."""
-    band_hi = cfg.lsh_bands - 1 if band_hi is None else band_hi
-    banded = shingled_sigs.select(
-        F.col(id_col).alias("id"),
-        F.col("shingles"),
-        F.posexplode(F.expr(band_keys_expr(cfg))).alias("band", "bh"),
-    ).where(
-        (F.col("band") >= band_lo) & (F.col("band") <= band_hi)
+    candidate inspection (q26) and ad-hoc verification (q27). `persist` and
+    the handle: see _banded."""
+    banded, skew, persisted = _banded(
+        shingled_sigs, id_col, cfg, band_lo, band_hi, persist, payload=("shingles",)
     )
-    if persist or cfg.hard_cap:
-        banded = banded.persist()  # skew-stats action AND both self-join sides
-    persisted = banded  # the unpersist handle (see minhash_candidates)
-    buckets = banded.groupBy("band", "bh").agg(F.count("*").alias("bucket_size"))
-    skew = buckets.agg(
-        F.count("*").alias("n_buckets"),
-        F.max("bucket_size").alias("max_bucket"),
-        F.avg("bucket_size").alias("avg_bucket"),
-        F.sum(F.when(F.col("bucket_size") > cfg.bucket_cap, 1).otherwise(0)).alias("n_over_cap"),
-    )
-    if cfg.hard_cap:
-        banded = (
-            banded.join(buckets, ["band", "bh"])
-            .where(F.col("bucket_size") <= cfg.bucket_cap)
-            .drop("bucket_size")
-        )
     a, b = banded.alias("a"), banded.alias("b")
     inter = F.size(F.array_intersect(F.col("a.shingles"), F.col("b.shingles")))
     score = (

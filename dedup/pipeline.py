@@ -1,8 +1,9 @@
 """Stage orchestration: images table -> pairs + assignments + metrics.
 
-Stage graph (SURVEY.md §3.4), each stage a pure DataFrame transform committed
-to the warehouse with a manifest (resume = skip stages whose manifest matches
-the config hash — BASELINE.json "resumes mid-band"):
+Stage graph (SURVEY.md §3.4), declared in Pipeline.run as one Stage list: each
+stage a pure DataFrame transform committed to the warehouse with a manifest
+(resume = skip stages whose manifest matches the config hash — BASELINE.json
+"resumes mid-band"):
 
   keys            the ONLY bytes scan: slim key projection (sha2, caption,
                   phash) + per-row fidelity invariant (decode, pHash
@@ -34,9 +35,15 @@ fuzzy paths replace /root/reference/eridu/train/utils.py:153-235."""
 
 from __future__ import annotations
 
+import functools
 import time
+import uuid
+from concurrent.futures import FIRST_EXCEPTION, Future, ThreadPoolExecutor, wait
+from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from . import lsh, verify
 from .components import cc_route, connected_components
@@ -312,6 +319,122 @@ def cluster_metrics(
     )
 
 
+@dataclass(frozen=True)
+class Stage:
+    """One declared pipeline stage: its manifest name, the stages it reads
+    (recorded as the manifest's `deps`), and a thunk returning the DataFrame
+    to commit or (DataFrame, manifest extra). `side` stages are off the
+    critical chain and run on the scheduler's thread pool; `kw` carries the
+    stage's other Warehouse.write kwargs (observe_cols, band_lo/band_hi)."""
+
+    name: str
+    deps: tuple
+    build: Callable
+    side: bool = False
+    kw: dict = field(default_factory=dict)
+
+
+class _Scheduler:
+    """Commits one Pipeline.run's declared stages in list order.
+
+    Critical-chain stages commit inline on the calling thread. Side stages
+    (and the band groups' skew-stats jobs) go to one thread pool, each job in
+    the FAIR pool named after its stage (session.py sets
+    spark.scheduler.mode), so they overlap the chain instead of leaving
+    executors idle through its narrow stages (measured at 360k rows: ~23s
+    of per-job constants that core count cannot shrink; on
+    1000 executors the band-group shuffles and the simhash join overlap the
+    same way). The calling thread waits on a side stage only when a later
+    stage lists it as a dep, and on the rest at the end. Manifests are
+    per-stage, so resume semantics do not depend on the schedule; the
+    lineage journal's commit order reflects completion order.
+
+    Every submitted job inherits the caller's local properties (a caller's
+    own job group reaches it) and carries this run's job tag, so the abort
+    path cancels this run's jobs and no other pipeline's on a shared
+    session."""
+
+    def __init__(self, wh: Warehouse, spark: SparkSession):
+        self.wh, self.spark, self.sc = wh, spark, spark.sparkContext
+        self.out: dict[str, DataFrame] = {}  # stage name -> committed DataFrame
+        self.tag = f"dedup-run-{uuid.uuid4().hex}"
+        self.futures: dict[str, Future] = {}
+        self.caches: dict[str, list[DataFrame]] = {}  # stage -> held cache handles
+        # more workers than side jobs ever live at once: nothing queues
+        self.pool = ThreadPoolExecutor(max_workers=8, thread_name_prefix="dedup-stage")
+
+    def submit(self, key: str, pool: str, fn: Callable) -> Future:
+        def job():
+            self.sc.setLocalProperty("spark.scheduler.pool", pool)
+            self.sc.addJobTag(self.tag)
+            self.sc.setInterruptOnCancel(True)
+            return fn()
+
+        # wrapped per job: the caller's properties are copied at wrap time,
+        # and each job then edits its own copy
+        self.futures[key] = self.pool.submit(inheritable_thread_target(self.spark)(job))
+        return self.futures[key]
+
+    def hold(self, stage: str, df: DataFrame) -> DataFrame:
+        """Register a cache handle: unpersisted once `stage` commits (its
+        write job still reads the cache), or by the abort path."""
+        self.caches.setdefault(stage, []).append(df)
+        return df
+
+    def commit(self, st: Stage) -> DataFrame:
+        """Build and commit `st`, or read it back on resume."""
+        if not self.wh.is_complete(st.name):
+            t0 = time.time()
+            out = st.build()
+            df, extra = out if isinstance(out, tuple) else (out, None)
+            self.wh.write(
+                df, st.name, wall_ms=int((time.time() - t0) * 1000), extra=extra,
+                deps=list(st.deps), **st.kw,
+            )
+            for c in self.caches.pop(st.name, ()):
+                c.unpersist()
+        return self.wh.read(self.spark, st.name)
+
+    def _wait(self, futures) -> None:
+        """Wait on `futures` until one fails, then raise the first failed side
+        job of the run, if any (fail fast: a side stage that died seconds into
+        the run must not wait out the band pass, hours at scale)."""
+        wait(futures, return_when=FIRST_EXCEPTION)
+        for f in self.futures.values():
+            if f.done() and f.exception() is not None:
+                raise f.exception()
+
+    def run(self, stages) -> None:
+        try:
+            for st in stages:
+                side_deps = [d for d in st.deps if d in self.futures]
+                self._wait([self.futures[d] for d in side_deps])
+                self.out.update((d, self.futures[d].result()) for d in side_deps)
+                if st.side:
+                    self.submit(st.name, st.name, lambda st=st: self.commit(st))
+                else:
+                    self.out[st.name] = self.commit(st)
+            self._wait(self.futures.values())
+        except BaseException:
+            # the one abort path: cancel first (waiting alone would block the
+            # failure behind hours-long side jobs at scale), then wait (so no
+            # job keeps running or committing manifests after run() has
+            # raised, racing a retry), then release every held cache. A
+            # cancelled stage commits no manifest and recomputes on the retry.
+            pending = set(self.futures.values())
+            while pending:
+                # again each round: a side stage between two actions submits
+                # its next job after the previous cancel
+                self.sc.cancelJobsWithTag(self.tag)
+                _, pending = wait(pending, timeout=1)
+            for handles in self.caches.values():
+                for c in handles:
+                    c.unpersist()
+            raise
+        finally:
+            self.pool.shutdown()
+
+
 class Pipeline:
     def __init__(
         self, warehouse_root: str, cfg: DedupConfig = DEFAULT, run_id: str = "run0",
@@ -340,24 +463,6 @@ class Pipeline:
         if n_sigs < 2_000_000:
             return 2
         return 4
-
-    # -- stage runner with resume skip ------------------------------------
-    def _stage(self, spark: SparkSession, name: str, build, deps: tuple | None = None, **man_kw) -> DataFrame:
-        # deps default None, NOT (): a future stage whose author forgets to
-        # pass deps must degrade to the warehouse's conservative time-cut
-        # invalidation (None = unrecorded), never be recorded as a root
-        # ([]), which the DAG walk would leave marked complete over rebuilt
-        # inputs — stale reuse. Roots say deps=() explicitly.
-        if self.wh.is_complete(name):
-            return self.wh.read(spark, name)
-        t0 = time.time()
-        out = build()
-        df, extra = out if isinstance(out, tuple) else (out, None)
-        self.wh.write(
-            df, name, wall_ms=int((time.time() - t0) * 1000), extra=extra,
-            deps=None if deps is None else list(deps), **man_kw,
-        )
-        return self.wh.read(spark, name)
 
     def run(
         self, spark: SparkSession, images: DataFrame, check_fidelity: bool = True
@@ -416,12 +521,13 @@ class Pipeline:
         # second pass over the table (the r02 per-stage constant-overhead
         # finding) — and land in the manifest, so a resumed run reads the
         # count instead of re-scanning
-        keys = self._stage(
-            spark, "keys", build_keys, deps=(),
-            observe_cols={"bad_rows": F.coalesce(
+        sched = _Scheduler(self.wh, spark)
+        out = sched.out
+        keys = out["keys"] = sched.commit(Stage("keys", (), build_keys, kw={"observe_cols": {
+            "bad_rows": F.coalesce(
                 F.sum((~F.col("decode_ok") | ~F.col("phash_ok")).cast("int")), F.lit(0)
-            )},
-        )
+            )
+        }}))
         if check_fidelity:
             bad = (self.wh.manifest("keys").get("observed") or {}).get("bad_rows")
             if bad is None:
@@ -431,100 +537,28 @@ class Pipeline:
             if bad:
                 raise ValueError(f"{bad} rows failed the per-row fidelity invariant")
 
-        # ---- concurrent tail: independent stages overlap the band groups --
+        # ---- every later stage, declared in walk order ------------------
         # The stage graph fans out after `keys`: reps and edges_simhash need
-        # only `keys`; edges_substring needs only `signatures`; none of them
-        # depends on the minhash band groups. Running them serially leaves
-        # executors idle through every narrow stage (the r03 judge's 360k
-        # scaling finding: ~23s of per-job constants that core count cannot
-        # shrink). Each independent stage is submitted from its own driver
-        # thread into a FAIR pool (session.py sets spark.scheduler.mode) as
-        # soon as its input stage has committed; all threads are joined
-        # before `pairs` consumes their outputs. Per-stage manifests are
-        # unchanged — resume semantics are identical, commit order in the
-        # lineage journal merely reflects actual completion order. This is
-        # real-cluster utilization, not bench cosmetics: on 1000 executors
-        # the band-group shuffles and the simhash join overlap the same way.
-        import threading
+        # only `keys`, edges_substring only `signatures`, and none of them
+        # depends on the minhash band groups; metrics and member_scores both
+        # consume (assignments, pairs) but not each other. Those five are
+        # side stages; the rest is the critical chain.
+        groups: list[str] = []  # band-group stage names, declared once signatures commits
 
-        results: dict[str, DataFrame] = {}
-        errors: list[BaseException] = []
-
-        def _spawn(name: str, thunk) -> threading.Thread:
-            def tgt():
-                try:
-                    # pinned-thread mode does not inherit local properties:
-                    # each submitting thread names its own FAIR pool, and its
-                    # own job group so the abort path can cancel THIS
-                    # pipeline's tail jobs without touching other users of a
-                    # shared session
-                    spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
-                    spark.sparkContext.setJobGroup(
-                        f"dedup-tail-{name}", f"pipeline tail stage {name}",
-                        interruptOnCancel=True,
-                    )
-                    results[name] = thunk()
-                except BaseException as e:
-                    # first error re-raised on the main thread; every
-                    # failure is surfaced here so secondaries aren't lost
-                    import sys as _sys
-                    import traceback
-
-                    print(f"stage thread {name!r} failed:", file=_sys.stderr)
-                    traceback.print_exc()
-                    errors.append(e)
-
-            t = threading.Thread(target=tgt, name=f"stage-{name}", daemon=True)
-            t.start()
-            return t
-
-        # ---- stage: reps (exact collapse; skew-safe groupBy-min + join) ----
-        # stack the three collapse keys (byte-exact, caption, phash) into
-        # rows; group-min partial-aggregates map-side and the join-back is
-        # AQE-skew-splittable (exact_member_edges docstring has the contract)
-        # corpus size from the committed keys manifest: below the hot-key
-        # threshold the viral-key detection sample runs zero extra jobs
-        n_keys_rows = (self.wh.manifest("keys") or {}).get("row_count")
-        t_reps = _spawn(
-            "reps",
-            lambda: self._stage(
-                spark,
-                "reps",
-                lambda: exact_member_edges(
-                    keys,
-                    cfg.reps_hot_key_rows,
-                    cfg.reps_hot_key_cap,
-                    corpus_rows=n_keys_rows,
-                ),
-                deps=("keys",),
-            ),
-        )
-
-        # ---- stage: simhash (pHash) edges — needs only `keys` -------------
-        def run_simhash_stage() -> DataFrame:
+        def build_simhash() -> DataFrame:
             # persist: the self-join reads uniq_ph twice; without this the
             # groupBy over the keys scan is computed once per join side.
-            # Unpersisted after the stage COMMIT so the write job still hits
-            # the cache. phash_candidates verifies Hamming inline (fused
-            # precision stage).
-            uniq_ph = keys.groupBy("phash").agg(F.min("image_id").alias("rep_id")).persist()
-            try:
-                return self._stage(
-                    spark, "edges_simhash",
-                    lambda: lsh.phash_candidates(uniq_ph, "rep_id", "phash", cfg).select(
-                        "id_a",
-                        "id_b",
-                        F.lit("simhash").alias("match_type"),
-                        (F.lit(1.0) - F.col("hd") / F.lit(64.0)).cast("double").alias("score"),
-                    ),
-                    deps=("keys",),
-                )
-            finally:
-                uniq_ph.unpersist()
+            # phash_candidates verifies Hamming inline (fused precision
+            # stage).
+            uniq_ph = sched.hold("edges_simhash", keys.groupBy("phash").agg(
+                F.min("image_id").alias("rep_id")).persist())
+            return lsh.phash_candidates(uniq_ph, "rep_id", "phash", cfg).select(
+                "id_a",
+                "id_b",
+                F.lit("simhash").alias("match_type"),
+                (F.lit(1.0) - F.col("hd") / F.lit(64.0)).cast("double").alias("score"),
+            )
 
-        t_simhash = _spawn("edges_simhash", run_simhash_stage)
-
-        # ---- stage: signatures over UNIQUE captions ----------------------
         def build_sigs() -> DataFrame:
             # explicit repartition: AQE coalesces the small groupBy output to
             # 1-2 partitions, which would serialize the signature UDFs — the
@@ -537,158 +571,51 @@ class Pipeline:
             uniq = keys.groupBy("caption").agg(F.min("image_id").alias("rep_id")).repartition(dp)
             return lsh.with_shingles(lsh.with_minhash(uniq, "caption", cfg), "caption", cfg)
 
-        sigs = self._stage(
-            spark, "signatures", build_sigs, deps=("keys",),
-            # max caption length rides the write job (zero extra passes):
-            # substring_edges uses it to omit the guaranteed-empty suffix-
-            # array branch when no container can reach the SA threshold
-            observe_cols={
-                "max_caption_len": F.coalesce(
-                    F.max(F.length("caption")), F.lit(0)
-                )
-            },
-        )
+        def build_substring():
+            # pre-deps manifests (resumed warehouses) lack the observation ->
+            # None -> substring_edges keeps both verify branches (always
+            # correct); the manifest records which branch the plan kept
+            sig_man = self.wh.manifest("signatures") or {}
+            max_cap_len = sig_man.get("observed", {}).get("max_caption_len")
+            edges = verify.substring_edges(
+                out["signatures"].select("rep_id", "caption"), "rep_id", "caption", cfg,
+                max_container_len=max_cap_len, approx_rows=sig_man.get("row_count"),
+            )
+            return edges, {"sa_branch": verify.sa_branch(max_cap_len)}
 
-        # ---- stage: substring edges — needs only `signatures` -------------
-        # pre-deps manifests (resumed warehouses) lack the observation ->
-        # None -> substring_edges keeps both verify branches (always correct)
-        sig_man = self.wh.manifest("signatures") or {}
-        max_cap_len = sig_man.get("observed", {}).get("max_caption_len")
-        t_substr = _spawn(
-            "edges_substring",
-            lambda: self._stage(
-                spark, "edges_substring",
-                lambda: verify.substring_edges(
-                    sigs.select("rep_id", "caption"), "rep_id", "caption", cfg,
-                    max_container_len=max_cap_len,
-                    approx_rows=sig_man.get("row_count"),
-                ),
-                deps=("signatures",),
-            ),
-        )
+        def build_scored(name: str, lo: int, hi: int):
+            # persist=False: the signatures stage is committed parquet —
+            # recomputing the slim explode per consumer beats building +
+            # re-reading a cached columnar copy of the shingle arrays (r06
+            # measurement; hard_cap re-enables the cache, held until the
+            # group commits)
+            pairs, skew, banded = lsh.minhash_scored_band(
+                out["signatures"], "rep_id", cfg, lo, hi,
+                sample_mod=cfg.metrics_inter_sample_mod, persist=False,
+            )
+            sched.hold(name, banded)
+            # the skew-stats action is a side job, so it overlaps the stage
+            # write; the manifest writer reads the future after the commit
+            stats = sched.submit(f"{name}:skew", "skew_stats", lambda: {
+                k: (float(v) if v is not None else None)
+                for k, v in skew.collect()[0].asDict().items()
+            })
+            return pairs, {"skew": stats.result}
 
-        # ---- stage: fused LSH + verify, committed per band group ---------
-        # the LSH pass runs (and checkpoints) one band group at a time, each
-        # with its own manifest carrying [band_lo, band_hi] — a job killed in
-        # group k resumes at group k, not at band 0 ("resumes mid-band").
-        # Each group commits SCORED pairs (verified >= threshold, plus a
-        # deterministic hash-sample of rejects for the inter-cluster metric):
-        # the raw candidate set never hits a shuffle, a distinct, or disk.
-        group_dfs = []
-        group_names: list = []  # collected where the stages commit (single source)
-        n_groups = self._resolve_band_groups(self.wh.manifest("signatures")["row_count"])
-        rows_per_group = max(1, cfg.lsh_bands // n_groups)
-        live_caches: list[DataFrame] = []  # banded tables not yet unpersisted
-        try:
-            for g in range(0, cfg.lsh_bands, rows_per_group):
-                lo, hi = g, min(g + rows_per_group - 1, cfg.lsh_bands - 1)
-                group_names.append(f"scored_minhash_b{lo:02d}_{hi:02d}")
+        def scored() -> DataFrame:
+            # manifest-level union of the committed band-group dirs — a
+            # VIEW, not a stage: the distinct (a pair can collide in bands of
+            # two groups, always with the identical score) runs in each
+            # consumer over its FILTERED subset, not as a second full write
+            return functools.reduce(DataFrame.unionByName, [out[g] for g in groups])
 
-                def build_scored(lo=lo, hi=hi):
-                    # persist=False: sigs is the committed signatures stage
-                    # (parquet) — recomputing the slim explode per consumer
-                    # beats building + re-reading a cached columnar copy of
-                    # the shingle arrays (r06 measurement; hard_cap re-enables
-                    # the cache inside minhash_scored_band)
-                    pairs, skew, banded = lsh.minhash_scored_band(
-                        sigs, "rep_id", cfg, lo, hi,
-                        sample_mod=cfg.metrics_inter_sample_mod, persist=False,
-                    )
-                    live_caches.append(banded)
-
-                    # the skew-stats action runs on its OWN thread so it
-                    # overlaps the stage write (FAIR pools); the manifest
-                    # writer resolves the thunk after the parquet commit
-                    holder: dict = {}
-
-                    def collect_stats():
-                        try:
-                            spark.sparkContext.setLocalProperty(
-                                "spark.scheduler.pool", "skew_stats"
-                            )
-                            holder["stats"] = {
-                                k: (float(v) if v is not None else None)
-                                for k, v in skew.collect()[0].asDict().items()
-                            }
-                        except BaseException as e:  # surfaced at join time
-                            holder["err"] = e
-
-                    th = threading.Thread(
-                        target=collect_stats, name=f"skew-b{lo:02d}", daemon=True
-                    )
-                    th.start()
-
-                    def resolve():
-                        th.join()
-                        if "err" in holder:
-                            raise holder["err"]
-                        return holder["stats"]
-
-                    return pairs, {"skew": resolve}
-
-                group_dfs.append(
-                    self._stage(spark, group_names[-1], build_scored,
-                                deps=("signatures",), band_lo=lo, band_hi=hi)
-                )
-                # fail fast: a tail-stage thread that died seconds into the run
-                # must not wait out the whole band pass (hours at scale) before
-                # surfacing at the pairs barrier
-                if errors:
-                    raise errors[0]
-                # the stage write has committed: release this group's banded cache
-                while live_caches:
-                    live_caches.pop().unpersist()
-        except BaseException:
-            # the raise path must not leak OR stall: cancel the tail threads'
-            # job groups first (joining alone would block the failure behind
-            # hours-long tail jobs at scale — the fail-fast promise above),
-            # then join (so no thread keeps submitting jobs or committing
-            # manifests after run() has raised, racing any retry), then
-            # release every banded cache the aborted pass left persisted.
-            # A cancelled thread commits no manifest: its stage recomputes
-            # on the retry.
-            for n in ("reps", "edges_simhash", "edges_substring"):
-                spark.sparkContext.cancelJobGroup(f"dedup-tail-{n}")
-            for t in (t_reps, t_simhash, t_substr):
-                t.join()
-            while live_caches:
-                live_caches.pop().unpersist()
-            raise
-
-        # manifest-level union of the committed band-group dirs — a VIEW, not
-        # a stage: r02 read the groups back, distinct'ed and re-wrote every
-        # scored pair a second time just to dedup cross-group band collisions.
-        # The distinct (a pair can collide in bands of two different groups,
-        # always with the identical score) now runs in each consumer over its
-        # FILTERED subset instead of a second full write.
-        scored = group_dfs[0]
-        for d in group_dfs[1:]:
-            scored = scored.unionByName(d)
-
-        # ---- stage: verified minhash edges (threshold filter + distinct) --
-        edges_mh = self._stage(
-            spark, "edges_minhash",
-            lambda: scored.where(F.col("score") >= cfg.jaccard_threshold)
-            .distinct()
-            .select("id_a", "id_b", F.lit("minhash").alias("match_type"), "score"),
-            deps=group_names,
-            band_lo=0, band_hi=cfg.lsh_bands - 1,
-        )
-
-        # ---- join the concurrent tail before `pairs` consumes it ----------
-        for t in (t_reps, t_simhash, t_substr):
-            t.join()
-        if errors:
-            raise errors[0]
-        member_edges = results["reps"]
-        edges_sh = results["edges_simhash"]
-        edges_ss = results["edges_substring"]
-
-        # ---- stage: pairs --------------------------------------------------
         def build_pairs() -> DataFrame:
-            rep_edges = edges_mh.unionByName(edges_sh).unionByName(edges_ss)
+            rep_edges = (
+                out["edges_minhash"].unionByName(out["edges_simhash"])
+                .unionByName(out["edges_substring"])
+            )
             return (
-                member_edges.unionByName(rep_edges)
+                out["reps"].unionByName(rep_edges)
                 .select(
                     F.least("id_a", "id_b").alias("id_a"),
                     F.greatest("id_a", "id_b").alias("id_b"),
@@ -698,30 +625,15 @@ class Pipeline:
                 .dropDuplicates(["id_a", "id_b", "match_type"])
             )
 
-        # the CC fast-path gate (edge count + estimated driver bytes) is
-        # observed ON the pairs write — the assignments stage then skips its
-        # own gate aggregate job (1-2s of serial-chain constant at 1M)
-        pairs = self._stage(
-            spark, "pairs", build_pairs,
-            deps=("reps", "edges_minhash", "edges_simhash", "edges_substring"),
-            observe_cols={
-                "edge_bytes_est": F.coalesce(
-                    F.sum(F.length("id_a") + F.length("id_b") + F.lit(48)), F.lit(0)
-                )
-            },
-        )
-
-        # ---- stage: assignments (CC) ---------------------------------------
-        pairs_man = self.wh.manifest("pairs") or {}
-        gate = None
-        if "edge_bytes_est" in pairs_man.get("observed", {}):
-            # pairs rows always have id_a < id_b, so the src!=dst filter
-            # drops nothing: the committed count/bytes ARE the gate values
-            gate = (pairs_man["row_count"], pairs_man["observed"]["edge_bytes_est"])
-
         def build_assignments():
+            pairs_man = self.wh.manifest("pairs") or {}
+            gate = None
+            if "edge_bytes_est" in pairs_man.get("observed", {}):
+                # pairs rows always have id_a < id_b, so the src!=dst filter
+                # drops nothing: the committed count/bytes ARE the gate values
+                gate = (pairs_man["row_count"], pairs_man["observed"]["edge_bytes_est"])
             asg = connected_components(
-                pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                out["pairs"].select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
                 keys.select("image_id"),
                 cfg=cfg,
                 pre_gate=gate,
@@ -731,31 +643,70 @@ class Pipeline:
             # gate observation: connected_components then gates itself)
             return asg, ({"cc": cc_route(*gate, cfg)} if gate is not None else None)
 
-        assignments = self._stage(spark, "assignments", build_assignments, deps=("pairs", "keys"))
+        def declared():
+            # a generator: the walk pulls each declaration as it reaches it,
+            # so the band groups are declared from the committed signatures
+            # manifest
 
-        # ---- stage: per-cluster metrics ------------------------------------
-        # metrics and member_scores both consume (assignments, pairs) but not
-        # each other — overlap them the same way as the post-keys fan-out
-        t_metrics = _spawn(
-            "metrics",
-            lambda: self._stage(
-                spark, "metrics",
-                lambda: cluster_metrics(assignments, pairs, scored, cfg.jaccard_threshold),
-                deps=("assignments", "pairs", *group_names),  # `scored` view
-            ),
-        )
-        t_member = _spawn(
-            "member_scores",
-            lambda: self._stage(
-                spark, "member_scores", lambda: member_scores(assignments, pairs),
-                deps=("assignments", "pairs"),
-            ),
-        )
-        for t in (t_metrics, t_member):
-            t.join()
-        if errors:
-            raise errors[0]
-        return assignments
+            # reps: exact collapse (exact_member_edges has the skew contract).
+            # Corpus size from the committed keys manifest: below the hot-key
+            # threshold the viral-key detection sample runs zero extra jobs
+            yield Stage("reps", ("keys",), lambda: exact_member_edges(
+                keys, cfg.reps_hot_key_rows, cfg.reps_hot_key_cap,
+                corpus_rows=(self.wh.manifest("keys") or {}).get("row_count"),
+            ), side=True)
+            yield Stage("edges_simhash", ("keys",), build_simhash, side=True)
+            # max caption length rides the write job (zero extra passes):
+            # substring_edges uses it to omit the guaranteed-empty suffix-
+            # array branch when no container can reach the SA threshold
+            yield Stage("signatures", ("keys",), build_sigs, kw={"observe_cols": {
+                "max_caption_len": F.coalesce(F.max(F.length("caption")), F.lit(0))
+            }})
+            yield Stage("edges_substring", ("signatures",), build_substring, side=True)
+            # fused LSH + verify, committed one band group at a time, each
+            # with its own manifest carrying [band_lo, band_hi] — a job
+            # killed in group k resumes at group k, not at band 0 ("resumes
+            # mid-band"). Each group commits SCORED pairs (verified >=
+            # threshold, plus a deterministic hash-sample of rejects for the
+            # inter-cluster metric): the raw candidate set never hits a
+            # shuffle, a distinct, or disk.
+            step = max(1, cfg.lsh_bands // self._resolve_band_groups(
+                self.wh.manifest("signatures")["row_count"]))
+            for lo in range(0, cfg.lsh_bands, step):
+                hi = min(lo + step - 1, cfg.lsh_bands - 1)
+                groups.append(f"scored_minhash_b{lo:02d}_{hi:02d}")
+                yield Stage(groups[-1], ("signatures",),
+                            functools.partial(build_scored, groups[-1], lo, hi),
+                            kw={"band_lo": lo, "band_hi": hi})
+            yield Stage(
+                "edges_minhash", tuple(groups),
+                lambda: scored().where(F.col("score") >= cfg.jaccard_threshold)
+                .distinct()
+                .select("id_a", "id_b", F.lit("minhash").alias("match_type"), "score"),
+                kw={"band_lo": 0, "band_hi": cfg.lsh_bands - 1},
+            )
+            # the CC fast-path gate (edge count + estimated driver bytes) is
+            # observed ON the pairs write — the assignments stage then skips
+            # its own gate aggregate job (1-2s of serial-chain constant at 1M)
+            yield Stage(
+                "pairs", ("reps", "edges_minhash", "edges_simhash", "edges_substring"),
+                build_pairs, kw={"observe_cols": {"edge_bytes_est": F.coalesce(
+                    F.sum(F.length("id_a") + F.length("id_b") + F.lit(48)), F.lit(0)
+                )}},
+            )
+            yield Stage("assignments", ("pairs", "keys"), build_assignments)
+            yield Stage(
+                "metrics", ("assignments", "pairs", *groups),  # `scored` view
+                lambda: cluster_metrics(out["assignments"], out["pairs"], scored(), cfg.jaccard_threshold),
+                side=True,
+            )
+            yield Stage(
+                "member_scores", ("assignments", "pairs"),
+                lambda: member_scores(out["assignments"], out["pairs"]), side=True,
+            )
+
+        sched.run(declared())
+        return out["assignments"]
 
     @staticmethod
     def tight_clusters(

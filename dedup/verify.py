@@ -133,6 +133,18 @@ def substring_hits_in_container(container: str, needles: list[str]) -> list[bool
     return out
 
 
+def sa_branch(max_container_len: int | None, sa_min_container_len: int = 2048) -> str:
+    """Whether the substring pass keeps its suffix-array branch: "elided"
+    when a caller-known bound on container length proves no container
+    reaches `sa_min_container_len`, else "live" (an unknown bound keeps it).
+    The one predicate both the plan (_containment_hits) and the pipeline's
+    edges_substring manifest read, so the recorded decision is the taken
+    one."""
+    if max_container_len is not None and max_container_len < sa_min_container_len:
+        return "elided"
+    return "live"
+
+
 def substring_edges(
     captions_df: DataFrame, id_col: str = "rep_id", caption_col: str = "caption",
     cfg: DedupConfig = DEFAULT, sa_min_container_len: int = 2048,
@@ -259,9 +271,7 @@ def _containment_hits(
             F.col("a.len").alias("c_len"),
         )
     )
-    sa_possible = (
-        max_container_len is None or max_container_len >= sa_min_container_len
-    )
+    sa_possible = sa_branch(max_container_len, sa_min_container_len) == "live"
     # short containers: verify inline, pre-distinct (codegen instr)
     short = raw
     if sa_possible:
