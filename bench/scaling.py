@@ -147,7 +147,7 @@ spark.stop()
 def _prepare_sigs(n_caps: int) -> str:
     """One-time signature table for the stage bench: n_caps near-dup-family
     captions (4 members per base, ' vK' suffix variants) generated JVM-side,
-    signed with the pipeline's own Arrow UDFs."""
+    signed by the pipeline's caption kernel (lsh.with_caption_sigs)."""
     path = f"/tmp/bench_sigs_{n_caps}"
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
@@ -167,7 +167,7 @@ def _prepare_sigs(n_caps: int) -> str:
         f"substr(md5(concat(cast(pmod(id, {base}) as string), '-', cast(j as string))), 1, 7))), "
         "' v', cast(pmod(id, 7) as string)) AS caption",
     )
-    lsh.with_shingles(lsh.with_minhash(caps, "caption"), "caption").drop("caption").write.mode(
+    lsh.with_caption_sigs(caps, "caption").drop("caption").write.mode(
         "overwrite"
     ).parquet(path)
     spark.stop()

@@ -4,7 +4,8 @@ Replaces the reference's O(n^2) all-pairs embedding similarity
 (/root/reference/eridu/train/utils.py:153-235; SURVEY.md §2.3 J5) with
 band-bucket self-joins. Everything here is JVM-side (Catalyst expressions on
 the signature arrays — `transform`/`xxhash64`/`slice`); the only Python is the
-Arrow pandas_udf that computes the signatures themselves (signatures.py).
+one struct-returning Arrow pandas_udf that computes a caption's signatures
+(with_caption_sigs over signatures.batch_caption_sigs).
 
 Skew stance (SURVEY.md §4.2): the pipeline collapses identical captions /
 identical pHashes to one representative BEFORE banding, so degenerate hot
@@ -22,24 +23,31 @@ from .config import DedupConfig, DEFAULT
 from . import signatures
 
 
+def with_caption_sigs(
+    df: DataFrame, caption_col: str = "caption", cfg: DedupConfig = DEFAULT,
+    fields: tuple[str, ...] = signatures.CAPTION_SIG_FIELDS,
+) -> DataFrame:
+    """Add the caption kernel's `fields` as array<long> columns — `minhash`
+    (num_perms values), `shingles` (for exact-Jaccard verify), `fps` (the
+    winnow set, for the substring pass) — from one struct-returning Arrow
+    pandas_udf: each caption crosses into Python once."""
+
+    @F.pandas_udf(T.StructType([T.StructField(f, T.ArrayType(T.LongType())) for f in fields]))
+    def _caption_sigs(s: pd.Series) -> pd.DataFrame:
+        return signatures.batch_caption_sigs(s, cfg, fields)
+
+    out = df.withColumn("_cs", _caption_sigs(F.col(caption_col)))
+    return out.withColumns({f: F.col("_cs")[f] for f in fields}).drop("_cs")
+
+
 def with_minhash(df: DataFrame, caption_col: str = "caption", cfg: DedupConfig = DEFAULT) -> DataFrame:
-    """Add `minhash: array<long>` (num_perms values) via an Arrow pandas_udf."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _mh(s: pd.Series) -> pd.Series:
-        return signatures.batch_minhash(s, cfg)
-
-    return df.withColumn("minhash", _mh(F.col(caption_col)))
+    """Add `minhash` alone (with_caption_sigs)."""
+    return with_caption_sigs(df, caption_col, cfg, ("minhash",))
 
 
 def with_shingles(df: DataFrame, caption_col: str = "caption", cfg: DedupConfig = DEFAULT) -> DataFrame:
-    """Add `shingles: array<long>` (distinct k-gram hashes) for exact-Jaccard verify."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sh(s: pd.Series) -> pd.Series:
-        return signatures.batch_shingles(s, cfg)
-
-    return df.withColumn("shingles", _sh(F.col(caption_col)))
+    """Add `shingles` alone (with_caption_sigs)."""
+    return with_caption_sigs(df, caption_col, cfg, ("shingles",))
 
 
 def band_keys_expr(cfg: DedupConfig = DEFAULT) -> str:

@@ -5,15 +5,20 @@ stage a pure DataFrame transform committed to the warehouse with a manifest
 (resume = skip stages whose manifest matches the config hash — BASELINE.json
 "resumes mid-band"):
 
+  signatures      deps (): unique captions of a column-pruned
+                  (image_id, caption) scan of the input -> 128-perm MinHash +
+                  shingles + winnow set `fps`, one Arrow UDF pass per
+                  caption. A side stage submitted before `keys` builds, so
+                  the two head stages overlap.
   keys            the ONLY bytes scan: slim key projection (sha2, caption,
                   phash) + per-row fidelity invariant (decode, pHash
-                  recompute) in one pass
+                  recompute) in one pass. Both head stages observe a digest
+                  of their (image_id, caption) rows; a mismatch raises.
   reps            exact-dup collapse: identical (sha2(bytes), caption) /
                   identical caption / identical phash -> representative ids +
                   member->rep edges. This is the skew kill-switch: the viral
                   family (one caption on 5% of rows) collapses to ONE node
                   before any quadratic band bucket can form.
-  signatures      unique captions -> shingles + 128-perm MinHash (Arrow UDFs)
   scored_minhash_bXX_YY
                   FUSED LSH band self-join + exact-Jaccard verify
                   (lsh.minhash_scored_band): shingles ride the banded rows so
@@ -24,7 +29,9 @@ stage a pure DataFrame transform committed to the warehouse with a manifest
                   dedup their filtered subsets instead).
   edges_minhash   threshold filter + distinct over the scored union
   edges_simhash   pHash chunk LSH + exact Hamming verify (JVM bit_count)
-  edges_substring winnowing + per-bucket suffix-array pass (applyInPandas)
+  edges_substring winnowing containment join over the committed `fps`, pure
+                  Catalyst (instr verify); only containers past the
+                  suffix-array threshold reach a grouped applyInPandas
   pairs           all verified pairs (FIXTURES.md F2 shape)
   assignments     large-star/small-star connected components (FIXTURES.md F3)
   metrics         per-cluster size/score rollup
@@ -42,7 +49,7 @@ from concurrent.futures import FIRST_EXCEPTION, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
 from . import lsh, verify
@@ -345,7 +352,10 @@ class _Scheduler:
     of per-job constants that core count cannot shrink; on
     1000 executors the band-group shuffles and the simhash join overlap the
     same way). The calling thread waits on a side stage only when a later
-    stage lists it as a dep, and on the rest at the end. Manifests are
+    stage lists it as a dep or the declarations call `need` (the band groups
+    are sized from the signatures manifest), and on the rest at the end.
+    A gate raised between declarations (the fidelity and input-digest
+    checks) takes the same abort path as a failed stage. Manifests are
     per-stage, so resume semantics do not depend on the schedule; the
     lineage journal's commit order reflects completion order.
 
@@ -360,7 +370,11 @@ class _Scheduler:
         self.tag = f"dedup-run-{uuid.uuid4().hex}"
         self.futures: dict[str, Future] = {}
         self.caches: dict[str, list[DataFrame]] = {}  # stage -> held cache handles
-        # more workers than side jobs ever live at once: nothing queues
+        # more workers than side jobs ever live at once, so nothing queues:
+        # at most four (reps, edges_simhash, edges_substring and one band
+        # group's skew stats; signatures has committed before
+        # edges_substring is submitted, metrics and member_scores start
+        # after pairs has waited on the rest)
         self.pool = ThreadPoolExecutor(max_workers=8, thread_name_prefix="dedup-stage")
 
     def submit(self, key: str, pool: str, fn: Callable) -> Future:
@@ -404,12 +418,17 @@ class _Scheduler:
             if f.done() and f.exception() is not None:
                 raise f.exception()
 
+    def need(self, names) -> None:
+        """Wait on the side stages among `names`, then publish their committed
+        frames in `out`."""
+        side = [n for n in names if n in self.futures]
+        self._wait([self.futures[n] for n in side])
+        self.out.update((n, self.futures[n].result()) for n in side)
+
     def run(self, stages) -> None:
         try:
             for st in stages:
-                side_deps = [d for d in st.deps if d in self.futures]
-                self._wait([self.futures[d] for d in side_deps])
-                self.out.update((d, self.futures[d].result()) for d in side_deps)
+                self.need(st.deps)
                 if st.side:
                     self.submit(st.name, st.name, lambda st=st: self.commit(st))
                 else:
@@ -467,10 +486,30 @@ class Pipeline:
     def run(
         self, spark: SparkSession, images: DataFrame, check_fidelity: bool = True
     ) -> DataFrame:
+        """Run (or resume) every stage; returns the committed assignments.
+
+        `images` must be a deterministic DataFrame: two stages scan it —
+        `keys` (every column, the only `bytes` scan) and `signatures`
+        (`image_id`, `caption`), concurrently. An input that yields different
+        rows per scan (`limit` without an order, a random filter) would give
+        the two stages different rows; each stage observes an
+        order-independent digest of its (image_id, caption) rows on its own
+        write, and the run raises on a mismatch."""
         from .deploy import ensure_shipped
 
         ensure_shipped(spark)  # pandas UDFs need the package on the workers
         cfg = self.cfg
+        sched = _Scheduler(self.wh, spark)
+        out = sched.out
+
+        def digested(df: DataFrame) -> tuple[DataFrame, dict]:
+            # (df observed on its own job, the manifest extra recording the
+            # digest once that job ran): bit_xor, not a sum, which overflows
+            # under ANSI mode; NULL on an empty input
+            obs = Observation()
+            return df.observe(obs, F.bit_xor(F.xxhash64("image_id", "caption")).alias("d")), {
+                "input_digest": lambda: obs.get["d"]
+            }
 
         # ---- stage: keys — the ONLY scan of the bytes column -------------
         # one pass over the images table produces the slim projection every
@@ -478,14 +517,15 @@ class Pipeline:
         # per-row fidelity invariant (decode pixels, recompute pHash,
         # compare to the stored column — BASELINE.json:input_hint). sha2 is
         # JVM-side; decode/pHash is numpy inside mapInPandas (Arrow batches,
-        # no per-row Python at the Spark layer). Raises if any row fails.
-        def build_keys() -> DataFrame:
-            with_sha = images.withColumn("sha", F.sha2(F.col("bytes"), 256))
+        # no per-row Python at the Spark layer).
+        def build_keys():
+            src, digest = digested(images)
+            with_sha = src.withColumn("sha", F.sha2(F.col("bytes"), 256))
             if not check_fidelity:
                 return with_sha.select(
                     "image_id", "sha", "caption", "phash",
                     F.lit(True).alias("decode_ok"), F.lit(True).alias("phash_ok"),
-                )
+                ), digest
             import pandas as pd
 
             from . import imaging
@@ -515,34 +555,59 @@ class Pipeline:
                 check,
                 "image_id string, sha string, caption string, phash long, "
                 "decode_ok boolean, phash_ok boolean",
-            )
+            ), digest
 
-        # fidelity failures are counted ON the stage-write job itself — no
-        # second pass over the table (the r02 per-stage constant-overhead
-        # finding) — and land in the manifest, so a resumed run reads the
-        # count instead of re-scanning
-        sched = _Scheduler(self.wh, spark)
-        out = sched.out
-        keys = out["keys"] = sched.commit(Stage("keys", (), build_keys, kw={"observe_cols": {
-            "bad_rows": F.coalesce(
-                F.sum((~F.col("decode_ok") | ~F.col("phash_ok")).cast("int")), F.lit(0)
-            )
-        }}))
-        if check_fidelity:
-            bad = (self.wh.manifest("keys").get("observed") or {}).get("bad_rows")
-            if bad is None:
-                # a keys manifest from before the observation: re-check the
-                # committed slim table
-                bad = keys.where(~F.col("decode_ok") | ~F.col("phash_ok")).count()
+        def fidelity_gate(recount: bool) -> None:
+            # failures are counted ON the keys write job (no second pass) and
+            # land in the manifest; only a keys manifest from before the
+            # observation re-checks the committed slim table
+            bad = ((self.wh.manifest("keys") or {}).get("observed") or {}).get("bad_rows")
+            if bad is None and recount:
+                bad = out["keys"].where(~F.col("decode_ok") | ~F.col("phash_ok")).count()
             if bad:
                 raise ValueError(f"{bad} rows failed the per-row fidelity invariant")
 
-        # ---- every later stage, declared in walk order ------------------
-        # The stage graph fans out after `keys`: reps and edges_simhash need
-        # only `keys`, edges_substring only `signatures`, and none of them
-        # depends on the minhash band groups; metrics and member_scores both
-        # consume (assignments, pairs) but not each other. Those five are
-        # side stages; the rest is the critical chain.
+        # a resume whose committed keys already failed raises before any job
+        if check_fidelity and self.wh.is_complete("keys"):
+            fidelity_gate(recount=False)
+
+        def build_sigs():
+            # unique captions -> minhash + shingles + winnow set in one Arrow
+            # UDF. Reads (image_id, caption) straight from the input — a
+            # column-pruned scan, so `keys` stays the only bytes scan — which
+            # lets this stage run beside `keys` instead of after it.
+            # explicit repartition: AQE coalesces the small groupBy output to
+            # 1-2 partitions, which would serialize the signature UDF — the
+            # cost model sees bytes, not the Python compute behind them.
+            # dp (= every core once), not dp*2: the r06 A/B measured 0.85s
+            # vs 1.19s vs 2.1s for dp / 2*dp / AQE-coalesced at 8.7k
+            # captions — unique-caption rows are uniform, so one wave of
+            # full-size tasks beats two waves of half-size ones
+            src, digest = digested(images.select("image_id", "caption"))
+            dp = spark.sparkContext.defaultParallelism
+            uniq = src.groupBy("caption").agg(F.min("image_id").alias("rep_id")).repartition(dp)
+            return lsh.with_caption_sigs(uniq, "caption", cfg), digest
+
+        def digest_check() -> None:
+            # zero jobs: both digests rode their stages' writes. A manifest
+            # from before the field skips the check
+            got = {s: (self.wh.manifest(s) or {}).get("input_digest", "?")
+                   for s in ("keys", "signatures")}
+            if "?" not in got.values() and got["keys"] != got["signatures"]:
+                raise ValueError(
+                    "keys and signatures read different (image_id, caption) rows "
+                    f"(digests {got}): the images DataFrame is not deterministic, "
+                    "or is not the input a resumed head stage was committed from"
+                )
+
+        # ---- the stages, declared in walk order --------------------------
+        # `signatures` needs only the input, so it is declared first, as a
+        # side stage, and overlaps `keys`. After `keys` the graph fans out:
+        # reps and edges_simhash need only `keys`, edges_substring only
+        # `signatures`, and none of them depends on the minhash band groups;
+        # metrics and member_scores both consume (assignments, pairs) but not
+        # each other. Those six are side stages; the rest is the critical
+        # chain.
         groups: list[str] = []  # band-group stage names, declared once signatures commits
 
         def build_simhash() -> DataFrame:
@@ -550,7 +615,7 @@ class Pipeline:
             # groupBy over the keys scan is computed once per join side.
             # phash_candidates verifies Hamming inline (fused precision
             # stage).
-            uniq_ph = sched.hold("edges_simhash", keys.groupBy("phash").agg(
+            uniq_ph = sched.hold("edges_simhash", out["keys"].groupBy("phash").agg(
                 F.min("image_id").alias("rep_id")).persist())
             return lsh.phash_candidates(uniq_ph, "rep_id", "phash", cfg).select(
                 "id_a",
@@ -559,27 +624,16 @@ class Pipeline:
                 (F.lit(1.0) - F.col("hd") / F.lit(64.0)).cast("double").alias("score"),
             )
 
-        def build_sigs() -> DataFrame:
-            # explicit repartition: AQE coalesces the small groupBy output to
-            # 1-2 partitions, which would serialize the signature UDFs — the
-            # cost model sees bytes, not the Python compute behind them.
-            # dp (= every core once), not dp*2: the r06 A/B measured 0.85s
-            # vs 1.19s vs 2.1s for dp / 2*dp / AQE-coalesced at 8.7k
-            # captions — unique-caption rows are uniform, so one wave of
-            # full-size tasks beats two waves of half-size ones
-            dp = spark.sparkContext.defaultParallelism
-            uniq = keys.groupBy("caption").agg(F.min("image_id").alias("rep_id")).repartition(dp)
-            return lsh.with_shingles(lsh.with_minhash(uniq, "caption", cfg), "caption", cfg)
-
         def build_substring():
             # pre-deps manifests (resumed warehouses) lack the observation ->
             # None -> substring_edges keeps both verify branches (always
-            # correct); the manifest records which branch the plan kept
+            # correct); the manifest records which branch the plan kept. The
+            # committed `fps` make the candidate join Python-free (a table
+            # from before the column gets it from the caption kernel)
             sig_man = self.wh.manifest("signatures") or {}
             max_cap_len = sig_man.get("observed", {}).get("max_caption_len")
             edges = verify.substring_edges(
-                out["signatures"].select("rep_id", "caption"), "rep_id", "caption", cfg,
-                max_container_len=max_cap_len, approx_rows=sig_man.get("row_count"),
+                out["signatures"], "rep_id", "caption", cfg, max_container_len=max_cap_len,
             )
             return edges, {"sa_branch": verify.sa_branch(max_cap_len)}
 
@@ -634,7 +688,7 @@ class Pipeline:
                 gate = (pairs_man["row_count"], pairs_man["observed"]["edge_bytes_est"])
             asg = connected_components(
                 out["pairs"].select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-                keys.select("image_id"),
+                out["keys"].select("image_id"),
                 cfg=cfg,
                 pre_gate=gate,
             )
@@ -644,24 +698,34 @@ class Pipeline:
             return asg, ({"cc": cc_route(*gate, cfg)} if gate is not None else None)
 
         def declared():
-            # a generator: the walk pulls each declaration as it reaches it,
-            # so the band groups are declared from the committed signatures
-            # manifest
+            # a generator pulled inside the scheduler's walk: the gates
+            # between declarations raise through its one abort path (which
+            # cancels the in-flight signatures job), and the band groups are
+            # declared from the committed signatures manifest
 
+            # max caption length rides the write job (zero extra passes):
+            # substring_edges uses it to omit the guaranteed-empty suffix-
+            # array branch when no container can reach the SA threshold
+            yield Stage("signatures", (), build_sigs, side=True, kw={"observe_cols": {
+                "max_caption_len": F.coalesce(F.max(F.length("caption")), F.lit(0))
+            }})
+            yield Stage("keys", (), build_keys, kw={"observe_cols": {
+                "bad_rows": F.coalesce(
+                    F.sum((~F.col("decode_ok") | ~F.col("phash_ok")).cast("int")), F.lit(0)
+                )
+            }})
+            if check_fidelity:
+                fidelity_gate(recount=True)
             # reps: exact collapse (exact_member_edges has the skew contract).
             # Corpus size from the committed keys manifest: below the hot-key
             # threshold the viral-key detection sample runs zero extra jobs
             yield Stage("reps", ("keys",), lambda: exact_member_edges(
-                keys, cfg.reps_hot_key_rows, cfg.reps_hot_key_cap,
+                out["keys"], cfg.reps_hot_key_rows, cfg.reps_hot_key_cap,
                 corpus_rows=(self.wh.manifest("keys") or {}).get("row_count"),
             ), side=True)
             yield Stage("edges_simhash", ("keys",), build_simhash, side=True)
-            # max caption length rides the write job (zero extra passes):
-            # substring_edges uses it to omit the guaranteed-empty suffix-
-            # array branch when no container can reach the SA threshold
-            yield Stage("signatures", ("keys",), build_sigs, kw={"observe_cols": {
-                "max_caption_len": F.coalesce(F.max(F.length("caption")), F.lit(0))
-            }})
+            sched.need(["signatures"])
+            digest_check()
             yield Stage("edges_substring", ("signatures",), build_substring, side=True)
             # fused LSH + verify, committed one band group at a time, each
             # with its own manifest carrying [band_lo, band_hi] — a job

@@ -712,7 +712,7 @@ def q27(spark, sf):
         .where(F.col("doc_id") < 400)
         .select(F.col("doc_id").cast("string").alias("rep_id"), F.col("text").alias("caption"))
     )
-    sigs = lsh.with_shingles(lsh.with_minhash(d, "caption"), "caption")
+    sigs = lsh.with_caption_sigs(d, "caption", fields=("minhash", "shingles"))
     cand, _, _ = lsh.minhash_candidates(sigs, "rep_id")
     return verify.verify_jaccard(cand, sigs, "rep_id").withColumn("score", F.round("score", 4))
 
@@ -797,14 +797,11 @@ def q29(spark, sf):
     # no doc can reach it (r06: ~1.3s of empty stages otherwise); the
     # fragment side is substrings of the doc side, so the doc max dominates
     max_len = d.agg(F.max(F.length("caption"))).first()[0] or 0
+    # no repartition ahead of the caption kernel: <= 400 docs + <= 58
+    # fragments, and spreading a ~0.1s UDF over every core cost more in
+    # exchanges than it saved (measured: 1.65s -> 1.34s warm without it)
     return verify.substring_edges(
         corpus, "rep_id", "caption", max_container_len=max(max_len, 60),
-        # tight bound by construction: <= 400 docs + <= ceil(400/7) = 58
-        # fragments = 458. The previous conservative 800 cleared the
-        # tiny-corpus threshold (16 * 32 cores = 512), so the UDF-spread
-        # repartition still ran — two exchanges that cost more than the
-        # ~0.1s winnow UDF they spread (measured: 1.65s -> 1.34s warm)
-        approx_rows=458,
     )
 
 
@@ -1951,14 +1948,20 @@ def q54(spark, sf):
     from .deploy import ensure_shipped
     from .verify import flag_contaminated
 
-    ensure_shipped(spark)  # winnow/min-kgram Arrow UDFs run on the workers
+    ensure_shipped(spark)  # the caption kernel's Arrow UDF runs on the workers
 
     d = _t(spark, sf, "documents")
     bench = d.where((F.col("doc_id") < 40) & (F.length("text") >= 40)).select(
         F.format_string("b%05d", F.col("doc_id")).alias("bench_id"),
         F.substring(F.lower("text"), 10, 30).alias("fragment"),
     )
-    return flag_contaminated(d.select("doc_id", "text"), bench)
+    corpus = d.select("doc_id", "text")
+    # a single small parquet file scans as ONE partition, which would run
+    # the corpus side's winnow kernel on one core (the q26 rule)
+    dp = spark.sparkContext.defaultParallelism
+    if corpus.rdd.getNumPartitions() < dp:
+        corpus = corpus.repartition(dp)
+    return flag_contaminated(corpus, bench)
 
 
 def _q58_sql() -> str:

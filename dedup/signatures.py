@@ -60,14 +60,17 @@ def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def minhash_signature(shingles: np.ndarray, cfg: DedupConfig = DEFAULT) -> np.ndarray:
-    """128-perm MinHash signature (int64 array) of a set of shingle hashes.
+def minhash_signature(
+    shingles: np.ndarray, cfg: DedupConfig = DEFAULT, params: tuple | None = None
+) -> np.ndarray:
+    """128-perm MinHash signature (int64 array) of a set of shingle hashes
+    (`params`: _perm_params(cfg), hoisted out of a per-row loop).
 
     h_i(x) = (a_i * x' + b_i) mod p with p = 2^31-1 and x' = x mod p, so the
     product fits in uint64 with no overflow. Empty input -> all p (sentinel
     that never collides with a real minimum except vs another empty set).
     """
-    a, b = _perm_params(cfg)
+    a, b = params or _perm_params(cfg)
     p = _U64(cfg.minhash_prime)
     if shingles.size == 0:
         return np.full(cfg.num_perms, cfg.minhash_prime, dtype=np.int64)
@@ -157,6 +160,32 @@ def winnow_fingerprints(text: str, cfg: DedupConfig = DEFAULT) -> np.ndarray:
 # Arrow moves the batches (the reference's D1/D2 pattern, SURVEY.md §2.9).
 
 
+CAPTION_SIG_FIELDS = ("minhash", "shingles", "fps")
+
+
+def batch_caption_sigs(
+    captions: pd.Series, cfg: DedupConfig = DEFAULT, fields: tuple[str, ...] = CAPTION_SIG_FIELDS
+) -> pd.DataFrame:
+    """The caption kernel (lsh.with_caption_sigs), one Python pass per
+    caption: shingled once for both `minhash` and `shingles`, and winnowed
+    for `fps`. Computes `fields` only. Row-for-row equal to
+    batch_minhash/batch_shingles/batch_winnow."""
+    params = _perm_params(cfg)
+    want_sh = "minhash" in fields or "shingles" in fields
+    cols: dict[str, list] = {f: [] for f in fields}
+    for text in captions:
+        text = text or ""
+        sh = shingle_hashes(text, cfg.shingle_k) if want_sh else None
+        if "minhash" in cols:
+            cols["minhash"].append(minhash_signature(sh, cfg, params))
+        if "shingles" in cols:
+            cols["shingles"].append(sh.astype(np.int64))
+        if "fps" in cols:
+            cols["fps"].append(winnow_fingerprints(text, cfg).astype(np.int64))
+    return pd.DataFrame({f: pd.Series(v, dtype=object) for f, v in cols.items()})
+
+
+# one-field kernels: the references batch_caption_sigs is tested against
 def batch_minhash(captions: pd.Series, cfg: DedupConfig = DEFAULT) -> pd.Series:
     a, b = _perm_params(cfg)
     p = _U64(cfg.minhash_prime)
@@ -287,11 +316,3 @@ def caption_variants(text: str) -> list[dict]:
 
 def batch_caption_variants(captions: pd.Series) -> pd.Series:
     return pd.Series([caption_variants(t) for t in captions])
-
-
-def batch_min_kgram(captions: pd.Series, cfg: DedupConfig = DEFAULT) -> pd.Series:
-    out = []
-    for t in captions:
-        v = min_kgram_hash(t or "", cfg)
-        out.append(None if v is None else np.int64(np.uint64(v).astype(np.int64)))
-    return pd.Series(out, dtype="object")

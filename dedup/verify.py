@@ -1,10 +1,12 @@
-"""Candidate verification: exact Jaccard, exact Hamming, suffix-array substring.
+"""Candidate verification: exact Jaccard and the suffix-array substring pass.
 
 LSH (lsh.py) supplies recall; this module supplies precision by recomputing
-the EXACT metric on each candidate pair only. Jaccard and Hamming verify run
-entirely JVM-side (`array_intersect`, `bit_count` — whole-stage codegen); the
-substring pass is a grouped `applyInPandas` that builds a suffix array per
-fingerprint bucket (north_rule "suffix-array substring pass").
+the EXACT metric on each candidate pair only. Jaccard verify runs JVM-side
+(`array_intersect`, whole-stage codegen; exact Hamming is fused into
+lsh.phash_candidates the same way). The substring pass joins precomputed
+winnow sets (`fps`) in Catalyst and verifies with `instr`; only containers
+past the suffix-array threshold reach a grouped `applyInPandas` (north_rule
+"suffix-array substring pass").
 
 Reference semantics: threshold match decision
 /root/reference/eridu/train/utils.py:347-356; exact-dup fragments fall under
@@ -13,10 +15,10 @@ the exact-dup pass /root/reference/eridu/etl/filter.py:51-57."""
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .config import DedupConfig, DEFAULT
-from . import signatures
+from . import lsh
 
 
 def verify_jaccard(
@@ -44,28 +46,6 @@ def verify_jaccard(
         j = j.where(F.col("score") >= F.lit(cfg.jaccard_threshold))
     return j.select(
         "id_a", "id_b", F.lit("minhash").alias("match_type"), F.col("score").cast("double")
-    )
-
-
-def verify_hamming(
-    candidates: DataFrame, phashes: DataFrame, id_col: str = "rep_id",
-    phash_col: str = "phash", cfg: DedupConfig = DEFAULT,
-) -> DataFrame:
-    """Exact 64-bit Hamming distance on candidate pairs (bit_count(xor))."""
-    ph = phashes.select(F.col(id_col), F.col(phash_col))
-    j = (
-        candidates.join(ph.withColumnsRenamed({id_col: "id_a", phash_col: "ph_a"}), "id_a")
-        .join(ph.withColumnsRenamed({id_col: "id_b", phash_col: "ph_b"}), "id_b")
-        .withColumn("hd", F.expr("bit_count(ph_a ^ ph_b)"))
-    )
-    return (
-        j.where(F.col("hd") <= F.lit(cfg.hamming_threshold))
-        .select(
-            "id_a",
-            "id_b",
-            F.lit("simhash").alias("match_type"),
-            (F.lit(1.0) - F.col("hd") / F.lit(64.0)).cast("double").alias("score"),
-        )
     )
 
 
@@ -145,20 +125,38 @@ def sa_branch(max_container_len: int | None, sa_min_container_len: int = 2048) -
     return "live"
 
 
+_MIN_LONG = -(1 << 63)
+
+
+def min_fp(fps) -> Column:
+    """The UNSIGNED minimum of an array<long> winnow set (NULL when empty),
+    in Catalyst. The kernels hash in uint64 and store the bits as int64, so
+    a signed array_min picks another element whenever the set holds a
+    top-bit hash — not the min_kgram_hash the containment lemma needs, a
+    silent recall loss. Flipping the sign bit maps unsigned order onto
+    signed order; flipping it back restores the bits."""
+    flip = F.lit(_MIN_LONG)
+    return F.array_min(F.transform(fps, lambda x: x.bitwiseXOR(flip))).bitwiseXOR(flip)
+
+
 def substring_edges(
     captions_df: DataFrame, id_col: str = "rep_id", caption_col: str = "caption",
     cfg: DedupConfig = DEFAULT, sa_min_container_len: int = 2048,
-    max_container_len: int | None = None, approx_rows: int | None = None,
+    max_container_len: int | None = None,
 ) -> DataFrame:
     """Suffix-array substring pass over unique captions.
 
     Candidate generation (shuffle-bounded, nothing quadratic in a hot bucket):
-    - container side: all winnowing fingerprints per caption (Arrow UDF) —
+    - container side: all winnowing fingerprints per caption (`fps`) —
       guarantee: any containment of length >= cfg.substr_min_len shares one;
-    - fragment side: ONE key per caption — its minimum k-gram hash. If B is
-      contained in A, min(kgrams(B)) is winnow-selected in both B and A
-      (see signatures.min_kgram_hash), so this asymmetric join is lossless
-      and ~|W(B)|x cheaper than fp-set x fp-set.
+    - fragment side: ONE key per caption — its minimum k-gram hash, the
+      unsigned min of its `fps` (min_fp). If B is contained in A,
+      min(kgrams(B)) is winnow-selected in both B and A (see
+      signatures.min_kgram_hash), so this asymmetric join is lossless and
+      ~|W(B)|x cheaper than fp-set x fp-set.
+
+    `fps` comes from `captions_df` when it has the column (the pipeline's
+    signatures: no Python at all), else from the caption kernel.
 
     Verification is fused INTO the candidate join for short containers
     (`instr`, whole-stage codegen — captions travel inline, so the raw
@@ -168,12 +166,10 @@ def substring_edges(
     builds the container's suffix array once and binary-searches each
     candidate fragment — O(len * log) per probe beats instr's O(len_a*len_b)
     exactly when documents are long (the 100TB-document regime)."""
-    src = captions_df.select(id_col, caption_col)
     pairs = (
-        _containment_hits(src, src, id_col, caption_col, cfg,
+        _containment_hits(captions_df, captions_df, id_col, caption_col, cfg,
                           sa_min_container_len, exclude_self=True,
-                          max_container_len=max_container_len,
-                          approx_rows=approx_rows)
+                          max_container_len=max_container_len)
         .select(F.least("cid", "fid").alias("id_a"), F.greatest("cid", "fid").alias("id_b"))
         .distinct()
     )
@@ -186,13 +182,15 @@ def _containment_hits(
     containers_src: DataFrame, fragments_src: DataFrame,
     id_col: str, text_col: str, cfg: DedupConfig,
     sa_min_container_len: int, exclude_self: bool,
-    max_container_len: int | None = None, approx_rows: int | None = None,
+    max_container_len: int | None = None,
 ) -> DataFrame:
     """(cid, fid) pairs where the fragment row's text occurs inside the
-    container row's text (both lowercased). The shared core of the self-join
-    substring pass (substring_edges) and the two-table decontamination pass
-    (flag_contaminated) — one place owns the winnow/min-kgram candidate join
-    and the fused short/long verification.
+    container row's text (both lowercased). Each input's winnow sets are
+    its `fps` column, else computed by the caption kernel. The shared core
+    of the self-join substring pass (substring_edges) and the two-table
+    decontamination pass (flag_contaminated) — one place owns the
+    winnow/min-kgram candidate join (pure Catalyst: containers explode
+    `fps`, fragments key on min_fp) and the fused short/long verification.
 
     Lossless for fragments of length >= cfg.substr_min_len: the fragment's
     minimum k-gram hash is winnow-selected in every container that contains
@@ -201,60 +199,28 @@ def _containment_hits(
     max_container_len: a caller-known upper bound on container text length
     (e.g. observed for free on an upstream stage write). When it proves no
     container can reach `sa_min_container_len`, the suffix-array branch is
-    omitted from the PLAN — the r06 profile measured ~1.3s of guaranteed-
-    empty dropDuplicates/applyInPandas/union stages per call on short-text
-    corpora (per-stage layers: `perfbench/run.py --trace 1`, layer
-    verify.edges_substring). None (the default) keeps both
-    branches: correct at any length, which is the only safe assumption at
-    scale."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _wf(s: pd.Series) -> pd.Series:
-        return signatures.batch_winnow(s, cfg)
-
-    @F.pandas_udf(T.LongType())
-    def _minfp(s: pd.Series) -> pd.Series:
-        return signatures.batch_min_kgram(s, cfg)
-
-    # deterministic in fact, but marked nondeterministic so Catalyst cannot
-    # push the fp-filter and join key below the aliasing projection and
-    # re-inline the UDF — measured 3 evals per branch (filter + join key +
-    # output) without this, i.e. 6x min-kgram over every caption across the
-    # short/long branches (PLANS.md r04 double-eval audit)
-    _minfp = _minfp.asNondeterministic()
-
-    # explicit parallelism for the winnowing UDFs — but ONLY when the scan
-    # is actually under-parallel (a single small parquet file): the
-    # unconditional repartition(2*dp) of an already well-partitioned input
-    # cost ~2.5s of pure shuffle/stage overhead per call in the r06 profile
-    # (short-branch 3.7s -> 1.3s without it). AQE's
-    # byte-based coalescing is still kept away from the UDF stage by the
-    # repartition when it IS needed (small files carry tiny byte sizes that
-    # AQE would serialize onto one task).
-    dp = containers_src.sparkSession.sparkContext.defaultParallelism
-    # approx_rows: caller-known row-count bound. A corpus of a few hundred
-    # rows gains nothing from spreading a ~0.1s UDF over dp tasks — the two
-    # repartition exchanges cost more than they save (r06 q29 profile), so
-    # the spread is skipped when the bound proves the table tiny.
-    tiny = approx_rows is not None and approx_rows < 16 * dp
+    omitted from the PLAN (r06: ~1.3s of guaranteed-empty stages per call
+    on short-text corpora). None (the default) keeps both branches: correct
+    at any length, the only safe assumption at scale."""
 
     def norm(df):
-        out = df.select(
-            F.col(id_col).alias("id"), F.lower(F.col(text_col)).alias("caption")
-        )
-        if not tiny and out.rdd.getNumPartitions() < dp:
-            out = out.repartition(dp)
-        return out
+        if "fps" not in df.columns:
+            # raw text: q29, q54, a signatures table from before the column
+            df = lsh.with_caption_sigs(df, text_col, cfg, fields=("fps",))
+        cap = F.lower(F.col(text_col))
+        return df.select(F.col(id_col).alias("id"), cap.alias("caption"),
+                         F.length(cap).alias("len"), "fps")
 
     containers = norm(containers_src).select(
-        "id",
-        "caption",
-        F.length("caption").alias("len"),
-        F.explode(_wf(F.col("caption"))).alias("fp"),
+        "id", "caption", "len", F.explode("fps").alias("fp")
     )
-    fragments = norm(fragments_src).select(
-        "id", "caption", F.length("caption").alias("len"), _minfp(F.col("caption")).alias("fp")
-    ).where(F.col("fp").isNotNull() & (F.col("len") >= cfg.substr_min_len))
+    # the fragment key leaves a Generate, like the container key, so the
+    # join's inferred isnotnull(fp) stays above it: pushed below the
+    # projection it would re-inline a kernel UDF computing `fps` (2 evals
+    # per side, PLANS.md r04 audit). A NULL key never joins
+    fragments = norm(fragments_src).where(F.col("len") >= cfg.substr_min_len).select(
+        "id", "caption", "len", F.explode(F.array(min_fp(F.col("fps")))).alias("fp")
+    )
     a = containers.alias("a")
     b = fragments.alias("b")
     on = F.col("a.fp") == F.col("b.fp")

@@ -314,3 +314,99 @@ def test_degenerate_inputs(spark, tmp_path_factory):
     synth.write_parquet(src, 1, seed=3)
     out = Pipeline(str(base / "wh1")).run(spark, spark.read.parquet(src)).collect()
     assert len(out) == 1 and out[0]["cluster_id"] == out[0]["image_id"]
+
+
+def _small_input(spark, tmp_path, n: int = 80, seed: int = 31):
+    import pyarrow.parquet as pq
+
+    from dedup import synth
+
+    rows = synth.generate(n, seed=seed)
+    src = str(tmp_path / "img.parquet")
+    pq.write_table(synth.to_arrow(rows), src)
+    return rows, spark.read.parquet(src)
+
+
+def test_nondeterministic_input_raises(spark, tmp_path):
+    """keys and signatures scan the input separately: a filter that draws a
+    fresh random number per evaluation hands them different rows, and the
+    digests their writes observed disagree. (Spark's rand() would not show
+    it: its seed is fixed in the plan and both scans split the file alike,
+    so it keeps the same rows in both.)"""
+    import random
+
+    _, images = _small_input(spark, tmp_path)
+    coin = F.udf(lambda _: random.random() < 0.5, "boolean").asNondeterministic()
+    with pytest.raises(ValueError, match="not deterministic"):
+        Pipeline(str(tmp_path / "wh")).run(spark, images.where(coin("image_id")))
+
+
+def test_signatures_without_fps_resume(spark, tmp_path):
+    """A signatures table committed before the `fps` column (and before the
+    input digest) resumes as it is: the substring pass computes the winnow
+    sets through the caption kernel and gives the same edges."""
+    import json
+    import os
+    import shutil
+
+    rows, images = _small_input(spark, tmp_path)
+    wh = str(tmp_path / "wh")
+    p = Pipeline(wh)
+    p.run(spark, images)
+
+    def edges():
+        return sorted(map(tuple, spark.read.parquet(os.path.join(wh, "edges_substring")).collect()))
+
+    before = edges()
+    assert before  # synth captions carry fragment pairs
+    # rewrite the committed table without the column, and its manifest
+    # without the column in `schema` and without `input_digest`
+    sig_dir, old_dir = os.path.join(wh, "signatures"), str(tmp_path / "sig_old")
+    shutil.move(sig_dir, old_dir)
+    spark.read.parquet(old_dir).drop("fps").write.parquet(sig_dir)
+    path = p.wh._manifest_path("signatures")
+    with open(path) as f:
+        man = json.load(f)
+    man["schema"]["fields"] = [c for c in man["schema"]["fields"] if c["name"] != "fps"]
+    del man["input_digest"]
+    with open(path, "w") as f:
+        json.dump(man, f)
+    p.wh.invalidate_after("edges_substring")
+    assert not p.wh.is_complete("pairs")
+
+    res = {r["image_id"]: r["cluster_id"] for r in Pipeline(wh).run(spark, images).collect()}
+    assert res == oracle_clusters(rows, oracle_pairs(rows))
+    assert edges() == before
+    assert p.wh.manifest("signatures")["committed_at"] == man["committed_at"]  # not rewritten
+    assert "fps" not in spark.read.parquet(sig_dir).columns
+
+
+def test_failed_fidelity_resume_launches_no_job(spark, tmp_path):
+    """A resume whose committed keys manifest records failed rows raises
+    before it submits anything — also when `signatures`, which no longer
+    waits for `keys`, is not committed and would otherwise start first."""
+    import pyarrow.parquet as pq
+
+    from dedup import synth
+
+    rows = synth.generate(60, seed=5)
+    rows[3] = {**rows[3], "phash": rows[3]["phash"] ^ 0xFFFF}  # fails the pHash recompute
+    src = str(tmp_path / "bad.parquet")
+    pq.write_table(synth.to_arrow(rows), src)
+    images = spark.read.parquet(src)
+    wh = str(tmp_path / "wh")
+    with pytest.raises(ValueError, match="1 rows failed"):
+        Pipeline(wh).run(spark, images)
+    p = Pipeline(wh)
+    p.wh.invalidate_after("signatures")  # as if the abort had cancelled it
+    assert p.wh.is_complete("keys") and not p.wh.is_complete("signatures")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("failed-fidelity-resume", "no job may run")
+    try:
+        with pytest.raises(ValueError, match="1 rows failed"):
+            Pipeline(wh).run(spark, images)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("failed-fidelity-resume")) == []

@@ -98,6 +98,27 @@ def _abort_then_resume(spark, synth_parquet, wh, clusters, monkeypatch, patches,
     return p, abort_s
 
 
+def test_keys_fails_with_signatures_in_flight(
+    spark, synth_parquet, tmp_path, clusters, monkeypatch
+):
+    """The two head stages overlap: `signatures` is submitted before `keys`
+    builds, so a `keys` failure meets a running signatures job, and the one
+    abort path cancels and joins it."""
+    marker = str(tmp_path / "signatures_running")
+    caption_sigs = lsh.with_caption_sigs
+
+    def slow_sigs(*a, **kw):
+        return _slow(caption_sigs(*a, **kw), "rep_id", 600.0, marker)
+
+    _, abort_s = _abort_then_resume(
+        spark, synth_parquet, str(tmp_path / "wh"), clusters, monkeypatch,
+        [(lsh, "with_caption_sigs", slow_sigs),
+         (Warehouse, "write", _fail_write("keys", lambda: _wait_for(marker)))],
+    )
+    assert os.path.exists(marker)  # the signatures job really was running
+    assert abort_s < 120
+
+
 def test_reps_fails_during_band_pass(spark, synth_parquet, tmp_path, clusters, monkeypatch):
     """A side stage fails while the band groups run: the next inline stage
     raises it, and the other side stages are cancelled and joined."""

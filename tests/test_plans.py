@@ -153,15 +153,18 @@ def test_explode_udf_paths_are_single_eval(spark):
     """Catalyst's InferFiltersFromGenerate + alias pushdown evaluated the
     LSH/IVF/winnow Arrow UDFs TWICE (or more) per row — Filter(size(udf)>0)
     re-inlined the UDF below the projection. The session excludes that rule
-    (session.py / deploy.ensure_shipped) and _minfp is pushdown-barriered;
-    these counts pin the fix: one eval per structural reference."""
+    (session.py / deploy.ensure_shipped), and the substring pass's fragment
+    key leaves a Generate so the join's null filter cannot re-inline the
+    caption kernel; these counts pin the fix: one eval per structural
+    reference."""
     c = _arrow_udf_counts(_plan(spark, "q50_ann_ivf_topk"))
     assert c["_cells"] == 2, c  # one per side (corpus + probes), not 4
     c = _arrow_udf_counts(_plan(spark, "q33_ann_lsh_topk"))
     assert c["_bk"] == 2, c  # one per side, not 4
     c = _arrow_udf_counts(_plan(spark, "q29_winnow_substring_pass"))
-    # one per short/long branch (raw is deliberately never materialized)
-    assert c["_wf"] <= 2 and c["_minfp"] <= 2, c
+    # the caption kernel, once per corpus union branch on each join side
+    # (the container and fragment UDFs it replaced were bounded at 2 each)
+    assert c["_caption_sigs"] <= 4, c
     # q39's signature moved from a pandas UDF to pure Catalyst in r05: the
     # pin is now that NO Python eval exists anywhere in the plan. Expression
     # duplication is bounded by structure (ph column + chunk-key expr, per
@@ -182,3 +185,30 @@ def test_repetition_filter_is_single_scan_no_shuffle(spark):
     assert "EvalPython" not in p
     assert "codegen id" in p
     assert p.count("transform(sequence") == 1
+
+
+def test_pipeline_head_and_substring_plans(spark, synth_parquet, tmp_path, monkeypatch):
+    """The pipeline's committed plans: the signatures stage scans the input
+    without `bytes` (keys stays the only bytes scan), and edges_substring
+    runs no Python — it joins the committed winnow sets in Catalyst."""
+    from dedup.io import Warehouse
+    from dedup.pipeline import Pipeline
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    plans = {}
+    write = Warehouse.write
+
+    def record(self, df, stage, *a, **kw):
+        plans[stage] = df._jdf.queryExecution().explainString(mode)
+        return write(self, df, stage, *a, **kw)
+
+    monkeypatch.setattr(Warehouse, "write", record)
+    Pipeline(str(tmp_path / "wh")).run(spark, spark.read.parquet(synth_parquet))
+    scans = [ln for ln in plans["signatures"].splitlines() if "ReadSchema" in ln]
+    assert scans and all("bytes" not in ln and "caption" in ln for ln in scans), scans
+    assert "bytes" in next(ln for ln in plans["keys"].splitlines() if "ReadSchema" in ln)
+    assert "EvalPython" not in plans["edges_substring"]
+    assert "_caption_sigs" in plans["signatures"]
+    # the committed winnow sets stay out of the band join's scan
+    band = next(s for s in plans if s.startswith("scored_minhash_"))
+    assert "fps" not in next(ln for ln in plans[band].splitlines() if "ReadSchema" in ln)

@@ -104,3 +104,29 @@ def test_batch_kernels_match_scalar():
     assert bs[1].size == 0
     bw = signatures.batch_winnow(texts)
     assert np.array_equal(bw[0], bw[3])
+
+
+def test_caption_kernel_matches_one_field_kernels():
+    """The one-pass caption kernel equals the three one-field kernels row for
+    row: None, empty, shorter than both k, between them, and long captions
+    (one longer than a winnow window of k-grams)."""
+    import pandas as pd
+
+    texts = pd.Series([
+        None, "", "ab", "abcdef", "hello world pattern",
+        "The Harbor Crane overlooks the winter canal at dusk " * 40,
+    ])
+    got = signatures.batch_caption_sigs(texts)
+    assert list(got.columns) == ["minhash", "shingles", "fps"]
+    for field, ref in (("minhash", signatures.batch_minhash),
+                       ("shingles", signatures.batch_shingles),
+                       ("fps", signatures.batch_winnow)):
+        want = ref(texts)
+        assert len(got[field]) == len(want)
+        for g, w in zip(got[field], want):
+            assert g.dtype == np.int64 and np.array_equal(g, w), field
+    # a field subset computes those columns only, with the same values
+    fps = signatures.batch_caption_sigs(texts, fields=("fps",))
+    assert list(fps.columns) == ["fps"]
+    assert all(np.array_equal(a, b) for a, b in zip(fps["fps"], got["fps"]))
+    assert signatures.batch_caption_sigs(pd.Series([], dtype=object)).empty

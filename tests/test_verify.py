@@ -214,3 +214,32 @@ def test_ngram_decontamination_broadcast_gate(spark, monkeypatch):
     forced = V.flag_contaminated_ngrams(corpus, bench, n=8, force_broadcast=True)
     assert "ResolvedHint" in analyzed(forced)
     assert sorted(map(tuple, unhinted.collect())) == sorted(map(tuple, forced.collect()))
+
+
+def test_min_fp_is_the_unsigned_min_kgram_hash(spark):
+    """verify.min_fp (Catalyst, over the committed int64 winnow set) equals
+    signatures.min_kgram_hash, including on captions where a signed
+    array_min picks another element; NULL where the text is shorter than k."""
+    import numpy as np
+    import pandas as pd
+
+    from dedup import signatures
+    from dedup.verify import min_fp
+
+    rng = np.random.default_rng(3)
+    words = ["harbor", "crane", "winter", "canal", "dusk", "alley", "garden", "tide"]
+    texts = [" ".join(rng.choice(words, size=rng.integers(3, 12))) for _ in range(300)]
+    texts += ["short", "", None]
+    fps = signatures.batch_caption_sigs(pd.Series(texts), fields=("fps",))["fps"]
+    df = spark.createDataFrame(
+        [(i, f.tolist()) for i, f in enumerate(fps)], "i int, fps array<long>"
+    )
+    got = {r["i"]: r["fp"] for r in df.select("i", min_fp(F.col("fps")).alias("fp")).collect()}
+    want = {
+        i: (None if (m := signatures.min_kgram_hash(t or "")) is None
+            else int(np.uint64(m).astype(np.int64)))
+        for i, t in enumerate(texts)
+    }
+    assert got == want
+    signed = {i: (int(f.min()) if f.size else None) for i, f in enumerate(fps)}
+    assert sum(signed[i] != want[i] for i in want) > 0  # the case a signed min gets wrong
