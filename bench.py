@@ -1,5 +1,7 @@
 """Benchmark entry (driver contract): runs the headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 directory named in main()) on
+get_spark's default core count ($SPARK_GRAFT_CPUS, else the CPUs this
+process may run on)
 plus the flagship dedup pipeline on a deterministic synthetic images table,
 and prints ONE JSON line:
 
@@ -80,7 +82,6 @@ def _warm_page_cache(path: str) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
 
     from dedup import queries as q
@@ -88,7 +89,8 @@ def main() -> None:
     from dedup.pipeline import Pipeline
     from dedup.session import get_spark
 
-    spark = get_spark("bench", cores=cpus)
+    spark = get_spark("bench")
+    cpus = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
 
     _warm_page_cache(sf_dir)

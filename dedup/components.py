@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from .config import DedupConfig, DEFAULT
 
+_MAX_STAR_ROUNDS = 40  # O(log^2 n) rounds converge far below this; reaching it raises
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -147,10 +149,7 @@ def _driver_union_find(edges: DataFrame) -> tuple[DataFrame, int]:
     return spark.createDataFrame(roots), roots.nbytes
 
 
-def cc_route(
-    n_edges: int, edge_bytes: int, cfg: DedupConfig = DEFAULT,
-    driver_edge_threshold: int | None = None,
-) -> dict:
+def cc_route(n_edges: int, edge_bytes: int, cfg: DedupConfig = DEFAULT) -> dict:
     """The route connected_components takes for an edge set of `n_edges`
     raw rows and `edge_bytes` estimated driver heap, with the gate values
     that chose it: "driver" (union-find on the driver) when there is at
@@ -158,21 +157,18 @@ def cc_route(
     distributed large-star/small-star loop). The pipeline records this dict
     in the assignments manifest, so the decision is read from the warehouse
     rather than re-derived."""
-    if driver_edge_threshold is None:
-        driver_edge_threshold = cfg.cc_driver_edge_threshold
-    driver = 0 < n_edges <= driver_edge_threshold and edge_bytes <= cfg.cc_driver_max_bytes
+    driver = 0 < n_edges <= cfg.cc_driver_edge_threshold and edge_bytes <= cfg.cc_driver_max_bytes
     return {
         "route": "driver" if driver else "star",
         "edges": n_edges,
         "edge_bytes_est": edge_bytes,
-        "driver_edge_threshold": driver_edge_threshold,
+        "driver_edge_threshold": cfg.cc_driver_edge_threshold,
         "driver_max_bytes": cfg.cc_driver_max_bytes,
     }
 
 
 def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 40,
-    driver_edge_threshold: int | None = None, cfg: DedupConfig = DEFAULT,
+    edges: DataFrame, vertices: DataFrame, cfg: DedupConfig = DEFAULT,
     pre_gate: tuple[int, int] | None = None,
 ) -> DataFrame:
     """edges(src,dst) + vertices(id) -> assignments(image_id, cluster_id).
@@ -181,8 +177,8 @@ def connected_components(
     themselves (singletons). Edge sets below cfg.cc_driver_edge_threshold
     rows AND cfg.cc_driver_max_bytes estimated driver heap take the driver
     union-find fast path; above either bound, the distributed
-    large-star/small-star loop (set the threshold to 0 to force it). The
-    explicit `driver_edge_threshold` arg overrides the config row bound.
+    large-star/small-star loop (set the threshold to 0 to force it); a loop
+    that has not converged after _MAX_STAR_ROUNDS rounds raises.
 
     pre_gate: optional (row_count, estimated_bytes) the caller already
     knows — e.g. observed on the committed pairs stage's write job — which
@@ -200,7 +196,7 @@ def connected_components(
     # (same fixpoint), and at 1M/local[32] that distinct was ~2s of pure
     # overhead.
     prev = (pre_gate[0], 0, pre_gate[1]) if pre_gate is not None else _checksum(raw)
-    if cc_route(prev[0], prev[2], cfg, driver_edge_threshold)["route"] == "driver":
+    if cc_route(prev[0], prev[2], cfg)["route"] == "driver":
         roots, roots_nbytes = _driver_union_find(raw)
         # join-back: the roots side holds only edge-touched vertices —
         # broadcast it so the big vertex table never shuffles; singletons
@@ -229,7 +225,7 @@ def connected_components(
     # planning overhead dominates — partitions are already sized explicitly
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        for it in range(max_iter):
+        for _ in range(_MAX_STAR_ROUNDS):
             if prev[0] == 0:
                 break
             # one star round per materialization: each operator consumes its
@@ -242,7 +238,7 @@ def connected_components(
                 break
             prev = cur
         else:
-            raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+            raise RuntimeError(f"connected_components did not converge in {_MAX_STAR_ROUNDS} rounds")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)

@@ -483,9 +483,7 @@ class Pipeline:
             return 2
         return 4
 
-    def run(
-        self, spark: SparkSession, images: DataFrame, check_fidelity: bool = True
-    ) -> DataFrame:
+    def run(self, spark: SparkSession, images: DataFrame) -> DataFrame:
         """Run (or resume) every stage; returns the committed assignments.
 
         `images` must be a deterministic DataFrame: two stages scan it —
@@ -519,17 +517,12 @@ class Pipeline:
         # JVM-side; decode/pHash is numpy inside mapInPandas (Arrow batches,
         # no per-row Python at the Spark layer).
         def build_keys():
-            src, digest = digested(images)
-            with_sha = src.withColumn("sha", F.sha2(F.col("bytes"), 256))
-            if not check_fidelity:
-                return with_sha.select(
-                    "image_id", "sha", "caption", "phash",
-                    F.lit(True).alias("decode_ok"), F.lit(True).alias("phash_ok"),
-                ), digest
             import pandas as pd
 
             from . import imaging
 
+            src, digest = digested(images)
+            with_sha = src.withColumn("sha", F.sha2(F.col("bytes"), 256))
             psnr_min = cfg.psnr_min_db
 
             def check(batches):
@@ -568,7 +561,7 @@ class Pipeline:
                 raise ValueError(f"{bad} rows failed the per-row fidelity invariant")
 
         # a resume whose committed keys already failed raises before any job
-        if check_fidelity and self.wh.is_complete("keys"):
+        if self.wh.is_complete("keys"):
             fidelity_gate(recount=False)
 
         def build_sigs():
@@ -714,8 +707,7 @@ class Pipeline:
                     F.sum((~F.col("decode_ok") | ~F.col("phash_ok")).cast("int")), F.lit(0)
                 )
             }})
-            if check_fidelity:
-                fidelity_gate(recount=True)
+            fidelity_gate(recount=True)
             # reps: exact collapse (exact_member_edges has the skew contract).
             # Corpus size from the committed keys manifest: below the hot-key
             # threshold the viral-key detection sample runs zero extra jobs

@@ -1,10 +1,17 @@
-"""SparkSession factory.
+"""SparkSession factory: the one way this package builds a session.
 
 Keeps the reference's good config choices (AQE + coalesce + skew join, Arrow,
-Kryo — /root/reference/eridu/etl/filter.py:27-37) and replaces its manual
+Kryo — the reference ETL's filter.py) and replaces its manual
 `repartition(100/1000)` memory valves with explicit shuffle-partition sizing.
 Arrow batch size is tuned down because image `bytes` rows are KBs each
-(SURVEY.md §7 hard part (c))."""
+(SURVEY.md §7 hard part (c)).
+
+`get_spark` configures and returns the session and runs no job: first-use
+costs (Python worker forks, codegen, reader init) land on the first real
+query, where a timer around that query sees them. The caller that runs
+pandas UDFs ships the package first (`Pipeline.run` calls
+`deploy.ensure_shipped` before its first stage). With no `cores` argument
+the session takes SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
 
 from __future__ import annotations
 
@@ -12,102 +19,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-# applicationIds already warmed — getOrCreate can hand the same session to
-# many callers; the warmup must run once per JVM, not once per call
-_WARMED: set[str] = set()
-
-
-def _warm_session(spark: SparkSession, cores: int) -> None:
-    """One-time generic infrastructure warmup on a fresh session.
-
-    A cold local-mode session pays JIT/init costs on its FIRST real query:
-    the janino whole-stage-codegen compiler, the parquet reader/writer and
-    Hadoop LocalFileSystem init, shuffle + AQE machinery, the broadcast
-    path, and — the big one for this engine — the Python worker pool (each
-    of `cores` daemon-forked workers imports pandas/numpy/pyarrow on its
-    first Arrow UDF task). Measured on the round-6 host: the first query of
-    a session (a 600k-row groupBy) ran 4.98s cold vs 0.98s after this
-    warmup, and the first Arrow-UDF query dropped 6.3s -> 4.0s (the
-    session's own cost is `session.get_spark_s` in `perfbench/run.py
-    --trace 1`). None of this touches any input table or
-    caches any query result — it runs on a throwaway 10k-row range written
-    to a temp file and deleted — so every bench/oracle invocation still
-    computes entirely from its parquet inputs; what moves out of the timed
-    region is session INITIALIZATION, which on a production cluster runs
-    once per long-lived application, not once per query."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql import functions as F, types as T
-
-    p = os.path.join(tempfile.gettempdir(), f"spark_warmup_{os.getpid()}.parquet")
-    try:
-        # ship the dedup package FIRST: an addPyFile AFTER the worker pool
-        # has forked invalidates worker reuse, so the first real UDF query
-        # would re-pay the fork + pandas import it just warmed (measured
-        # ~4s on q26 in the r06 bench with the zip shipped lazily)
-        from . import deploy
-
-        deploy.ensure_shipped(spark)
-        spark.range(0, 10_000, 1, cores).selectExpr(
-            "id", "cast(id as string) s", "cast(id as double) d"
-        ).write.mode("overwrite").parquet(p)
-        df = spark.read.parquet(p)
-        agg = df.groupBy((F.col("id") % 7).alias("g")).agg(
-            F.sum("d").alias("sd"), F.count(F.lit(1)).alias("n")
-        )
-        df.withColumn("g", F.col("id") % 7).join(F.broadcast(agg), "g", "left") \
-            .write.format("noop").mode("overwrite").save()
-
-        def _w_fn(s):
-            import numpy as np
-
-            # pull the shipped package into the worker interpreter too, so
-            # the first REAL signature UDF finds everything already imported
-            # (exercising the kernels themselves was A/B'd — no effect, the
-            # residual first-stage cost is not kernel lazy-init)
-            from dedup import signatures as _sig  # noqa: F401
-
-            return pd.Series([np.arange(2, dtype=np.int64) for _ in s])
-
-        # real-object annotations, NOT `s: pd.Series` hints: this module has
-        # `from __future__ import annotations`, which turns hints into the
-        # STRING 'pd.Series'; pandas_udf resolves hint strings against the
-        # function's module globals, where pd (imported locally above) does
-        # not exist -> UNSUPPORTED_SIGNATURE at decoration time. That error
-        # was swallowed by the best-effort except below, so the UDF warmup
-        # silently never ran and the first real UDF query of every session
-        # re-paid the full worker fork + pandas import (~2-3s at 32 cores).
-        _w_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
-        _w = F.pandas_udf(_w_fn, T.ArrayType(T.LongType()))
-
-        # 2x cores partitions so every concurrent worker slot forks + imports
-        spark.range(0, cores * 64, 1, cores * 2).selectExpr(
-            "cast(id as string) s"
-        ).select(F.explode(_w(F.col("s")))).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    except Exception:
-        # warmup is best-effort: a failure must never block real work — but
-        # it must be DIAGNOSABLE (a silent failure here cost round 6 the
-        # whole UDF warmup); opt into the traceback when investigating
-        if os.environ.get("SPARK_GRAFT_WARMUP_DEBUG"):
-            import traceback
-
-            traceback.print_exc()
-    finally:
-        shutil.rmtree(p, ignore_errors=True)
-
 
 def get_spark(
     app: str = "dedup",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
-    warmup: bool | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     shuffle_partitions = shuffle_partitions or max(cores * 2, 8)
     # heap must scale with concurrent tasks: each scan task of a binary-heavy
     # table holds a columnar batch + decompression buffers (~100-200MB)
@@ -153,16 +72,4 @@ def get_spark(
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
-    # default: warm sessions with >= 8 cores (the bench/production shape);
-    # tiny sessions (tests at 4 cores, the 1/4-core scaling legs) skip it —
-    # there the warmup's own single-digit seconds rival what it saves.
-    # SPARK_GRAFT_WARMUP=0/1 overrides in either direction.
-    if warmup is None:
-        env = os.environ.get("SPARK_GRAFT_WARMUP")
-        warmup = cores >= 8 if env is None else env not in ("0", "false", "")
-    app_id = spark.sparkContext.applicationId
-    if warmup and app_id not in _WARMED:
-        _WARMED.add(app_id)
-        _warm_session(spark, cores)
-    return spark
+    return b.getOrCreate()

@@ -22,18 +22,15 @@ from . import lsh
 
 
 def verify_jaccard(
-    candidates: DataFrame, shingled: DataFrame, id_col: str = "rep_id", cfg: DedupConfig = DEFAULT,
-    all_scores: bool = False,
+    candidates: DataFrame, shingled: DataFrame, id_col: str = "rep_id", cfg: DedupConfig = DEFAULT
 ) -> DataFrame:
-    """(id_a, id_b) candidates -> verified pairs with exact shingle Jaccard.
+    """(id_a, id_b) candidates -> verified pairs with exact shingle Jaccard
+    at or above cfg.jaccard_threshold.
 
     `shingled` carries (id_col, shingles:array<long>). Joins are plain equi
-    joins on the id; the Jaccard itself is array_intersect/size — no UDF.
-    With all_scores=True the threshold filter is skipped and EVERY candidate
-    comes back scored — used by the metrics stage to measure inter-cluster
-    distance from the near-miss candidates."""
+    joins on the id; the Jaccard itself is array_intersect/size — no UDF."""
     sh = shingled.select(F.col(id_col), F.col("shingles"))
-    j = (
+    return (
         candidates.join(sh.withColumnsRenamed({id_col: "id_a", "shingles": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({id_col: "id_b", "shingles": "sh_b"}), "id_b")
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
@@ -41,11 +38,10 @@ def verify_jaccard(
             "score",
             F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
         )
-    )
-    if not all_scores:
-        j = j.where(F.col("score") >= F.lit(cfg.jaccard_threshold))
-    return j.select(
-        "id_a", "id_b", F.lit("minhash").alias("match_type"), F.col("score").cast("double")
+        .where(F.col("score") >= F.lit(cfg.jaccard_threshold))
+        .select(
+            "id_a", "id_b", F.lit("minhash").alias("match_type"), F.col("score").cast("double")
+        )
     )
 
 

@@ -3,10 +3,13 @@
 
 from __future__ import annotations
 
+import dataclasses
+
 import numpy as np
 import pytest
 
 from dedup.components import connected_components
+from dedup.config import DEFAULT
 from dedup.reference_impl import UnionFind
 
 
@@ -18,7 +21,9 @@ def _run(spark, edges: list[tuple[str, str]], vertices: list[str], threshold: in
     v = spark.createDataFrame([(x,) for x in vertices], "image_id string")
     return {
         r["image_id"]: r["cluster_id"]
-        for r in connected_components(e, v, driver_edge_threshold=threshold).collect()
+        for r in connected_components(
+            e, v, cfg=dataclasses.replace(DEFAULT, cc_driver_edge_threshold=threshold)
+        ).collect()
     }
 
 
@@ -89,10 +94,7 @@ def test_cc_byte_gate_forces_distributed(spark, monkeypatch):
     """Long-URI ids must push CC off the driver fast path even when the edge
     COUNT is tiny: the gate is byte-estimated (cfg.cc_driver_max_bytes), not
     row-count-only. Both paths must agree with the oracle either way."""
-    import dataclasses
-
     from dedup import components
-    from dedup.config import DEFAULT
 
     calls = []
     orig = components._driver_union_find
@@ -119,12 +121,8 @@ def test_cc_byte_gate_forces_distributed(spark, monkeypatch):
 
 def test_cc_route_gate_values():
     """cc_route is the gate connected_components applies: driver only for
-    a non-empty edge set within both bounds; the explicit row threshold
-    overrides the config's."""
-    import dataclasses
-
+    a non-empty edge set within both bounds, both read from the config."""
     from dedup.components import cc_route
-    from dedup.config import DEFAULT
 
     r = cc_route(10, 1000)
     assert r == {
@@ -133,7 +131,9 @@ def test_cc_route_gate_values():
         "driver_max_bytes": DEFAULT.cc_driver_max_bytes,
     }
     assert cc_route(0, 0)["route"] == "star"
-    assert cc_route(10, 1000, driver_edge_threshold=9)["route"] == "star"
-    assert cc_route(10, 1000, driver_edge_threshold=10)["route"] == "driver"
+    for threshold, route in ((9, "star"), (10, "driver")):
+        cfg = dataclasses.replace(DEFAULT, cc_driver_edge_threshold=threshold)
+        r = cc_route(10, 1000, cfg)
+        assert (r["route"], r["driver_edge_threshold"]) == (route, threshold)
     tiny = dataclasses.replace(DEFAULT, cc_driver_max_bytes=999)
     assert cc_route(10, 1000, tiny)["route"] == "star"
