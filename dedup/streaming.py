@@ -10,10 +10,15 @@ stage): a new row joins the cluster of any previously-seen identical
 byte-hash, caption, or pHash — the SAME three collapse keys the batch reps
 stage stacks (dedup/pipeline.py keys/reps) — preferring the
 highest-confidence match (exact > caption > pHash) when several state keys
-hit; otherwise it roots a new cluster at its own id. Fuzzy tiers (MinHash
-bands / pHash Hamming<=d) run as periodic batch compaction over the
-accumulated input — LSH band state is not meaningfully incremental at
-one-row granularity, and the batch pipeline is already resumable.
+hit; otherwise it roots a new cluster at the min image id of its in-batch
+group (its caption group, or for a NULL caption its byte-exact group). A
+micro-batch resolves this with ONE group lookup (_group_lookup: one
+aggregate over the batch's keys left-joined to the touched state, one
+broadcast join back) and folds its keys into state with ONE shuffle
+(StreamState.merge). Fuzzy tiers (MinHash bands / pHash Hamming<=d) run as
+periodic batch compaction over the accumulated input — LSH band state is
+not meaningfully incremental at one-row granularity, and the batch pipeline
+is already resumable.
 
 State keys are kind-prefixed ("e|sha|caption", "c|caption", "p|<phash>") so
 tiers can never collide in the flat key-state table — a caption that IS a
@@ -27,9 +32,10 @@ State layout (crash-safe, O(touched) I/O per micro-batch):
   key-state is hash-partitioned into N_BUCKETS by pmod(xxhash64(key), B).
   Each micro-batch READS only the buckets its keys hash into, WRITES merged
   versions of only those buckets as ONE plain parquet file set under a fresh
-  `v{batch_id}` directory (`bucket` and `version` are data columns; one
-  AQE-sized shuffle on bucket, so a small micro-batch writes one file, each
-  bucket's rows sit in one file, and a bucket filter prunes row groups), and
+  `v{batch_id}` directory (`bucket` and `version` are data columns; the
+  merge's one AQE-sized shuffle is on bucket, so a small micro-batch writes
+  one file, each bucket's rows sit in one file, and a bucket filter prunes
+  row groups), and
   then COMMITS by atomically renaming a JSON manifest that maps each bucket
   to the version dir holding its live rows (the io.py tmp+os.replace
   pattern). A read scans the live version dirs once, with the known schema,
@@ -52,7 +58,9 @@ State layout (crash-safe, O(touched) I/O per micro-batch):
 from __future__ import annotations
 
 import os
+import re
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .fs import get_fs, read_json, write_json_atomic
@@ -169,7 +177,10 @@ class StreamState:
                 if str(b) in man["buckets"]:
                     live.setdefault(man["buckets"][str(b)], []).append(b)
         if not live:
-            return spark.createDataFrame([], self.columns)
+            # the false filter optimizes to an empty LocalRelation, which a
+            # join prunes away; a bare createDataFrame([]) is an RDD scan
+            # that a join against it still shuffles
+            return spark.createDataFrame([], self.columns).where(F.lit(False))
         cols = [c.strip().split()[0] for c in self.columns.split(",")]
         # one scan over every live pointer. A version dir may still hold
         # superseded rows of buckets a later version rewrote, so each keeps
@@ -186,12 +197,28 @@ class StreamState:
             .parquet(*live).where(keep).select(*cols)
         )
 
+    def merge(self, seen: DataFrame, new: DataFrame, *aggs: F.Column) -> DataFrame:
+        """The touched buckets' merged state: `seen` (read_buckets of those
+        buckets) and the batch's `new` rows, aggregated per key by `aggs`,
+        as (bucket, key, *aggs). ONE shuffle, on bucket: the per-key
+        aggregate groups on (bucket, key), which that partitioning already
+        satisfies, so the rows arrive at commit() laid out per bucket with
+        no second exchange."""
+        return (
+            seen.unionByName(new)
+            .withColumn("bucket", self.bucket_col("key"))
+            .repartition("bucket")
+            .groupBy("bucket", "key")
+            .agg(*aggs)
+        )
+
     def commit(
         self, merged: DataFrame, touched: list[int], batch_id: int, gc: bool = True,
     ) -> list[str]:
         """Write merged state for `touched` buckets to a fresh version dir,
-        then atomically swing the manifest. `merged` carries
-        (key, rep_id, bucket) for exactly the touched buckets.
+        then atomically swing the manifest. `merged` carries (key, payload
+        columns, bucket) for exactly the touched buckets, hash-partitioned
+        on bucket as merge() returns it.
 
         Replay-safe: if a crash lands between the manifest swing and Spark's
         checkpoint commit, the replayed batch arrives here with a batch_id the
@@ -206,9 +233,9 @@ class StreamState:
         lineage may still read them has run: persist() alone does not close
         that window on a real cluster — a lost executor recomputes cached
         partitions through the original lineage, and MEMORY_AND_DISK
-        survives memory pressure, not executor death. Deferred orphans from
-        a crash are never referenced again (the manifest already points past
-        them)."""
+        survives memory pressure, not executor death. A crash before the
+        caller's deferred GC leaves unmapped dirs behind; the manifest never
+        references them again, and the next commit's GC removes them."""
         man = self.manifest()
         if man is not None:
             self._check_key_format(man)
@@ -219,19 +246,19 @@ class StreamState:
             # check_batch_monotonic BEFORE the batch publishes any output
             self.check_batch_monotonic(batch_id, man)
         vdir = os.path.join(self.root, f"v{batch_id:09d}")
-        # shuffle on bucket with no fixed partition count: AQE sizes the file
-        # count (one file for a small micro-batch), each bucket's rows land in
-        # one file, and sorting by bucket keeps them in contiguous row groups
-        merged.withColumn("version", F.lit(batch_id).cast("long")).repartition(
+        # merge()'s shuffle on bucket has no fixed partition count: AQE sizes
+        # the file count (one file for a small micro-batch), each bucket's
+        # rows land in one file, and sorting by bucket keeps them in
+        # contiguous row groups
+        merged.withColumn("version", F.lit(batch_id).cast("long")).sortWithinPartitions(
             "bucket"
-        ).sortWithinPartitions("bucket").write.mode("overwrite").parquet(vdir)
+        ).write.mode("overwrite").parquet(vdir)
         man = man or {"n_buckets": self.n_buckets, "buckets": {}, "key_format": KEY_FORMAT}
         if self.key_params is not None:
             man["key_params"] = self.key_params
         assert man.get("n_buckets", self.n_buckets) == self.n_buckets, (
             "n_buckets changed mid-stream; state is keyed on it"
         )
-        before = {_vdir(p) for p in man["buckets"].values()}
         # every touched bucket materializes: `touched` is the distinct bucket
         # set of this batch's keys, state rows were read from those buckets
         # only, and the min-merge never drops a key — so the written bucket
@@ -242,15 +269,26 @@ class StreamState:
         man["batch_id"] = batch_id
         self.fs.mkdirs(self.root)
         write_json_atomic(self.fs, self._manifest_path(), man)
-        # GC version dirs no bucket maps to any more, AFTER the commit point
-        # (a crash here only leaves orphans; the manifest never references
-        # them again). vdir itself is always still mapped.
-        replaced = sorted(before - {_vdir(p) for p in man["buckets"].values()})
+        # GC every version dir no bucket maps to any more, AFTER the commit
+        # point: the ones this swing unmapped, and any that a crash before
+        # an earlier deferred GC left behind (no lineage of this batch reads
+        # those: its state read already went through a manifest past them).
+        # A crash here only leaves orphans for the next commit. Compared by
+        # name, so a live dir is never deleted over a root spelled another
+        # way; vdir itself is always still mapped.
+        mapped = {os.path.basename(_vdir(p)) for p in man["buckets"].values()}
+        replaced = [
+            os.path.join(self.root, d) for d in self.fs.list_files(self.root)
+            if _VERSION_DIR.fullmatch(d) and d not in mapped
+        ]
         if not gc:
             return replaced
         for old in replaced:
             self.fs.delete(old, recursive=True)
         return []
+
+
+_VERSION_DIR = re.compile(r"v\d{9,}")
 
 
 def _legacy(pointer: str) -> bool:
@@ -263,95 +301,85 @@ def _vdir(pointer: str) -> str:
     return os.path.dirname(pointer) if _legacy(pointer) else pointer
 
 
-def _batch_assignments(keyed: DataFrame, hit: DataFrame) -> DataFrame:
-    """cluster_id per batch row: state hit wins — resolved PER IN-BATCH
-    GROUP, not per row: the highest-priority (then min-rep) hit across a
-    caption group's members binds the whole group. A per-row hit would
-    split a same-batch caption group whenever a state key (in practice the
-    cross-cutting pHash key — exact/caption keys are shared group-wide by
-    construction) matches only a subset of its members, and the split would
-    then CASCADE: the group's c| and e| keys fold with different reps, so
-    every later batch re-splits the same caption group through the exact
-    tier itself (r04 review finding). Group-hit else min image_id within
-    the batch's own caption group (caption equality subsumes the
-    sha+caption key, so byte-identical and caption-identical rows of one
-    batch land together),
-    else — for NULL-caption rows, where the caption equi-join can never match
-    — the same two steps over the byte-exact (k_exact) group: its members'
-    best state hit, then min image_id (r03 advice: byte-identical
-    NULL-caption rows used to self-root separately). The exact fallbacks sit
-    AFTER the caption steps in the coalesce: ahead of them they would split
-    same-caption different-bytes rows that the caption tier must merge
-    (they can in fact never match a captioned row — a NULL-caption k_exact
-    is 'e|sha', a captioned one 'e|sha|caption' — the order is defensive).
+def _keys(df: DataFrame, *cols: str) -> DataFrame:
+    """One row per non-NULL state key of each row of a keyed table:
+    (*cols, prio, key). The batch reps stage's three collapse keys,
+    kind-prefixed (module docstring) and priority-ordered: an exact hit
+    outranks a caption hit outranks a pHash hit. NULL keys (a NULL caption's
+    k_caption, a NULL phash's k_phash — plain concat propagates NULL) are
+    dropped: they can never match an equi-join lookup, so folding them into
+    state would only accumulate dead NULL-key rows across batches."""
+    return df.selectExpr(
+        *cols, "stack(3, 0, k_exact, 1, k_caption, 2, k_phash) AS (prio, key)"
+    ).where(F.col("key").isNotNull())
+
+
+def _group_lookup(keyed: DataFrame, seen: DataFrame) -> DataFrame:
+    """`keyed` plus cluster_id and hit_rep: one lookup of the batch's keys
+    against the touched state `seen`, resolved PER IN-BATCH GROUP.
+
+    The group key is g = coalesce(k_caption, k_exact): a captioned row's
+    group is its caption group (caption equality subsumes the sha+caption
+    key, so byte-identical and caption-identical rows of one batch land
+    together); a NULL-caption row's is its byte-exact group, so
+    byte-identical NULL-caption rows collapse rather than self-root
+    separately. The two kinds never meet: the `c|`/`e|` prefixes keep them
+    disjoint, and a NULL-caption k_exact is 'e|sha' (concat_ws skips the
+    NULL), which never equals a captioned row's 'e|sha|caption'.
+
+    hit_rep is the group's best state hit — the highest-priority (then min)
+    rep over every state key of every member — and it binds the WHOLE
+    group; cluster_id is hit_rep, else the group's min image_id. A per-row
+    hit would split a same-batch caption group whenever a state key (in
+    practice the cross-cutting pHash key — exact/caption keys are shared
+    group-wide by construction) matches only a subset of its members, and
+    the split would then CASCADE: the group's c| and e| keys fold with
+    different reps, so every later batch re-splits the same caption group
+    through the exact tier itself. Because every row of a group folds ALL
+    its keys with the one cluster id the group was assigned, exact/caption
+    reps of related keys are always equal, so the priority rule only
+    matters against the pHash key, which must never split a group.
 
     The pHash key deliberately does NOT get an in-batch root: two same-batch
     rows sharing a pHash but nothing else stay separate until a later
-    arrival (or compaction) links them through state — a pHash root ahead of
-    the caption root would split caption groups, and behind it it is
-    unreachable (every row resolves caption/exact first). Under-merge is the
+    arrival (or compaction) links them through state — a pHash group ahead
+    of the caption group would split caption groups. Under-merge is the
     safe direction: the stream contract is refine-never-split, and the
     compaction pipeline's edge set (which includes pHash-equality edges,
     kind 'simhash') heals it.
 
-    Shape: groupBy-min + BROADCAST joins, the batch pipeline's reps-stage
-    pattern — a window partitioned by caption would sort every same-caption
-    row of the micro-batch in ONE task (a viral caption = one straggler),
-    while the groupBy partial-aggregates map-side and the broadcast join
-    leaves the big side's rows in place (micro-batches bound the distinct-
-    key tables, so the broadcasts are always small). Plan-pinned windowless
-    in tests/test_streaming.py."""
-    hitk = keyed.join(hit, "image_id", "left")
-    # group-level hit: best (prio, then min rep) over each caption group's
-    # members / each NULL-caption exact group's members. groupBy-min
-    # partial-aggregates map-side (no hot-key window), and the
-    # distinct-group tables are micro-batch-bounded, so broadcasts stay
-    # small.
-    gh = F.min(F.struct("prio", "rep_id")).alias("gh")
-    cap_hits = (
-        hitk.where(F.col("k_caption").isNotNull() & F.col("rep_id").isNotNull())
-        .groupBy("k_caption").agg(gh)
-        .select("k_caption", F.col("gh.rep_id").alias("cap_hit"))
-    )
-    batch_roots = keyed.groupBy("k_caption").agg(F.min("image_id").alias("batch_root"))
-    # exact_hit/exact_root are only ever REACHED for NULL-caption rows
-    # (every captioned row resolves cap_hit/batch_root from its own caption
-    # group first), and a NULL-caption row's k_exact is 'e|sha' (concat_ws
-    # skips the NULL), which can never equal a captioned row's
-    # 'e|sha|caption' — so aggregating over only the NULL-caption slice is
-    # semantically identical and removes a full-batch aggregate + broadcast
-    # from every trigger (review finding).
-    exact_hits = (
-        hitk.where(F.col("k_caption").isNull() & F.col("rep_id").isNotNull())
-        .groupBy("k_exact").agg(gh)
-        .select("k_exact", F.col("gh.rep_id").alias("exact_hit"))
-    )
-    exact_roots = (
-        keyed.where(F.col("k_caption").isNull())
-        .groupBy("k_exact")
-        .agg(F.min("image_id").alias("exact_root"))
+    Shape: ONE groupBy-min over the exploded keys (the hit and the root are
+    two aggregates of the same groups) + ONE broadcast join back, the batch
+    pipeline's reps-stage pattern — a window partitioned by caption would
+    sort every same-caption row of the micro-batch in ONE task (a viral
+    caption = one straggler), while the groupBy partial-aggregates map-side
+    and the broadcast join leaves the big side's rows in place (micro-batches
+    bound the group table, so the broadcast is always small). Plan-pinned
+    windowless in tests/test_streaming.py."""
+    keyed = keyed.withColumn("g", F.coalesce("k_caption", "k_exact"))
+    # unmatched keys (left join) carry a NULL rep, which min() skips
+    matched = F.when(F.col("rep_id").isNotNull(), F.struct("prio", "rep_id"))
+    groups = (
+        _keys(keyed, "image_id", "g")
+        .join(seen, "key", "left")
+        .groupBy("g")
+        .agg(F.min(matched).alias("hit"), F.min("image_id").alias("root"))
+        .select("g", F.col("hit.rep_id").alias("hit_rep"), "root")
     )
     return (
-        keyed.join(F.broadcast(cap_hits), "k_caption", "left")
-        .join(F.broadcast(exact_hits), "k_exact", "left")
-        .join(F.broadcast(batch_roots), "k_caption", "left")
-        .join(F.broadcast(exact_roots), "k_exact", "left")
-        # final image_id fallback is defensive only (k_exact is never NULL,
-        # so exact_root always resolves — every row is in its own group)
-        .withColumn(
-            "cluster_id",
-            F.coalesce(
-                F.col("cap_hit"), F.col("exact_hit"),
-                F.col("batch_root"), F.col("exact_root"), F.col("image_id"),
-            ),
-        )
+        keyed.join(F.broadcast(groups), "g")
+        .withColumn("cluster_id", F.coalesce("hit_rep", "root"))
+        .drop("g", "root")
     )
 
 
 def _touched_buckets(df: DataFrame) -> list[int]:
     """Distinct sorted bucket ids of a keyed table (the set a micro-batch
-    reads and commits; must stay consistent with StreamState.bucket_col)."""
-    return sorted(r["bucket"] for r in df.select("bucket").distinct().collect())
+    reads and commits; must stay consistent with StreamState.bucket_col).
+    One job with no shuffle: the bucket column comes back as Arrow, 4 bytes
+    a key, and is deduplicated on the driver; a distinct() would add a
+    shuffle stage and its job to every trigger."""
+    return sorted(pc.unique(df.select("bucket").toArrow()["bucket"]).to_pylist())
 
 
 # per band key, state keeps at most this many (rep_id, rep_caption) rows —
@@ -363,7 +391,7 @@ def _touched_buckets(df: DataFrame) -> list[int]:
 BAND_STATE_CAP = 8
 
 
-def _fuzzy_tier(spark, assigned, hit, warehouse: str, cfg):
+def _fuzzy_tier(spark, assigned, warehouse: str, cfg):
     """Opt-in in-stream NEAR-dup tiers: link NEW clusters of this batch to
     previously-seen near-duplicate captions (MinHash) AND near-duplicate
     images (SimHash/pHash), each at the batch pipeline's OWN acceptance
@@ -462,7 +490,7 @@ def _fuzzy_tier(spark, assigned, hit, warehouse: str, cfg):
     handles = [keyed_b, keyed_s]
     try:
         return _fuzzy_tier_body(
-            spark, assigned, hit, cfg, band_state, sim_state, keyed_b, keyed_s, handles
+            spark, assigned, cfg, band_state, sim_state, keyed_b, keyed_s, handles
         )
     except BaseException:
         for h in handles:
@@ -470,7 +498,7 @@ def _fuzzy_tier(spark, assigned, hit, warehouse: str, cfg):
         raise
 
 
-def _fuzzy_tier_body(spark, assigned, hit, cfg, band_state, sim_state, keyed_b, keyed_s, handles):
+def _fuzzy_tier_body(spark, assigned, cfg, band_state, sim_state, keyed_b, keyed_s, handles):
     from .lsh import with_shingles
 
     # ONE unioned job materializes both caches and returns both tiers'
@@ -489,8 +517,12 @@ def _fuzzy_tier_body(spark, assigned, hit, cfg, band_state, sim_state, keyed_b, 
             h.unpersist()
         return assigned, None
     # lookups only for clusters that rooted new this batch; broadcast the
-    # (small, distinct) hit-rep set for the anti joins
-    hit_reps = hit.select(F.col("rep_id").alias("cluster_id")).distinct()
+    # (small, distinct) set of the groups' state-hit reps for the anti joins
+    hit_reps = (
+        assigned.where(F.col("hit_rep").isNotNull())
+        .select(F.col("hit_rep").alias("cluster_id"))
+        .distinct()
+    )
     accepts = []
     # state reads live INSIDE the touched guards: a batch that touches only
     # one tier (e.g. all captions NULL) must not pay the other tier's
@@ -542,10 +574,10 @@ def _fuzzy_tier_body(spark, assigned, hit, cfg, band_state, sim_state, keyed_b, 
     )
     handles.append(remap)
     # force the cached tables now, while the exact-tier state dirs this
-    # plan's lineage reads (via hit -> seen) still exist: the exact commit
-    # that runs between here and the fuzzy commits GCs the version dirs it
-    # supersedes, and a lazy re-read of them from inside the state folds
-    # would hit FileNotFound. persist() is MEMORY_AND_DISK, so a pressured
+    # plan's lineage reads (via assigned -> seen) still exist: the exact
+    # commit that runs between here and the fuzzy commits GCs the version
+    # dirs it supersedes, and a lazy re-read of them from inside the state
+    # folds would hit FileNotFound. persist() is MEMORY_AND_DISK, so a pressured
     # executor spills rather than recomputes through the dead lineage.
     # (keyed_b/keyed_s were materialized by the touched-bucket collects.)
     remap.count()
@@ -556,23 +588,17 @@ def _fuzzy_tier_body(spark, assigned, hit, cfg, band_state, sim_state, keyed_b, 
     )
 
     def _capped_fold(seen, keyed, payload_col, state):
+        payload = f"rep_{payload_col}"
         fold = keyed.join(F.broadcast(remap), "cluster_id", "left").select(
             "key",
             F.coalesce("fuzzy_rep", "cluster_id").alias("rep_id"),
-            F.col(payload_col).alias(f"rep_{payload_col}"),
+            F.col(payload_col).alias(payload),
         )
+        reps = F.slice(F.array_sort(F.collect_set(F.struct("rep_id", payload))), 1, BAND_STATE_CAP)
         return (
-            seen.unionByName(fold)
-            .groupBy("key")
-            .agg(
-                F.slice(
-                    F.array_sort(F.collect_set(F.struct("rep_id", f"rep_{payload_col}"))),
-                    1, BAND_STATE_CAP,
-                ).alias("reps")
-            )
-            .select("key", F.explode("reps").alias("r"))
-            .select("key", "r.rep_id", f"r.rep_{payload_col}")
-            .withColumn("bucket", state.bucket_col("key"))
+            state.merge(seen, fold, reps.alias("reps"))
+            .select("bucket", "key", F.explode("reps").alias("r"))
+            .select("key", "r.rep_id", f"r.{payload}", "bucket")
         )
 
     def commit(batch_id: int, touched) -> None:
@@ -626,33 +652,12 @@ def _assign_batch(
 
 
 def _assign_batch_body(spark, keyed, state, out_dir, batch_id, warehouse, fuzzy, cfg):
-    # the batch reps stage's three collapse keys, kind-prefixed (module
-    # docstring) and priority-ordered: an exact hit outranks a caption hit
-    # outranks a pHash hit, so a row matching several state keys adopts the
-    # highest-confidence rep — and, because every row of one caption group
-    # folds ALL its keys with the one cluster id the group was assigned,
-    # exact/caption reps of related keys are always equal: the priority rule
-    # reproduces the old min(rep) semantics exactly on the exact+caption
-    # lattice, and only the cross-cutting pHash key can introduce a
-    # lower-priority alternative (which must NOT split a caption group —
-    # hence the ordering, pinned in tests/test_streaming.py).
-    # NULL keys (a NULL caption's k_caption, a NULL phash's k_phash — plain
-    # concat propagates NULL) are dropped: they can never match an equi-join
-    # lookup, so folding them into state would only accumulate dead NULL-key
-    # rows across batches (r03 advice)
-    exploded = (
-        keyed.selectExpr(
-            "image_id", "stack(3, 0, k_exact, 1, k_caption, 2, k_phash) AS (prio, key)"
-        )
-        .where(F.col("key").isNotNull())
-        .withColumn("bucket", state.bucket_col("key"))
-    )
     # refuse a reset checkpoint BEFORE any output publishes (the batch's
     # stream_assignments dir would otherwise be overwritten first and the
     # refusal would fire only at state-commit time, leaving a corrupted
     # public table behind)
     state.check_batch_monotonic(batch_id)
-    touched = _touched_buckets(exploded)
+    touched = _touched_buckets(_keys(keyed).withColumn("bucket", state.bucket_col("key")))
     if not touched:
         # empty micro-batch (e.g. a zero-row input file): nothing to assign,
         # nothing to fold into state. Skipping the commit entirely is safe —
@@ -660,48 +665,26 @@ def _assign_batch_body(spark, keyed, state, out_dir, batch_id, warehouse, fuzzy,
         # version dir every empty trigger.
         return
     seen = state.read_buckets(spark, touched)
-    # inner join: only rows with at least one state match appear; min-struct
-    # picks the rep of the highest-priority (lowest prio) matching key, and
-    # partial-aggregates map-side like any min. prio rides along so
-    # _batch_assignments can re-minimize ACROSS a group's members.
-    # persisted: the hit subtree (state-bucket read + exploded join + agg)
-    # feeds TWO independent broadcast subplans of assigned0 (cap_hits and
-    # exact_hits) plus hit_reps in fuzzy mode — unpersisted it re-read the
-    # touched state buckets 2-3x per trigger. Slim (3 cols, micro-batch
-    # bounded); filled by the first broadcast build, before the exact
-    # commit GCs the state dirs its lineage reads.
-    hit = (
-        exploded.join(seen, "key")
-        .groupBy("image_id")
-        .agg(F.min(F.struct("prio", "rep_id")).alias("h"))
-        .select("image_id", F.col("h.prio").alias("prio"), F.col("h.rep_id").alias("rep_id"))
-        .persist()
-    )
-    # persist the slim assignment table too: its lineage (state bucket read
-    # + hit aggregation + four broadcast joins) is consumed by up to 5
-    # actions per fuzzy trigger (fuzzy cache fills, remap force, assignment
-    # write, exact fold) — the same scan-once move as `keyed` above, one
-    # level up. Filled by the first downstream action, before the exact
-    # commit GCs the state dirs the lineage reads.
-    assigned0 = (
-        _batch_assignments(keyed, hit)
-        .select("image_id", "caption", "phash", "k_exact", "k_caption", "k_phash", "cluster_id")
-        .persist()
-    )
+    # persist the slim assignment table: its lineage (state bucket read +
+    # the group lookup) is consumed by the assignment write and the exact
+    # fold, and in fuzzy mode also by the fuzzy cache fills, the hit-rep
+    # anti joins and the remap force — the same scan-once move as `keyed`
+    # above, one level up. Filled by the first downstream action, before
+    # the exact commit GCs the state dirs the lineage reads.
+    assigned0 = _group_lookup(keyed, seen).persist()
     assigned = assigned0
     band = None
     try:
         if fuzzy:
             from .config import DEFAULT
 
-            assigned, band = _fuzzy_tier(spark, assigned, hit, warehouse, cfg or DEFAULT)
+            assigned, band = _fuzzy_tier(spark, assigned, warehouse, cfg or DEFAULT)
         _commit_batch(spark, assigned, state, seen, out_dir, touched, batch_id, band)
     finally:
         # unpersist unconditionally: a failed commit (e.g. the
         # checkpoint-reset refusal) would otherwise pin the cached tables
         # for the life of a --follow application, one set per retried
         # micro-batch (review finding)
-        hit.unpersist()
         assigned0.unpersist()
         if band is not None:
             for h in band[2]:
@@ -713,17 +696,9 @@ def _commit_batch(spark, assigned, state, seen, out_dir, touched, batch_id, band
     out.write.mode("overwrite").parquet(out_dir)
 
     # fold this batch's keys into the TOUCHED buckets only; min(rep_id) keeps
-    # the merge idempotent under checkpoint replay. NULL keys filtered for
-    # the same reason as the lookup side: dead state that never equi-joins
-    new_keys = assigned.selectExpr(
-        "cluster_id AS rep_id", "stack(3, k_exact, k_caption, k_phash) AS key"
-    ).where(F.col("key").isNotNull())
-    merged = (
-        seen.unionByName(new_keys)
-        .groupBy("key")
-        .agg(F.min("rep_id").alias("rep_id"))
-        .withColumn("bucket", state.bucket_col("key"))
-    )
+    # the merge idempotent under checkpoint replay
+    new_keys = _keys(assigned, "cluster_id AS rep_id").select("key", "rep_id")
+    merged = state.merge(seen, new_keys, F.min("rep_id").alias("rep_id"))
     # exact commit with DEFERRED GC: the fuzzy fold jobs below may still
     # recompute lineage through the superseded exact-state dirs (executor
     # loss re-derives persisted partitions from the original plan), so the

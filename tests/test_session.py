@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 from dedup.session import get_spark
@@ -36,6 +37,8 @@ def test_get_spark_default_cores(spark, monkeypatch):
         return spark
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    # a fresh process: no context is live yet, so every option is passed
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
     monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2})
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     get_spark("tests")
@@ -45,3 +48,15 @@ def test_get_spark_default_cores(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
     get_spark("tests")
     assert seen["spark.master"] == "local[5]"
+
+
+def test_get_spark_on_live_context_keeps_its_conf(spark):
+    """Asked for other cores than the live context runs, get_spark applies
+    only the SQL options: spark.conf still reports the context's own master
+    and parallelism, not the asked-for ones."""
+    sc = spark.sparkContext
+    assert get_spark("other", cores=3, shuffle_partitions=8) is spark
+    assert spark.conf.get("spark.master") == sc.master
+    assert spark.conf.get("spark.default.parallelism") == str(sc.defaultParallelism)
+    assert spark.conf.get("spark.app.name") == sc.appName
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"

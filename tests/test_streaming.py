@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pyarrow.parquet as pq
+import pytest
 
 from dedup import synth
 from dedup.streaming import incremental_dedup_stream
@@ -163,18 +164,20 @@ def test_commit_replay_same_batch_id_is_idempotent(spark, tmp_path):
 
 def test_viral_caption_batch_plans_no_window(spark):
     """A single viral caption in a micro-batch must not become a one-task
-    window sort: the batch-root assignment is a groupBy-min + broadcast join
+    window sort: the group lookup is a groupBy-min + broadcast join
     (reps-stage shape), plan-pinned windowless here."""
-    from dedup.streaming import _batch_assignments
+    from dedup.streaming import _group_lookup
 
     keyed = spark.createDataFrame(
-        [(f"i{k:05d}", f"e{k}", "same caption for everyone") for k in range(500)],
-        "image_id string, k_exact string, k_caption string",
+        [
+            (f"i{k:05d}", f"e|{k}", "c|same caption for everyone", "p|7" if k == 7 else None)
+            for k in range(500)
+        ],
+        "image_id string, k_exact string, k_caption string, k_phash string",
     )
-    hit = spark.createDataFrame(
-        [("i00007", 2, "i00001")], "image_id string, prio int, rep_id string"
-    )
-    assigned = _batch_assignments(keyed, hit)
+    # one member's pHash key is in state: a priority-2 hit on one row only
+    seen = spark.createDataFrame([("p|7", "i00001")], "key string, rep_id string")
+    assigned = _group_lookup(keyed, seen)
     plan = assigned._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
@@ -182,6 +185,23 @@ def test_viral_caption_batch_plans_no_window(spark):
     # the state hit binds the WHOLE caption group — a per-row hit would
     # split the group between the hit's rep and the batch-root min id
     assert set(got.values()) == {"i00001"}
+
+
+def test_lookup_against_no_state_plans_no_join(spark, tmp_path):
+    """A micro-batch with no state to read (the first one) plans its group
+    lookup with no join against the empty state: no shuffle or broadcast
+    job is spent on a table with no rows."""
+    from dedup.streaming import StreamState, _group_lookup
+
+    keyed = spark.createDataFrame(
+        [("i1", "e|1", "c|a", "p|1"), ("i2", "e|2", "c|a", None)],
+        "image_id string, k_exact string, k_caption string, k_phash string",
+    )
+    seen = StreamState(str(tmp_path / "no_state")).read_buckets(spark, [0, 1])
+    assigned = _group_lookup(keyed, seen)
+    plan = assigned._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join") == 1, plan  # only the broadcast join back
+    assert {r["image_id"]: r["cluster_id"] for r in assigned.collect()} == {"i1": "i1", "i2": "i1"}
 
 
 def test_single_caption_micro_batch_one_cluster(spark, tmp_path):
@@ -856,11 +876,7 @@ def _fold(spark, state, pairs, batch_id, gc=True):
     touched = sorted(
         r["b"] for r in new.select(state.bucket_col("key").alias("b")).distinct().collect()
     )
-    merged = (
-        state.read_buckets(spark, touched).unionByName(new)
-        .groupBy("key").agg(F.min("rep_id").alias("rep_id"))
-        .withColumn("bucket", state.bucket_col("key"))
-    )
+    merged = state.merge(state.read_buckets(spark, touched), new, F.min("rep_id").alias("rep_id"))
     return state.commit(merged, touched, batch_id, gc=gc)
 
 
@@ -988,16 +1004,10 @@ def test_micro_batch_state_is_one_file_set_with_no_listing_job(spark, tmp_path):
     assert len(StreamState(os.path.join(wh, "stream_state")).manifest()["buckets"]) > 32
 
     sc = spark.sparkContext
-    group = f"job-shape-{tmp_path.name}"
-    sc.setJobGroup(group, "job shape probe")
-    try:
-        _assign_batch(spark.createDataFrame(synth.to_arrow(rows[200:]).to_pandas()), 1, wh)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup(group)
+    batch = spark.createDataFrame(synth.to_arrow(rows[200:]).to_pandas())
+    jobs = _job_ids(spark, f"job-shape-{tmp_path.name}", lambda: _assign_batch(batch, 1, wh))
     assert jobs
+    st = sc.statusTracker()
     descriptions = {}
     it = sc._jsc.sc().statusStore().jobsList(None).iterator()
     while it.hasNext():
@@ -1009,6 +1019,45 @@ def test_micro_batch_state_is_one_file_set_with_no_listing_job(spark, tmp_path):
         for sid in st.getJobInfo(jid).stageIds:
             info = st.getStageInfo(sid)
             assert info is None or info.numTasks != N_BUCKETS, (jid, sid)
+
+
+def _job_ids(spark, group, fn):
+    """The ids of the Spark jobs `fn()` launches, tagged by a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_warm_exact_micro_batch_job_count(spark, tmp_path):
+    """A warm exact-tier micro-batch (state already holds keys it hits)
+    runs at most 12 Spark jobs: the touched-bucket collect, ONE group
+    lookup feeding the assignment write, and ONE shuffle per state fold.
+    The per-image hit aggregate plus four aggregate + broadcast pairs and a
+    two-shuffle fold took 20."""
+    from dedup.streaming import _assign_batch
+
+    wh = str(tmp_path / "wh")
+    rows = synth.generate(200, seed=21)
+    late = []
+    for i, r in enumerate(rows[:20]):
+        c = dict(r)
+        c["image_id"] = f"late{i:05d}"
+        late.append(c)
+    _assign_batch(spark.createDataFrame(synth.to_arrow(rows[:100]).to_pandas()), 0, wh)
+    batch = spark.createDataFrame(synth.to_arrow(rows[100:] + late).to_pandas())
+    jobs = _job_ids(spark, f"warm-exact-{tmp_path.name}", lambda: _assign_batch(batch, 1, wh))
+    assert 0 < len(jobs) <= 12, sorted(jobs)
+    got = {
+        r["image_id"]: r["cluster_id"]
+        for r in spark.read.parquet(os.path.join(wh, "stream_assignments")).collect()
+    }
+    for i, r in enumerate(rows[:20]):
+        assert got[f"late{i:05d}"] == got[r["image_id"]]
 
 
 def _to_parent_layout(spark, root):
@@ -1072,3 +1121,128 @@ def test_parent_layout_state_folds_and_late_copies_join(spark, tmp_path):
     assert legacy and all(os.path.isdir(p) for p in legacy)
     assert any(p.endswith("v000000002") for p in man["buckets"].values())
     assert state.read_buckets(spark, list(range(64))).count() == n_rows
+
+
+# A child process that runs micro-batch 1 and dies by os._exit at a patched
+# point of the exact-tier commit: before it (the stream_assignments write
+# has run) or right after it returns (before its deferred version-dir GC).
+_CRASH_CHILD = """
+import os, sys
+from dedup.session import get_spark
+from dedup.streaming import StreamState, _assign_batch
+
+point, src, wh = sys.argv[1:]
+commit = StreamState.commit
+
+def crash(self, *a, **kw):
+    if point == "after_commit":
+        commit(self, *a, **kw)
+    os._exit(17)
+
+StreamState.commit = crash
+spark = get_spark("crash", cores=2, shuffle_partitions=4)
+_assign_batch(spark.read.parquet(src), 1, wh)
+"""
+
+
+def _crash_batches(tmp_path):
+    """Three micro-batch files. Batch 1 repeats every batch-0 row under a
+    new id, so it touches all of batch 0's buckets and its commit unmaps
+    v000000000 entirely."""
+    rows = synth.generate(90, seed=29)
+
+    def copies(src, tag):
+        out = []
+        for i, r in enumerate(src):
+            c = dict(r)
+            c["image_id"] = f"{tag}{i:05d}"
+            out.append(c)
+        return out
+
+    batches = [
+        rows[:40],
+        rows[40:70] + copies(rows[:40], "late1"),
+        rows[70:] + copies(rows[40:50], "late2"),
+    ]
+    paths = []
+    for i, b in enumerate(batches):
+        p = str(tmp_path / f"batch{i}.parquet")
+        pq.write_table(synth.to_arrow(b), p)
+        paths.append(p)
+    return paths
+
+
+def _snapshot(spark, wh):
+    from dedup.streaming import StreamState
+
+    asg = sorted(
+        tuple(r) for r in spark.read.parquet(os.path.join(wh, "stream_assignments")).collect()
+    )
+    state = StreamState(os.path.join(wh, "stream_state"))
+    live = sorted(tuple(r) for r in state.read_buckets(spark, list(range(64))).collect())
+    return asg, live
+
+
+@pytest.fixture(scope="module")
+def crash_reference(spark, tmp_path_factory):
+    """The three batches run with no crash: (input files, snapshot after
+    batch 1, snapshot after batch 2)."""
+    from dedup.streaming import _assign_batch
+
+    tmp = tmp_path_factory.mktemp("crash_ref")
+    paths = _crash_batches(tmp)
+    wh = str(tmp / "wh")
+    snaps = []
+    for bid, p in enumerate(paths):
+        _assign_batch(spark.read.parquet(p), bid, wh)
+        snaps.append(_snapshot(spark, wh))
+    return paths, snaps[1], snaps[2]
+
+
+@pytest.mark.parametrize("point", ["before_commit", "after_commit"])
+def test_exact_crash_replays_clean(spark, tmp_path, crash_reference, point):
+    """A process killed mid micro-batch — after the stream_assignments
+    write but before the exact-state commit, or after that commit but
+    before its deferred GC — replays the same batch id to assignments and
+    live state identical to an uncrashed run, with the manifest at that
+    batch id; no orphaned version dir survives the next commit."""
+    import json
+    import subprocess
+    import sys
+
+    from dedup.streaming import _assign_batch
+
+    paths, want1, want2 = crash_reference
+    wh = str(tmp_path / "wh")
+    root = os.path.join(wh, "stream_state")
+    man_path = os.path.join(root, "_state_manifest.json")
+    _assign_batch(spark.read.parquet(paths[0]), 0, wh)
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _CRASH_CHILD, point, paths[1], wh],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 17, out.stderr[-3000:]
+    # the crash landed where intended
+    assert os.path.isdir(os.path.join(wh, "stream_assignments", "batch_id=1"))
+    with open(man_path) as f:
+        man = json.load(f)
+    v0 = os.path.join(root, "v000000000")
+    if point == "before_commit":
+        assert man["batch_id"] == 0
+    else:
+        assert man["batch_id"] == 1
+        assert os.path.isdir(v0) and v0 not in man["buckets"].values()  # the orphan
+
+    _assign_batch(spark.read.parquet(paths[1]), 1, wh)  # checkpoint replay
+    with open(man_path) as f:
+        assert json.load(f)["batch_id"] == 1
+    assert _snapshot(spark, wh) == want1
+
+    _assign_batch(spark.read.parquet(paths[2]), 2, wh)
+    assert _snapshot(spark, wh) == want2
+    with open(man_path) as f:
+        mapped = set(json.load(f)["buckets"].values())
+    assert _vdirs_on_disk(root) == mapped

@@ -19,7 +19,7 @@ def main():
     from dedup import queries as q
     from dedup.session import get_spark
 
-    spark = get_spark("audit_plans", cores=32)
+    spark = get_spark("audit_plans")
     spark.sparkContext.setLogLevel("ERROR")
     from dedup.deploy import ensure_shipped
 

@@ -24,7 +24,7 @@ def main():
     from dedup.config import DEFAULT as CFG
     from dedup.session import get_spark
 
-    spark = get_spark("plans_r06", cores=32)
+    spark = get_spark("plans_r06")
     spark.sparkContext.setLogLevel("ERROR")
     from dedup.deploy import ensure_shipped
 
