@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -104,42 +104,6 @@ class DedupConfig:
         return hashlib.sha256(
             json.dumps(d, sort_keys=True).encode()
         ).hexdigest()[:16]
-
-    # the exec-only knobs' DEFAULTS at the last epoch whose formula hashed
-    # them (pre-exclusion, commits 466c645..591b4ce): a legacy stamp can
-    # only be reconstructed for runs that left these at default — custom
-    # exec values produced stamps we cannot enumerate (best-effort, and the
-    # common case: exec knobs exist precisely because nobody must tune them
-    # for correctness)
-    _LEGACY_EXEC_DEFAULTS = {
-        "cc_driver_edge_threshold": 1_000_000,
-        "cc_driver_max_bytes": 64 * 1024 * 1024,
-    }
-
-    def legacy_config_hashes(self) -> tuple[str, ...]:
-        """Hashes older engine versions actually STAMPED into manifests for
-        a result-identical config, reconstructed from the historical formula
-        (not re-derived from today's dataclass — hashing the current field
-        set reproduces config_hash()'s input, never an old stamp). One epoch
-        qualifies: the full-dict formula with the cc knobs at their then
-        defaults and no reps_hot_key_* fields (those were added later,
-        straight into the exclusion list, so they never entered any stamp).
-        Earlier epochs are deliberately NOT accepted: they predate
-        metrics_inter_sample_mod, so their committed metrics stage was
-        computed under different sampling semantics — acceptance would
-        resume over genuinely different stage output, not just a formula
-        rename. A warehouse stamped by the qualifying epoch with the same
-        semantic values must RESUME, not silently rebuild — at 100 TB that
-        migration costs a full recompute (r03 advice). Warehouse.is_complete
-        accepts these alongside config_hash(); writes always stamp the
-        current formula, so acceptance self-retires as stages recommit."""
-        d = {k: v for k, v in asdict(self).items() if k not in self._EXEC_ONLY}
-        d.update(self._LEGACY_EXEC_DEFAULTS)
-        return (
-            hashlib.sha256(
-                json.dumps(d, sort_keys=True).encode()
-            ).hexdigest()[:16],
-        )
 
 
 DEFAULT = DedupConfig()

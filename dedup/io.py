@@ -12,10 +12,17 @@ missing item: the old implementation assumed a driver-local POSIX root via
 os.listdir / pyarrow footers / os.replace).
 
 Resume contract (BASELINE.json "resumes mid-band"): a stage whose manifest
-exists AND records the current config_hash is read back instead of recomputed;
-a killed job therefore restarts at its first incomplete stage. Manifests are
-written atomically (tmp + rename) AFTER the parquet commit, so a crash between
-the two re-runs the stage idempotently (mode=overwrite).
+exists AND records the current FORMAT and config_hash is read back instead of
+recomputed; a killed job therefore restarts at its first incomplete stage.
+Manifests are written atomically (tmp + rename) AFTER the parquet commit, so a
+crash between the two re-runs the stage idempotently (mode=overwrite).
+
+FORMAT plays the role of Iceberg's table `format-version`: it names the
+manifest fields and stage layouts this engine reads. A manifest stamped with
+another format, or with none, is treated like a config-hash mismatch — the
+stage recomputes, with the same one-line notice — so every reader can rely on
+every field a current manifest carries: `schema`, `deps` and whatever the
+pipeline observes on the write (`observed`, `input_digest`).
 
 Row counts ride the write job itself as an `Observation` — no second pass
 over the data (the reference's repeated-count() inefficiency, SURVEY.md §3.1)
@@ -37,18 +44,16 @@ from pyspark.sql.types import StructType
 
 from .fs import get_fs, read_json, write_json_atomic
 
+# the on-disk format every manifest is stamped with: bump it whenever a
+# manifest field or a stage layout that a reader relies on changes, and
+# earlier warehouses recompute instead of each reader growing a fallback
+FORMAT = 1
+
 
 class Warehouse:
-    def __init__(
-        self, root: str, config_hash: str, run_id: str = "run0",
-        legacy_hashes: tuple[str, ...] = (),
-    ):
+    def __init__(self, root: str, config_hash: str, run_id: str = "run0"):
         self.root = root
         self.config_hash = config_hash
-        # accepted-but-not-written hashes (DedupConfig.legacy_config_hashes):
-        # manifests stamped by an older hash FORMULA for the same config
-        # values resume instead of silently rebuilding the warehouse
-        self.legacy_hashes = tuple(legacy_hashes)
         self.run_id = run_id
         self._fs = None
         self._obs_seq = 0
@@ -81,29 +86,18 @@ class Warehouse:
         m = self.manifest(stage)
         if not m:
             return False
-        got = m.get("config_hash")
-        if got == self.config_hash:
-            return True
-        if got in self.legacy_hashes:
-            # same config VALUES, older hash formula: results are identical
-            # by construction, so resume (r03 advice — don't turn a formula
-            # migration into a silent 100 TB rebuild). New writes stamp the
-            # current hash, so this acceptance self-retires.
-            if stage not in self._warned_stale:
-                self._warned_stale.add(stage)
-                print(
-                    f"warehouse: stage {stage!r} accepted under legacy "
-                    f"config-hash {got} (current {self.config_hash})",
-                    file=sys.stderr,
-                )
+        fmt, got = m.get("format"), m.get("config_hash")
+        if fmt == FORMAT and got == self.config_hash:
             return True
         if stage not in self._warned_stale:
             # surface silent full recomputes (r03 advice): at 100 TB a hash
-            # change turns "resume" into "rebuild", which should be loud
+            # or format change turns "resume" into "rebuild", which should
+            # be loud
             self._warned_stale.add(stage)
             print(
-                f"warehouse: stage {stage!r} manifest carries config_hash "
-                f"{got} != current {self.config_hash} — recomputing",
+                f"warehouse: stage {stage!r} manifest carries format {fmt}, "
+                f"config_hash {got} != current {FORMAT}, {self.config_hash} "
+                "— recomputing",
                 file=sys.stderr,
             )
         return False
@@ -112,12 +106,9 @@ class Warehouse:
         """The committed stage as a DataFrame, read with the schema its
         manifest recorded: no schema-inference job (a one-task footer merge
         per read). Parquet readers make every field nullable either way, so
-        the result matches an inferred read. A manifest without `schema`
-        (written before the field existed) or no manifest at all falls back
-        to inference."""
-        schema = (self.manifest(stage) or {}).get("schema")
-        reader = spark.read if schema is None else spark.read.schema(StructType.fromJson(schema))
-        return reader.parquet(self._dir(stage))
+        the result matches an inferred read."""
+        schema = StructType.fromJson(self.manifest(stage)["schema"])
+        return spark.read.schema(schema).parquet(self._dir(stage))
 
     def write(
         self,
@@ -128,9 +119,13 @@ class Warehouse:
         band_hi: int | None = None,
         extra: dict | None = None,
         observe_cols: dict | None = None,
-        deps: list[str] | None = None,
+        *,
+        deps: list[str],
     ) -> dict:
         """Overwrite stage dir, then atomically commit the manifest.
+
+        deps: the stage's actual input stages ([] for a root stage);
+        invalidate_after walks them.
 
         observe_cols: extra named aggregate Columns to observe on the SAME
         write job (zero extra passes); their values land in the manifest
@@ -163,6 +158,7 @@ class Warehouse:
         parts = [f for f in self.fs.list_files(path)
                  if f.startswith("part-") and f.endswith(".parquet")]
         man = {
+            "format": FORMAT,
             "run_id": self.run_id,
             "stage": stage,
             "band_lo": band_lo,
@@ -174,14 +170,7 @@ class Warehouse:
             "exec_ms": exec_ms,
             "committed_at": int(time.time() * 1000),
             "schema": df.schema.jsonValue(),
-            # the stage's actual input stages: invalidate_after walks this
-            # DAG instead of guessing dependents from commit order, which
-            # concurrent side stages make racy (an independent stage that
-            # happened to commit later would be dropped and recomputed).
-            # None = caller didn't record deps (ad-hoc writers): the field
-            # stays absent and invalidation falls back to the time cut;
-            # [] = a root stage with genuinely no stage inputs.
-            **({"deps": sorted(deps)} if deps is not None else {}),
+            "deps": sorted(deps),
             **({"observed": observed} if observed else {}),
             **{k: (v() if callable(v) else v) for k, v in (extra or {}).items()},
         }
@@ -217,10 +206,9 @@ class Warehouse:
         # the journal alone can miss a stage whose manifest committed but
         # whose lineage append never ran (crash between write_json_atomic
         # and _append_lineage): union in every _manifest_*.json actually on
-        # disk, otherwise invalidation (deps walk AND time cut both iterate
-        # this list) would silently keep such a stage marked complete over
-        # rebuilt inputs — stale reuse, the one failure resume must never
-        # have
+        # disk, otherwise invalidation (whose deps walk iterates this list)
+        # would silently keep such a stage marked complete over rebuilt
+        # inputs — stale reuse, the one failure resume must never have
         for name in self.fs.list_files(self.root):
             if name.startswith("_manifest_") and name.endswith(".json"):
                 s = name[len("_manifest_"):-len(".json")]
@@ -228,53 +216,32 @@ class Warehouse:
                     seen.append(s)
         return seen
 
-    def invalidate_after(self, stage: str, ordered_stages: list[str] | None = None) -> None:
-        """Drop manifests for `stage` and every stage that may depend on it
-        (kill/resume tests, stage rebuilds).
+    def invalidate_after(self, stage: str) -> None:
+        """Drop manifests for `stage` and its transitive dependents, and
+        nothing else (kill/resume tests, stage rebuilds).
 
-        With no explicit list, the cut walks the RECORDED dependency DAG
-        (each manifest's "deps" names its actual input stages): drop `stage`
-        plus its transitive dependents, and nothing else. Commit ORDER is not
-        a safe proxy in either direction — concurrent side stages make the
-        order of independent stages racy (an independent stage that happened
-        to commit later would be dropped and recomputed: wasteful, and flaky
-        for resume tests), and journal first-seen order spans regroupings
-        (a band-group name first committed in a later run appears after its
-        own dependents). For pre-deps warehouses (any manifest missing the
-        field) the cut falls back to CURRENT manifest commit time: a stage
-        committed at time T consumed only inputs committed before T, so
-        dropping every stage with committed_at >= committed_at(stage) is a
-        conservative superset of its dependents (extra drops are safe
-        recomputes, never a stale reuse)."""
-        if ordered_stages is not None:
-            if stage in ordered_stages:
-                for s in ordered_stages[ordered_stages.index(stage):]:
-                    self.fs.delete(self._manifest_path(s))
+        The cut walks the RECORDED dependency DAG (each manifest's "deps"
+        names its actual input stages). Commit ORDER is not a safe proxy in
+        either direction — concurrent side stages make the order of
+        independent stages racy (an independent stage that happened to
+        commit later would be dropped and recomputed: wasteful, and flaky
+        for resume tests), and journal first-seen order spans regroupings (a
+        band-group name first committed in a later run appears after its own
+        dependents). A manifest of another format never resumes, so its
+        (possibly absent) deps need not be walked."""
+        if self.manifest(stage) is None:
             return
-        target = self.manifest(stage)
-        if target is None:
-            return
-        mans = {}
+        children: dict[str, set[str]] = {}
         for s in self.stage_order():
             m = self.manifest(s)
-            if m is not None:
-                mans[s] = m
-        if all("deps" in m for m in mans.values()):
-            children: dict[str, set[str]] = {}
-            for s, m in mans.items():
+            if m is not None and m.get("format") == FORMAT:
                 for d in m["deps"]:
                     children.setdefault(d, set()).add(s)
-            drop, frontier = {stage}, [stage]
-            while frontier:
-                for c in children.get(frontier.pop(), ()):
-                    if c not in drop:
-                        drop.add(c)
-                        frontier.append(c)
-            for s in drop:
-                self.fs.delete(self._manifest_path(s))
-            return
-        cut = target["committed_at"]
-        for s in self.stage_order():
-            m = self.manifest(s)
-            if m is not None and m["committed_at"] >= cut:
-                self.fs.delete(self._manifest_path(s))
+        drop, frontier = {stage}, [stage]
+        while frontier:
+            for c in children.get(frontier.pop(), ()):
+                if c not in drop:
+                    drop.add(c)
+                    frontier.append(c)
+        for s in drop:
+            self.fs.delete(self._manifest_path(s))

@@ -2,8 +2,8 @@
 
 Stage graph (SURVEY.md §3.4), declared in Pipeline.run as one Stage list: each
 stage a pure DataFrame transform committed to the warehouse with a manifest
-(resume = skip stages whose manifest matches the config hash — BASELINE.json
-"resumes mid-band"):
+(resume = skip stages whose manifest matches the format and config hash —
+BASELINE.json "resumes mid-band"):
 
   signatures      deps (): unique captions of a column-pruned
                   (image_id, caption) scan of the input -> 128-perm MinHash +
@@ -134,8 +134,6 @@ def exact_member_edges(
     the exact tier: concat_ws skips NULLs, so k_exact degrades to the bare
     sha — the same NULL contract the streaming tier pins in
     tests/test_streaming.py. Pinned by test_reps_null_caption_contract.
-    A warehouse committed before r04 resumes with the old edges until its
-    reps stage is invalidated (config_hash does not cover code).
     Semantics of /root/reference/eridu/etl/filter.py:51-57."""
     exploded = keys.select(
         "image_id",
@@ -469,10 +467,7 @@ class Pipeline:
         granularity where it matters."""
         self.cfg = cfg
         self.band_groups = band_groups
-        self.wh = Warehouse(
-            warehouse_root, cfg.config_hash(), run_id,
-            legacy_hashes=cfg.legacy_config_hashes(),
-        )
+        self.wh = Warehouse(warehouse_root, cfg.config_hash(), run_id)
 
     def _resolve_band_groups(self, n_sigs: int) -> int:
         if self.band_groups != "auto":
@@ -550,19 +545,16 @@ class Pipeline:
                 "decode_ok boolean, phash_ok boolean",
             ), digest
 
-        def fidelity_gate(recount: bool) -> None:
+        def fidelity_gate() -> None:
             # failures are counted ON the keys write job (no second pass) and
-            # land in the manifest; only a keys manifest from before the
-            # observation re-checks the committed slim table
-            bad = ((self.wh.manifest("keys") or {}).get("observed") or {}).get("bad_rows")
-            if bad is None and recount:
-                bad = out["keys"].where(~F.col("decode_ok") | ~F.col("phash_ok")).count()
+            # land in the manifest
+            bad = self.wh.manifest("keys")["observed"]["bad_rows"]
             if bad:
                 raise ValueError(f"{bad} rows failed the per-row fidelity invariant")
 
         # a resume whose committed keys already failed raises before any job
         if self.wh.is_complete("keys"):
-            fidelity_gate(recount=False)
+            fidelity_gate()
 
         def build_sigs():
             # unique captions -> minhash + shingles + winnow set in one Arrow
@@ -582,11 +574,9 @@ class Pipeline:
             return lsh.with_caption_sigs(uniq, "caption", cfg), digest
 
         def digest_check() -> None:
-            # zero jobs: both digests rode their stages' writes. A manifest
-            # from before the field skips the check
-            got = {s: (self.wh.manifest(s) or {}).get("input_digest", "?")
-                   for s in ("keys", "signatures")}
-            if "?" not in got.values() and got["keys"] != got["signatures"]:
+            # zero jobs: both digests rode their stages' writes
+            got = {s: self.wh.manifest(s)["input_digest"] for s in ("keys", "signatures")}
+            if got["keys"] != got["signatures"]:
                 raise ValueError(
                     "keys and signatures read different (image_id, caption) rows "
                     f"(digests {got}): the images DataFrame is not deterministic, "
@@ -618,13 +608,9 @@ class Pipeline:
             )
 
         def build_substring():
-            # pre-deps manifests (resumed warehouses) lack the observation ->
-            # None -> substring_edges keeps both verify branches (always
-            # correct); the manifest records which branch the plan kept. The
-            # committed `fps` make the candidate join Python-free (a table
-            # from before the column gets it from the caption kernel)
-            sig_man = self.wh.manifest("signatures") or {}
-            max_cap_len = sig_man.get("observed", {}).get("max_caption_len")
+            # the manifest records which verify branch the plan kept; the
+            # committed `fps` make the candidate join Python-free
+            max_cap_len = self.wh.manifest("signatures")["observed"]["max_caption_len"]
             edges = verify.substring_edges(
                 out["signatures"], "rep_id", "caption", cfg, max_container_len=max_cap_len,
             )
@@ -673,22 +659,18 @@ class Pipeline:
             )
 
         def build_assignments():
-            pairs_man = self.wh.manifest("pairs") or {}
-            gate = None
-            if "edge_bytes_est" in pairs_man.get("observed", {}):
-                # pairs rows always have id_a < id_b, so the src!=dst filter
-                # drops nothing: the committed count/bytes ARE the gate values
-                gate = (pairs_man["row_count"], pairs_man["observed"]["edge_bytes_est"])
+            # pairs rows always have id_a < id_b, so the src!=dst filter
+            # drops nothing: the committed count/bytes ARE the gate values
+            pairs_man = self.wh.manifest("pairs")
+            gate = (pairs_man["row_count"], pairs_man["observed"]["edge_bytes_est"])
             asg = connected_components(
                 out["pairs"].select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
                 out["keys"].select("image_id"),
                 cfg=cfg,
                 pre_gate=gate,
             )
-            # the CC route and the gate values behind it, as a manifest
-            # field (unknown here only for a pairs manifest from before the
-            # gate observation: connected_components then gates itself)
-            return asg, ({"cc": cc_route(*gate, cfg)} if gate is not None else None)
+            # the CC route and the gate values behind it, as a manifest field
+            return asg, {"cc": cc_route(*gate, cfg)}
 
         def declared():
             # a generator pulled inside the scheduler's walk: the gates
@@ -707,13 +689,13 @@ class Pipeline:
                     F.sum((~F.col("decode_ok") | ~F.col("phash_ok")).cast("int")), F.lit(0)
                 )
             }})
-            fidelity_gate(recount=True)
+            fidelity_gate()
             # reps: exact collapse (exact_member_edges has the skew contract).
             # Corpus size from the committed keys manifest: below the hot-key
             # threshold the viral-key detection sample runs zero extra jobs
             yield Stage("reps", ("keys",), lambda: exact_member_edges(
                 out["keys"], cfg.reps_hot_key_rows, cfg.reps_hot_key_cap,
-                corpus_rows=(self.wh.manifest("keys") or {}).get("row_count"),
+                corpus_rows=self.wh.manifest("keys")["row_count"],
             ), side=True)
             yield Stage("edges_simhash", ("keys",), build_simhash, side=True)
             sched.need(["signatures"])

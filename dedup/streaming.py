@@ -23,9 +23,10 @@ is already resumable.
 State keys are kind-prefixed ("e|sha|caption", "c|caption", "p|<phash>") so
 tiers can never collide in the flat key-state table — a caption that IS a
 decimal string must not equi-join a pHash key (the batch tier gets this for
-free from its (kind, k) pair). The prefix scheme is versioned in the state
-manifest (key_format); folding into a state written under another format
-refuses loudly rather than silently never matching.
+free from its (kind, k) pair). The prefix scheme and the file layout below
+are versioned in the state manifest (key_format); reading or folding into a
+state written under another format refuses loudly rather than silently never
+matching.
 
 State layout (crash-safe, O(touched) I/O per micro-batch):
 
@@ -49,11 +50,7 @@ State layout (crash-safe, O(touched) I/O per micro-batch):
       clusters;
     - per-batch I/O is proportional to the touched buckets, not O(|state|):
       untouched buckets' version dirs are never rewritten (asserted by mtime
-      in tests/test_streaming.py);
-    - state written by the earlier per-bucket layout (`v{id}/bucket=b` leaf
-      dirs, no bucket column) stays readable: such a pointer's leaf dir
-      holds exactly its bucket's live rows, and the bucket's next commit
-      moves it to the current layout."""
+      in tests/test_streaming.py)."""
 
 from __future__ import annotations
 
@@ -67,12 +64,13 @@ from .fs import get_fs, read_json, write_json_atomic
 from .schema import IMAGES
 
 N_BUCKETS = 64
-# state-key encoding version: bumped whenever the key construction in
-# _assign_batch changes (v2 = kind-prefixed keys + pHash tier). A manifest
-# written under another format would never equi-join the new keys — state
-# lookups would silently miss and every arrival would re-root — so commit
-# and read refuse a mismatched format instead.
-KEY_FORMAT = 2
+# state format version: bumped whenever the key construction in
+# _assign_batch or the state's file layout changes (v2 = kind-prefixed keys
+# + pHash tier; v3 = one file set per version dir with bucket and version
+# columns). State written under another format would never equi-join the
+# new keys or would be read wrongly — lookups would silently miss and every
+# arrival would re-root — so commit and read refuse a mismatched format.
+KEY_FORMAT = 3
 
 
 class StreamState:
@@ -82,18 +80,16 @@ class StreamState:
     through the fs shim (dedup/fs.py), so the state warehouse works on
     hdfs://-s3a:// roots, not just driver-local disk (r03 judge item)."""
 
-    def __init__(self, root: str, n_buckets: int = N_BUCKETS,
-                 columns: str = "key string, rep_id string",
+    def __init__(self, root: str, columns: str = "key string, rep_id string",
                  key_params: str | None = None):
         self.root = root
-        self.n_buckets = n_buckets
         self.columns = columns  # state row schema (first column must be `key`)
         # cfg-derived key construction parameters (fuzzy tiers): the band
         # keys depend on the minhash/banding config and the sim keys on the
         # pHash chunking, so state written under one cfg would silently
         # never equi-join lookups computed under another — the exact failure
         # mode KEY_FORMAT refuses for code-level key changes. The manifest
-        # records the string and read/commit refuse on mismatch (None =
+        # records the string and read/commit refuse any difference (None =
         # keys are cfg-independent, e.g. the exact tier).
         self.key_params = key_params
         self._fs = None
@@ -113,32 +109,27 @@ class StreamState:
         return read_json(self.fs, self._manifest_path())
 
     def bucket_col(self, key_col: str) -> F.Column:
-        return F.pmod(F.xxhash64(key_col), F.lit(self.n_buckets)).cast("int")
+        return F.pmod(F.xxhash64(key_col), F.lit(N_BUCKETS)).cast("int")
 
-    def _check_key_format(self, man: dict) -> None:
-        got = man.get("key_format", 1)
-        if got != KEY_FORMAT:
+    def _check_format(self, man: dict) -> None:
+        """Refuse state this engine cannot read or extend: another key_format
+        (key construction or file layout), bucket count or key params would
+        make lookups silently miss accumulated keys, re-rooting every
+        arrival. A reader with no key params (it derives no keys from a cfg)
+        reads state of any params."""
+        want = {"key_format": KEY_FORMAT, "n_buckets": N_BUCKETS}
+        if self.key_params is not None:
+            want["key_params"] = self.key_params
+        bad = [k for k, v in want.items() if man.get(k) != v]
+        if bad:
             raise RuntimeError(
-                f"state at {self.root} was written with key_format {got}, this "
-                f"engine writes {KEY_FORMAT}: its keys would never equi-join, "
-                "silently re-rooting every arrival. Start a fresh state "
-                "warehouse (rerun compaction to rebuild assignments)."
-            )
-        # absent field = legacy manifest from before key_params existed:
-        # treated as compatible (a refusal would force a rebuild of state
-        # that IS key-compatible under the unchanged default cfg) and
-        # stamped by the next commit; only a RECORDED mismatch refuses.
-        if (
-            self.key_params is not None
-            and "key_params" in man
-            and man["key_params"] != self.key_params
-        ):
-            raise RuntimeError(
-                f"state at {self.root} was written with key params "
-                f"{man.get('key_params')!r}, this stream derives {self.key_params!r} "
-                "from its cfg: lookups would silently never match accumulated "
-                "state. Resume with the original cfg, or start a fresh state "
-                "warehouse (compaction rebuilds assignments under the new cfg)."
+                f"state at {self.root} was written with "
+                + ", ".join(f"{k} {man.get(k)!r}" for k in bad)
+                + "; this stream reads "
+                + ", ".join(f"{k} {want[k]!r}" for k in bad)
+                + ": lookups would silently never match accumulated state. "
+                "Resume with the cfg the state was written under, or start a "
+                "fresh state warehouse (compaction rebuilds assignments)."
             )
 
     def check_batch_monotonic(self, batch_id: int, man: dict | None = None) -> None:
@@ -172,7 +163,7 @@ class StreamState:
         man = self.manifest()
         live: dict[str, list[int]] = {}
         if man is not None:
-            self._check_key_format(man)
+            self._check_format(man)
             for b in buckets:
                 if str(b) in man["buckets"]:
                     live.setdefault(man["buckets"][str(b)], []).append(b)
@@ -182,16 +173,13 @@ class StreamState:
             # that a join against it still shuffles
             return spark.createDataFrame([], self.columns).where(F.lit(False))
         cols = [c.strip().split()[0] for c in self.columns.split(",")]
-        # one scan over every live pointer. A version dir may still hold
+        # one scan over every live version dir. A version dir may still hold
         # superseded rows of buckets a later version rewrote, so each keeps
-        # only the buckets mapped to it; a pointer of the earlier per-bucket
-        # layout (`v{id}/bucket=b`, files without bucket/version columns,
-        # so NULL here) is a leaf dir of exactly its bucket's live rows
-        keep = F.col("version").isNull()
+        # only the buckets mapped to it
+        keep = F.lit(False)
         for p, bs in live.items():
-            if not _legacy(p):
-                version = int(os.path.basename(p)[1:])
-                keep = keep | ((F.col("version") == version) & F.col("bucket").isin(bs))
+            version = int(os.path.basename(p)[1:])
+            keep = keep | ((F.col("version") == version) & F.col("bucket").isin(bs))
         return (
             spark.read.schema(f"{self.columns}, bucket int, version long")
             .parquet(*live).where(keep).select(*cols)
@@ -238,7 +226,7 @@ class StreamState:
         references them again, and the next commit's GC removes them."""
         man = self.manifest()
         if man is not None:
-            self._check_key_format(man)
+            self._check_format(man)
         if man is not None and man.get("batch_id") is not None:
             if man["batch_id"] == batch_id:
                 return []  # checkpoint-replay of the just-committed batch
@@ -253,12 +241,8 @@ class StreamState:
         merged.withColumn("version", F.lit(batch_id).cast("long")).sortWithinPartitions(
             "bucket"
         ).write.mode("overwrite").parquet(vdir)
-        man = man or {"n_buckets": self.n_buckets, "buckets": {}, "key_format": KEY_FORMAT}
-        if self.key_params is not None:
-            man["key_params"] = self.key_params
-        assert man.get("n_buckets", self.n_buckets) == self.n_buckets, (
-            "n_buckets changed mid-stream; state is keyed on it"
-        )
+        man = man or {"key_format": KEY_FORMAT, "n_buckets": N_BUCKETS,
+                      "key_params": self.key_params, "buckets": {}}
         # every touched bucket materializes: `touched` is the distinct bucket
         # set of this batch's keys, state rows were read from those buckets
         # only, and the min-merge never drops a key — so the written bucket
@@ -276,7 +260,7 @@ class StreamState:
         # A crash here only leaves orphans for the next commit. Compared by
         # name, so a live dir is never deleted over a root spelled another
         # way; vdir itself is always still mapped.
-        mapped = {os.path.basename(_vdir(p)) for p in man["buckets"].values()}
+        mapped = {os.path.basename(p) for p in man["buckets"].values()}
         replaced = [
             os.path.join(self.root, d) for d in self.fs.list_files(self.root)
             if _VERSION_DIR.fullmatch(d) and d not in mapped
@@ -289,16 +273,6 @@ class StreamState:
 
 
 _VERSION_DIR = re.compile(r"v\d{9,}")
-
-
-def _legacy(pointer: str) -> bool:
-    """A manifest pointer of the earlier per-bucket layout (`v{id}/bucket=b`)."""
-    return os.path.basename(pointer).startswith("bucket=")
-
-
-def _vdir(pointer: str) -> str:
-    """The version dir a manifest pointer lives in (the unit of GC)."""
-    return os.path.dirname(pointer) if _legacy(pointer) else pointer
 
 
 def _keys(df: DataFrame, *cols: str) -> DataFrame:
@@ -501,17 +475,20 @@ def _fuzzy_tier(spark, assigned, warehouse: str, cfg):
 def _fuzzy_tier_body(spark, assigned, cfg, band_state, sim_state, keyed_b, keyed_s, handles):
     from .lsh import with_shingles
 
-    # ONE unioned job materializes both caches and returns both tiers'
-    # touched-bucket sets (two sequential collects would pay one extra
-    # driver round-trip per trigger)
+    # ONE unioned collect with no shuffle of its own materializes both
+    # caches and returns both tiers' touched-bucket sets, deduplicated on the
+    # driver as in _touched_buckets (two sequential collects would pay one
+    # extra driver round-trip per trigger, a distinct() a shuffle stage and
+    # its job)
     tagged = (
         keyed_b.select(F.lit(0).alias("tier"), "bucket")
         .unionByName(keyed_s.select(F.lit(1).alias("tier"), "bucket"))
-        .distinct()
-        .collect()
+        .toArrow()
     )
-    touched_b = sorted(r["bucket"] for r in tagged if r["tier"] == 0)
-    touched_s = sorted(r["bucket"] for r in tagged if r["tier"] == 1)
+    touched_b, touched_s = (
+        sorted(pc.unique(tagged.filter(pc.equal(tagged["tier"], t))["bucket"]).to_pylist())
+        for t in (0, 1)
+    )
     if not touched_b and not touched_s:  # every caption AND phash NULL
         for h in handles:
             h.unpersist()

@@ -201,7 +201,7 @@ def _containment_hits(
 
     def norm(df):
         if "fps" not in df.columns:
-            # raw text: q29, q54, a signatures table from before the column
+            # raw text (q29, q54): the winnow sets come from the caption kernel
             df = lsh.with_caption_sigs(df, text_col, cfg, fields=("fps",))
         cap = F.lower(F.col(text_col))
         return df.select(F.col(id_col).alias("id"), cap.alias("caption"),

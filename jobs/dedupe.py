@@ -8,8 +8,9 @@ Production launch:
 
 On a real multi-executor cluster drop --cores and submit with --master; in
 this sandbox --cores N selects local[N]. The job is resumable: re-running
-with the same --warehouse and config skips completed stages (manifest +
-config-hash match) and finishes from the first incomplete stage.
+with the same --warehouse and config skips completed stages (manifest with
+the current format and config hash) and finishes from the first incomplete
+stage; a warehouse an earlier engine format wrote recomputes.
 """
 
 from __future__ import annotations

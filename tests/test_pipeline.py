@@ -74,7 +74,7 @@ def test_resume_after_kill(spark, synth_parquet, assignments):
     must resume from completed stages and reproduce identical assignments."""
     res, wh = assignments
     p = Pipeline(wh)
-    p.wh.invalidate_after("edges_simhash", STAGES)
+    p.wh.invalidate_after("edges_simhash")
     assert not p.wh.is_complete("assignments")
     assert p.wh.is_complete("signatures")  # earlier stages still valid
     images = spark.read.parquet(synth_parquet)
@@ -93,7 +93,7 @@ def test_resume_mid_band(spark, synth_parquet, assignments):
         s: p.wh.manifest(s)["committed_at"]
         for s in ("scored_minhash_b00_07", "scored_minhash_b08_15")
     }
-    p.wh.invalidate_after("scored_minhash_b16_23", STAGES)
+    p.wh.invalidate_after("scored_minhash_b16_23")
     assert p.wh.is_complete("scored_minhash_b08_15")
     assert not p.wh.is_complete("scored_minhash_b16_23")
     images = spark.read.parquet(synth_parquet)
@@ -175,8 +175,7 @@ def test_auto_band_groups_small_input(spark, synth_parquet, assignments, tmp_pat
     # mid-band resume contract still holds in auto mode: invalidate the
     # group stage and rerun — earlier stages reused, result identical
     before_sigs = p.wh.manifest("signatures")["committed_at"]
-    p.wh.invalidate_after("scored_minhash_b00_31", STAGES + ["scored_minhash_b00_31"])
-    p.wh.invalidate_after("edges_minhash", STAGES)
+    p.wh.invalidate_after("scored_minhash_b00_31")
     assert p.wh.is_complete("signatures")
     res3 = {r["image_id"]: r["cluster_id"] for r in p.run(spark, images).collect()}
     assert res3 == res
@@ -240,7 +239,7 @@ def test_resume_with_auto_band_groups(spark, synth_parquet):
     ts = p.wh.manifest("scored_minhash_b00_31")["committed_at"]
 
     p2 = Pipeline(wh, band_groups="auto")
-    p2.wh.invalidate_after("edges_simhash", STAGES)
+    p2.wh.invalidate_after("edges_simhash")
     res2 = {r["image_id"]: r["cluster_id"] for r in p2.run(spark, images).collect()}
     assert res2 == res
     # the committed band group was reused, not recomputed
@@ -341,10 +340,11 @@ def test_nondeterministic_input_raises(spark, tmp_path):
         Pipeline(str(tmp_path / "wh")).run(spark, images.where(coin("image_id")))
 
 
-def test_signatures_without_fps_resume(spark, tmp_path):
-    """A signatures table committed before the `fps` column (and before the
-    input digest) resumes as it is: the substring pass computes the winnow
-    sets through the caption kernel and gives the same edges."""
+def test_signatures_without_format_recomputes(spark, tmp_path):
+    """A signatures table an earlier engine committed (no `fps` column, and a
+    manifest without `input_digest` or `format`) does not resume: the rerun
+    recomputes it with `fps`, and the substring pass over it gives the same
+    edges and clusters."""
     import json
     import os
     import shutil
@@ -360,7 +360,7 @@ def test_signatures_without_fps_resume(spark, tmp_path):
     before = edges()
     assert before  # synth captions carry fragment pairs
     # rewrite the committed table without the column, and its manifest
-    # without the column in `schema` and without `input_digest`
+    # without the column in `schema`, `input_digest` and `format`
     sig_dir, old_dir = os.path.join(wh, "signatures"), str(tmp_path / "sig_old")
     shutil.move(sig_dir, old_dir)
     spark.read.parquet(old_dir).drop("fps").write.parquet(sig_dir)
@@ -368,17 +368,18 @@ def test_signatures_without_fps_resume(spark, tmp_path):
     with open(path) as f:
         man = json.load(f)
     man["schema"]["fields"] = [c for c in man["schema"]["fields"] if c["name"] != "fps"]
-    del man["input_digest"]
+    del man["input_digest"], man["format"]
     with open(path, "w") as f:
         json.dump(man, f)
     p.wh.invalidate_after("edges_substring")
-    assert not p.wh.is_complete("pairs")
+    assert not p.wh.is_complete("signatures") and not p.wh.is_complete("pairs")
 
     res = {r["image_id"]: r["cluster_id"] for r in Pipeline(wh).run(spark, images).collect()}
     assert res == oracle_clusters(rows, oracle_pairs(rows))
     assert edges() == before
-    assert p.wh.manifest("signatures")["committed_at"] == man["committed_at"]  # not rewritten
-    assert "fps" not in spark.read.parquet(sig_dir).columns
+    new = p.wh.manifest("signatures")
+    assert new["committed_at"] > man["committed_at"] and "input_digest" in new  # rewritten
+    assert "fps" in spark.read.parquet(sig_dir).columns
 
 
 def test_failed_fidelity_resume_launches_no_job(spark, tmp_path):

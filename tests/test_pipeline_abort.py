@@ -8,6 +8,9 @@ and no cache the run held is still persisted; and that a rerun without the
 patch resumes to the oracle's clusters. Side jobs that must be in flight at
 the failure are slowed by a one-task Python UDF that sleeps per row, so a
 leak would keep a job active for minutes.
+
+The crash test kills a child process with os._exit (no `finally` runs) at
+one of a stage's commit points and reruns the pipeline in this process.
 """
 
 from __future__ import annotations
@@ -240,3 +243,68 @@ def test_sa_branch_predicate():
     assert verify.sa_branch(2047) == "elided"
     assert verify.sa_branch(2048) == "live"
     assert verify.sa_branch(100, sa_min_container_len=64) == "live"
+
+
+# A child process that runs the pipeline and dies by os._exit at one commit
+# point of `stage`: after its parquet write but before its manifest, or
+# after the manifest but before its lineage append.
+_CRASH_CHILD = """
+import os, sys
+from dedup import io
+from dedup.pipeline import Pipeline
+from dedup.session import get_spark
+
+point, stage, src, wh = sys.argv[1:]
+write_manifest, append_lineage = io.write_json_atomic, io.Warehouse._append_lineage
+
+def manifest_or_crash(fs, path, obj):
+    if point == "before_manifest" and os.path.basename(path) == f"_manifest_{stage}.json":
+        os._exit(17)
+    write_manifest(fs, path, obj)
+
+def lineage_or_crash(self, man):
+    if point == "before_lineage" and man["stage"] == stage:
+        os._exit(17)
+    append_lineage(self, man)
+
+io.write_json_atomic = manifest_or_crash
+io.Warehouse._append_lineage = lineage_or_crash
+spark = get_spark("crash", cores=2, shuffle_partitions=4)
+Pipeline(wh).run(spark, spark.read.parquet(src))
+"""
+
+
+@pytest.mark.parametrize("point", ["before_manifest", "before_lineage"])
+def test_crash_at_stage_commit_point_resumes(spark, tmp_path, point):
+    """A process killed at one of the `pairs` stage's commit points — after
+    its parquet write but before its manifest, or after the manifest but
+    before the lineage append — resumes to the oracle's clusters. Every
+    stage whose manifest committed before the crash keeps its committed_at
+    (none is recomputed), and stage_order lists the crashed stage."""
+    import subprocess
+    import sys
+
+    rows = synth.generate(80, seed=31)
+    src = str(tmp_path / "images.parquet")
+    pq.write_table(synth.to_arrow(rows), src)
+    wh = str(tmp_path / "wh")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _CRASH_CHILD, point, "pairs", src, wh],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 17, out.stderr[-3000:]
+    # the crash landed where intended
+    p = Pipeline(wh)
+    committed = {s: m["committed_at"] for s in p.wh.stage_order() if (m := p.wh.manifest(s))}
+    assert os.path.isdir(os.path.join(wh, "pairs"))
+    assert ("pairs" in committed) == (point == "before_lineage")
+    assert "pairs" not in {entry["stage"] for entry in p.wh.lineage()}
+    assert "keys" in committed and "assignments" not in committed
+
+    res = {r["image_id"]: r["cluster_id"] for r in p.run(spark, spark.read.parquet(src)).collect()}
+    assert res == oracle_clusters(rows, oracle_pairs(rows))
+    for s, ts in committed.items():
+        assert p.wh.manifest(s)["committed_at"] == ts, s
+    assert "pairs" in p.wh.stage_order()

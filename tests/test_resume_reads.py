@@ -2,10 +2,10 @@
 
   - a committed stage reads back with the schema its manifest recorded:
     no Spark job, and the same schema (nullability included) and rows as
-    an inferred `spark.read.parquet`; a manifest without the field (the
-    earlier format) still reads by inference and resumes;
-  - the fidelity count of a resumed run comes from the keys manifest, with
-    a re-count only for a keys manifest from before the observation;
+    an inferred `spark.read.parquet`;
+  - a manifest without the `format` stamp (an earlier engine's) never
+    resumes: its stage recomputes, with a notice, to the same rows;
+  - the fidelity count of a resumed run comes from the keys manifest;
   - the CC route is recorded in the assignments manifest from the same
     helper connected_components gates on.
 """
@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dedup.fs import read_json, write_json_atomic
-from dedup.io import Warehouse
+from dedup.io import FORMAT, Warehouse
 
 
 def _jobs_in_group(spark, group: str, fn):
@@ -37,7 +37,7 @@ def _rows(df):
 
 
 def _strip(wh: Warehouse, stage: str, *path: str) -> None:
-    """Delete manifest[path[0]]...[path[-1]]: the earlier manifest format."""
+    """Delete manifest[path[0]]...[path[-1]]."""
     p = wh._manifest_path(stage)
     man = read_json(wh.fs, p)
     node = man
@@ -47,7 +47,7 @@ def _strip(wh: Warehouse, stage: str, *path: str) -> None:
     write_json_atomic(wh.fs, p, man)
 
 
-def test_known_schema_read_launches_no_job(spark, tmp_path):
+def test_known_schema_read_launches_no_job(spark, tmp_path, capsys):
     wh = Warehouse(str(tmp_path / "wh"), "cfg")
     # non-null, nested and nullable fields: the parquet reader relaxes
     # nullability on both paths, so the schemas must still agree exactly
@@ -69,12 +69,15 @@ def test_known_schema_read_launches_no_job(spark, tmp_path):
     assert [f.nullable for f in got.schema] == [f.nullable for f in inferred.schema]
     assert _rows(got) == _rows(inferred)
 
-    # earlier manifest format: no `schema` field -> inference, same result
-    _strip(wh, "stage_a", "schema")
-    assert wh.is_complete("stage_a")
-    old, jobs = _jobs_in_group(spark, "inferred-read", lambda: wh.read(spark, "stage_a"))
-    assert jobs, "the fallback read infers the schema (the job the manifest saves)"
-    assert old.schema == inferred.schema and _rows(old) == _rows(inferred)
+    # an earlier engine's manifest (no `format`) does not resume, loudly;
+    # the recompute stamps the format back and reads the same rows
+    want = _rows(inferred)
+    _strip(wh, "stage_a", "format")
+    assert not wh.is_complete("stage_a")
+    assert "stage 'stage_a' manifest carries format None" in capsys.readouterr().err
+    wh.write(df, "stage_a", deps=[])
+    assert wh.is_complete("stage_a") and wh.manifest("stage_a")["format"] == FORMAT
+    assert _rows(wh.read(spark, "stage_a")) == want
 
 
 def _corrupt_synth(tmp_path, n: int = 60, seed: int = 5) -> str:
@@ -91,8 +94,8 @@ def _corrupt_synth(tmp_path, n: int = 60, seed: int = 5) -> str:
 
 def test_fidelity_count_on_resume(spark, tmp_path):
     """A keys table holding a failing row fails every resume: from the
-    manifest's observed count (no job at all before the raise), and from a
-    re-count when the manifest predates the observation."""
+    manifest's observed count (no job at all before the raise), and from the
+    recomputed stage's count when the manifest carries no format."""
     from dedup.pipeline import Pipeline
 
     src = _corrupt_synth(tmp_path)
@@ -111,15 +114,17 @@ def test_fidelity_count_on_resume(spark, tmp_path):
     _, jobs = _jobs_in_group(spark, "fidelity-from-manifest", resume)
     assert jobs == []
 
-    _strip(p.wh, "keys", "observed")
-    _, jobs = _jobs_in_group(spark, "fidelity-recount", resume)
-    assert jobs  # the count() fallback
+    _strip(p.wh, "keys", "format")
+    _, jobs = _jobs_in_group(spark, "fidelity-recompute", resume)
+    assert jobs  # keys recomputed, and its new manifest records the count
+    man = p.wh.manifest("keys")
+    assert man["format"] == FORMAT and man["observed"]["bad_rows"] == 1
 
 
-def test_earlier_format_warehouse_resumes(spark, tmp_path):
-    """Manifests without `schema` and without the keys `bad_rows` (as the
-    earlier engine wrote them) resume the tail stages to the same tables,
-    and the CC route lands in the assignments manifest."""
+def test_earlier_format_warehouse_recomputes(spark, tmp_path):
+    """A warehouse whose manifests carry no `format` (as an earlier engine
+    wrote them) recomputes every stage to the same tables, and the CC route
+    lands in the assignments manifest."""
     import pyarrow.parquet as pq
 
     from dedup import synth
@@ -146,12 +151,13 @@ def test_earlier_format_warehouse_resumes(spark, tmp_path):
     assert cc == cc_route(pm["row_count"], pm["observed"]["edge_bytes_est"], p.cfg)
     assert cc["route"] == "driver"  # 80 rows: far under both driver bounds
 
-    for s in p.wh.stage_order():
-        _strip(p.wh, s, "schema")
-    _strip(p.wh, "keys", "observed")
-    for s in ("pairs", "assignments", "metrics", "member_scores"):
-        os.remove(p.wh._manifest_path(s))
+    stages = p.wh.stage_order()
+    committed = {s: p.wh.manifest(s)["committed_at"] for s in stages}
+    for s in stages:
+        _strip(p.wh, s, "format")
     Pipeline(wh).run(spark, images)
     assert tables() == before
-    assert "schema" in p.wh.manifest("assignments")
-    assert "schema" not in p.wh.manifest("signatures")  # resumed, not rewritten
+    for s in stages:  # every stage recomputed, none resumed
+        man = p.wh.manifest(s)
+        assert man["format"] == FORMAT and man["committed_at"] > committed[s], s
+    assert p.wh.manifest("assignments")["cc"] == cc

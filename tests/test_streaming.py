@@ -279,7 +279,7 @@ def test_null_caption_rows_root_themselves(spark, tmp_path):
     state."""
     from pyspark.sql import functions as F
 
-    from dedup.streaming import StreamState, _assign_batch
+    from dedup.streaming import N_BUCKETS, StreamState, _assign_batch
 
     wh = str(tmp_path / "wh")
     rows = synth.generate(10, seed=41)
@@ -295,7 +295,7 @@ def test_null_caption_rows_root_themselves(spark, tmp_path):
     assert got[rows[0]["image_id"]] == rows[0]["image_id"]
     assert all(v is not None for v in got.values())
     state = StreamState(os.path.join(wh, "stream_state"))
-    seen = state.read_buckets(spark, list(range(state.n_buckets)))
+    seen = state.read_buckets(spark, list(range(N_BUCKETS)))
     assert seen.where(F.col("rep_id").isNull()).count() == 0
     # and no NULL KEY rows entered state either (dead rows that never
     # equi-join but min-merge forever — r03 advice)
@@ -447,9 +447,10 @@ def test_phash_hit_priority_never_splits_caption_group(spark, tmp_path):
 
 
 def test_key_format_mismatch_refuses(spark, tmp_path):
-    """State written under another key encoding would never equi-join the
-    current keys — lookups silently miss and every arrival re-roots. Both
-    the read and the commit path must refuse instead."""
+    """State written under another key encoding, or hashed into another
+    bucket count, would never equi-join the current keys — lookups silently
+    miss and every arrival re-roots. Both the read and the commit path must
+    refuse instead."""
     import json
 
     import pytest as _pytest
@@ -476,6 +477,17 @@ def test_key_format_mismatch_refuses(spark, tmp_path):
             1, wh,
         )
 
+    from dedup.streaming import KEY_FORMAT, N_BUCKETS
+
+    man["key_format"], man["n_buckets"] = KEY_FORMAT, N_BUCKETS // 2
+    with open(man_path, "w") as f:
+        json.dump(man, f)
+    with _pytest.raises(RuntimeError, match=f"n_buckets {N_BUCKETS // 2}"):
+        state.read_buckets(spark, [0])
+    with _pytest.raises(RuntimeError, match="n_buckets"):
+        state.commit(spark.range(0), [0], 1)
+    assert not os.path.exists(os.path.join(wh, "stream_state", "v000000001"))
+
 
 def test_fuzzy_state_cfg_mismatch_refuses(spark, tmp_path):
     """The fuzzy tiers' state KEYS derive from cfg (minhash/banding for the
@@ -495,14 +507,14 @@ def test_fuzzy_state_cfg_mismatch_refuses(spark, tmp_path):
     )
     # changed minhash seed -> different band keys; chunking unchanged, but
     # the band-state read fires first and must refuse
-    with _pytest.raises(RuntimeError, match="key params"):
+    with _pytest.raises(RuntimeError, match="key_params"):
         _assign_batch(
             spark.createDataFrame(synth.to_arrow([_row("b0000001", CAP_B, 2, b"\x02")]).to_pandas()),
             1, wh, fuzzy=True, cfg=DedupConfig(minhash_seed=999),
         )
     # changed pHash chunking -> different sim keys; band params unchanged
     # relative to DEFAULT, so the refusal comes from the sim-state side
-    with _pytest.raises(RuntimeError, match="key params"):
+    with _pytest.raises(RuntimeError, match="key_params"):
         _assign_batch(
             spark.createDataFrame(synth.to_arrow([_row("b0000002", CAP_B, 3, b"\x03")]).to_pandas()),
             1, wh, fuzzy=True, cfg=DedupConfig(phash_chunks=4),
@@ -1060,67 +1072,80 @@ def test_warm_exact_micro_batch_job_count(spark, tmp_path):
         assert got[f"late{i:05d}"] == got[r["image_id"]]
 
 
+def test_warm_fuzzy_micro_batch_job_count(spark, tmp_path):
+    """A warm fuzzy-tier micro-batch gets both tiers' touched buckets from
+    one Arrow collect with no shuffle, deduplicated on the driver: at most 32
+    Spark jobs, counting the exact tier's and the fills of every cached
+    table the collect's lineage reaches. A distinct() before the collect
+    added a shuffle stage and its job to every fuzzy trigger (33)."""
+    from dedup.streaming import _assign_batch
+
+    wh = str(tmp_path / "wh")
+    rows = synth.generate(200, seed=21)
+    late = [dict(r, image_id=f"late{i:05d}") for i, r in enumerate(rows[:20])]
+    _assign_batch(spark.createDataFrame(synth.to_arrow(rows[:100]).to_pandas()), 0, wh, fuzzy=True)
+    batch = spark.createDataFrame(synth.to_arrow(rows[100:] + late).to_pandas())
+    jobs = _job_ids(
+        spark, f"warm-fuzzy-{tmp_path.name}", lambda: _assign_batch(batch, 1, wh, fuzzy=True)
+    )
+    assert 0 < len(jobs) <= 32, sorted(jobs)
+    got = {
+        r["image_id"]: r["cluster_id"]
+        for r in spark.read.parquet(os.path.join(wh, "stream_assignments")).collect()
+    }
+    for i, r in enumerate(rows[:20]):
+        assert got[f"late{i:05d}"] == got[r["image_id"]]
+
+
 def _to_parent_layout(spark, root):
     """Rewrite a state dir into the earlier per-bucket layout as that code
     wrote it: one `v{id}/bucket=b` leaf dir per bucket holding parquet files
-    WITHOUT a bucket column, and a manifest pointing at the leaf dirs."""
+    WITHOUT a bucket column, and a key_format 2 manifest pointing at the
+    leaf dirs."""
     import shutil
 
     from dedup.fs import write_json_atomic
-    from dedup.streaming import StreamState
+    from dedup.streaming import N_BUCKETS, StreamState
 
     state = StreamState(root)
     man = state.manifest()
     rows = (
-        state.read_buckets(spark, list(range(state.n_buckets)))
+        state.read_buckets(spark, list(range(N_BUCKETS)))
         .withColumn("bucket", state.bucket_col("key"))
         .toPandas()
     )
     shutil.rmtree(root)
     vdir = os.path.join(root, f"v{man['batch_id']:09d}")
     df = spark.createDataFrame(rows, "key string, rep_id string, bucket int")
-    df.repartition(state.n_buckets, "bucket").write.partitionBy("bucket").parquet(vdir)
+    df.repartition(N_BUCKETS, "bucket").write.partitionBy("bucket").parquet(vdir)
     man["buckets"] = {str(b): os.path.join(vdir, f"bucket={b}") for b in set(rows["bucket"])}
+    man["key_format"] = 2
+    del man["key_params"]
     write_json_atomic(state.fs, os.path.join(root, "_state_manifest.json"), man)
-    return len(rows)
 
 
-def test_parent_layout_state_folds_and_late_copies_join(spark, tmp_path):
-    """State committed by the earlier per-bucket layout (leaf dirs without a
-    bucket column) keeps working: late exact copies join their originals
-    while every touched bucket is still legacy, and again once the state
-    mixes migrated and legacy buckets; untouched legacy buckets stay put."""
-    from dedup.streaming import StreamState, _assign_batch
+def test_parent_layout_state_refuses(spark, tmp_path):
+    """State committed by the earlier per-bucket layout (key_format 2: leaf
+    dirs without a bucket column) refuses on read and on commit with the
+    fresh-warehouse remedy; the refused micro-batch publishes no assignments
+    and writes no version dir."""
+    from dedup.streaming import N_BUCKETS, StreamState, _assign_batch
 
     wh = str(tmp_path / "wh")
     root = os.path.join(wh, "stream_state")
     rows = synth.generate(60, seed=5)
     _assign_batch(spark.createDataFrame(synth.to_arrow(rows).to_pandas()), 0, wh)
-    n_rows = _to_parent_layout(spark, root)
+    _to_parent_layout(spark, root)
     state = StreamState(root)
-    assert state.read_buckets(spark, list(range(64))).count() == n_rows
-
-    def late(src, tag):
-        out = []
-        for i, r in enumerate(src):
-            c = dict(r)
-            c["image_id"] = f"late{tag}{i:05d}"
-            out.append(c)
-        return out
-
-    asg_dir = os.path.join(wh, "stream_assignments")
-    # batch 1 reads legacy buckets only; batch 2 re-hits some of batch 1's
-    # (now migrated) buckets plus legacy ones
-    for bid, src in ((1, rows[:5]), (2, rows[3:10])):
-        _assign_batch(spark.createDataFrame(synth.to_arrow(late(src, bid)).to_pandas()), bid, wh)
-        got = {r["image_id"]: r["cluster_id"] for r in spark.read.parquet(asg_dir).collect()}
-        for i, r in enumerate(src):
-            assert got[f"late{bid}{i:05d}"] == got[r["image_id"]], (bid, i)
-    man = state.manifest()
-    legacy = [p for p in man["buckets"].values() if os.path.basename(p).startswith("bucket=")]
-    assert legacy and all(os.path.isdir(p) for p in legacy)
-    assert any(p.endswith("v000000002") for p in man["buckets"].values())
-    assert state.read_buckets(spark, list(range(64))).count() == n_rows
+    with pytest.raises(RuntimeError, match="key_format 2.*fresh state warehouse"):
+        state.read_buckets(spark, list(range(N_BUCKETS)))
+    with pytest.raises(RuntimeError, match="key_format 2"):
+        state.commit(spark.range(0), [0], 1)
+    late = [dict(r, image_id=f"late{i:05d}") for i, r in enumerate(rows[:5])]
+    with pytest.raises(RuntimeError, match="key_format 2"):
+        _assign_batch(spark.createDataFrame(synth.to_arrow(late).to_pandas()), 1, wh)
+    assert not os.path.exists(os.path.join(wh, "stream_assignments", "batch_id=1"))
+    assert not os.path.exists(os.path.join(root, "v000000001"))
 
 
 # A child process that runs micro-batch 1 and dies by os._exit at a patched
