@@ -1600,11 +1600,6 @@ def q49(spark, sf):
     cluster root is the min image_id within the EARLIEST batch containing
     that caption (later arrivals hit state and adopt it), not the global
     min. zero-padded doc ids make string-min == numeric-min."""
-    import os as _os
-    import shutil as _shutil
-
-    from .streaming import incremental_dedup_stream
-
     d = (
         _t(spark, sf, "documents")
         .where(F.col("doc_id") < 400)
@@ -1625,43 +1620,19 @@ def q49(spark, sf):
             (F.col("doc_id") < 200).alias("is_b0"),
         )
     )
-    # stable digest, NOT builtin hash(): PYTHONHASHSEED salts hash() per
-    # process, which would mint (and leak) a fresh /tmp dir on every run
-    import hashlib as _hashlib
-
-    _tag = _hashlib.md5(_os.path.abspath(sf).encode()).hexdigest()[:8]
-    root = f"/tmp/q49_stream_{_tag}"
-    _shutil.rmtree(root, ignore_errors=True)
-    landing = _os.path.join(root, "landing")
-    _os.makedirs(landing)
-    pdf = d.toPandas()  # 400 rows — landing-file construction, not a data path
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for fname, mask, mtime in (("a.parquet", pdf["is_b0"], 1_000_000_000),
-                               ("b.parquet", ~pdf["is_b0"], 1_000_000_100)):
-        p = _os.path.join(landing, fname)
-        pq.write_table(pa.Table.from_pandas(pdf[mask].drop(columns=["is_b0"]),
-                                            preserve_index=False), p)
-        _os.utime(p, (mtime, mtime))
-    q = incremental_dedup_stream(
-        spark, landing, _os.path.join(root, "wh"), _os.path.join(root, "ckpt"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(_os.path.join(root, "wh", "stream_assignments"))
-        .select("image_id", "cluster_id")
-    )
+    b0 = d.where("is_b0").drop("is_b0")
+    b1 = d.where("NOT is_b0").drop("is_b0")
+    return _two_batch_stream(spark, sf, "q49", b0, b1, fuzzy=False)
 
 
-def _two_batch_fuzzy_stream(spark, sf, prefix, b0, b1):
-    """Shared q51/q52 scaffold: land b0 then b1 as separate micro-batches
-    (pinned mtimes order them), drain the incremental stream with the fuzzy
-    tiers on, and return the stream's assignment table. Keeping the landing
-    protocol in ONE place keeps the two oracle queries in lockstep — any
-    change here (mtime scheme, trigger size, checkpoint layout) applies to
-    both twins or neither."""
+def _two_batch_stream(spark, sf, prefix, b0, b1, fuzzy):
+    """Shared q49/q51/q52 scaffold: land b0 then b1 as separate
+    micro-batches (pinned mtimes + maxFilesPerTrigger=1 order them), drain
+    the incremental stream (fuzzy tiers on or off) into a fresh warehouse
+    under /tmp/{prefix}_stream_<digest of sf>, and return the stream's
+    assignment table. Keeping the landing protocol in ONE place keeps the
+    oracle queries in lockstep — any change here (mtime scheme, trigger
+    size, checkpoint layout) applies to every twin or none."""
     import hashlib as _hashlib
     import os as _os
     import shutil as _shutil
@@ -1671,6 +1642,8 @@ def _two_batch_fuzzy_stream(spark, sf, prefix, b0, b1):
 
     from .streaming import incremental_dedup_stream
 
+    # stable digest, NOT builtin hash(): PYTHONHASHSEED salts hash() per
+    # process, which would mint (and leak) a fresh /tmp dir on every run
     _tag = _hashlib.md5(_os.path.abspath(sf).encode()).hexdigest()[:8]
     root = f"/tmp/{prefix}_stream_{_tag}"
     _shutil.rmtree(root, ignore_errors=True)
@@ -1683,7 +1656,7 @@ def _two_batch_fuzzy_stream(spark, sf, prefix, b0, b1):
         _os.utime(p, (mtime, mtime))
     q_ = incremental_dedup_stream(
         spark, landing, _os.path.join(root, "wh"), _os.path.join(root, "ckpt"),
-        max_files_per_trigger=1, fuzzy=True,
+        max_files_per_trigger=1, fuzzy=fuzzy,
     )
     q_.awaitTermination()
     return (
@@ -1765,7 +1738,7 @@ def q51(spark, sf):
             F.xxhash64(F.col("vcap")).alias("phash"),
         )
     )
-    return _two_batch_fuzzy_stream(spark, sf, "q51", b0, b1)
+    return _two_batch_stream(spark, sf, "q51", b0, b1, fuzzy=True)
 
 
 _Q52_SQL = """
@@ -1803,7 +1776,7 @@ def q52(spark, sf):
     Bytes and captions are unique per row (md5 of the row id), so neither
     the exact tier nor the caption MinHash tier can link anything: only the
     pHash chunk-pair state + inline bit_count verify
-    (streaming._fuzzy_tier_body) produces the merges. The real streaming
+    (streaming._fuzzy_tier) produces the merges. The real streaming
     path runs with fuzzy=True.
 
     The SQL twin models the tier's acceptance criterion exactly — a batch-1
@@ -1842,7 +1815,7 @@ def q52(spark, sf):
         .withColumn("p0", hex60(F.col("doc_id") - 200)),
         F.expr(f"p0 ^ {mask}"),
     )
-    return _two_batch_fuzzy_stream(spark, sf, "q52", b0, b1)
+    return _two_batch_stream(spark, sf, "q52", b0, b1, fuzzy=True)
 
 
 _Q53_SQL = """

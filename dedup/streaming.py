@@ -15,10 +15,12 @@ group (its caption group, or for a NULL caption its byte-exact group). A
 micro-batch resolves this with ONE group lookup (_group_lookup: one
 aggregate over the batch's keys left-joined to the touched state, one
 broadcast join back) and folds its keys into state with ONE shuffle
-(StreamState.merge). Fuzzy tiers (MinHash bands / pHash Hamming<=d) run as
-periodic batch compaction over the accumulated input — LSH band state is
-not meaningfully incremental at one-row granularity, and the batch pipeline
-is already resumable.
+(StreamState.merge). With fuzzy=True, near-dup tiers (_fuzzy_tier: MinHash
+band state with exact-Jaccard verify, pHash chunk-pair state with inline
+Hamming verify) then link the batch's new clusters to previously-seen
+near-duplicates in-stream. Periodic batch compaction (compact_fuzzy) over
+the accumulated input supplies what the stream does not: in-batch near-dup
+merges and the transitive closure.
 
 State keys are kind-prefixed ("e|sha|caption", "c|caption", "p|<phash>") so
 tiers can never collide in the flat key-state table — a caption that IS a
@@ -41,7 +43,8 @@ State layout (crash-safe, O(touched) I/O per micro-batch):
   to the version dir holding its live rows (the io.py tmp+os.replace
   pattern). A read scans the live version dirs once, with the known schema,
   keeping only rows whose (version, bucket) the manifest maps; a version dir
-  is deleted once no bucket maps to it. Consequences:
+  no bucket maps to any more is deleted after the micro-batch's last state
+  commit. Consequences:
     - a crash mid-write leaves the old manifest (and the version dirs it
       maps) untouched -> the replayed batch recomputes against intact state
       and overwrites its own half-written v-dir idempotently;
@@ -200,9 +203,7 @@ class StreamState:
             .agg(*aggs)
         )
 
-    def commit(
-        self, merged: DataFrame, touched: list[int], batch_id: int, gc: bool = True,
-    ) -> list[str]:
+    def commit(self, merged: DataFrame, touched: list[int], batch_id: int) -> list[str]:
         """Write merged state for `touched` buckets to a fresh version dir,
         then atomically swing the manifest. `merged` carries (key, payload
         columns, bucket) for exactly the touched buckets, hash-partitioned
@@ -216,14 +217,15 @@ class StreamState:
         buckets before the (lazy) state read ran. So a committed batch_id is
         an early return, never a rewrite.
 
-        gc=False skips deleting the version dirs no bucket maps to any more
-        and returns them for the CALLER to delete once every job whose
-        lineage may still read them has run: persist() alone does not close
-        that window on a real cluster — a lost executor recomputes cached
-        partitions through the original lineage, and MEMORY_AND_DISK
+        Returns the version dirs no bucket maps to any more — the ones this
+        swing unmapped, and any that a crash before an earlier GC left behind
+        — and deletes none of them: the CALLER deletes them once every job
+        whose lineage may still read them has run. persist() alone does not
+        close that window on a real cluster — a lost executor recomputes
+        cached partitions through the original lineage, and MEMORY_AND_DISK
         survives memory pressure, not executor death. A crash before the
-        caller's deferred GC leaves unmapped dirs behind; the manifest never
-        references them again, and the next commit's GC removes them."""
+        caller's GC leaves unmapped dirs behind; the manifest never
+        references them again, and the next commit returns them."""
         man = self.manifest()
         if man is not None:
             self._check_format(man)
@@ -253,23 +255,14 @@ class StreamState:
         man["batch_id"] = batch_id
         self.fs.mkdirs(self.root)
         write_json_atomic(self.fs, self._manifest_path(), man)
-        # GC every version dir no bucket maps to any more, AFTER the commit
-        # point: the ones this swing unmapped, and any that a crash before
-        # an earlier deferred GC left behind (no lineage of this batch reads
-        # those: its state read already went through a manifest past them).
-        # A crash here only leaves orphans for the next commit. Compared by
-        # name, so a live dir is never deleted over a root spelled another
-        # way; vdir itself is always still mapped.
+        # listed AFTER the commit point and compared by name, so a live dir
+        # is never returned over a root spelled another way; vdir itself is
+        # always still mapped
         mapped = {os.path.basename(p) for p in man["buckets"].values()}
-        replaced = [
+        return [
             os.path.join(self.root, d) for d in self.fs.list_files(self.root)
             if _VERSION_DIR.fullmatch(d) and d not in mapped
         ]
-        if not gc:
-            return replaced
-        for old in replaced:
-            self.fs.delete(old, recursive=True)
-        return []
 
 
 _VERSION_DIR = re.compile(r"v\d{9,}")
@@ -365,7 +358,7 @@ def _touched_buckets(df: DataFrame) -> list[int]:
 BAND_STATE_CAP = 8
 
 
-def _fuzzy_tier(spark, assigned, warehouse: str, cfg):
+def _fuzzy_tier(spark, assigned, warehouse: str, cfg, hold):
     """Opt-in in-stream NEAR-dup tiers: link NEW clusters of this batch to
     previously-seen near-duplicate captions (MinHash) AND near-duplicate
     images (SimHash/pHash), each at the batch pipeline's OWN acceptance
@@ -376,8 +369,8 @@ def _fuzzy_tier(spark, assigned, warehouse: str, cfg):
     to up to BAND_STATE_CAP (rep_id, rep_caption) rows; band collisions
     propose candidate reps and a candidate merges ONLY if the exact shingle
     Jaccard between the two captions clears cfg.jaccard_threshold — the
-    same kernel (signatures.batch_shingles) and threshold the batch
-    pipeline's verify applies.
+    same kernel (lsh.with_shingles over signatures.batch_caption_sigs) and
+    threshold the batch pipeline's verify applies.
 
     Image tier: a second state table maps pHash chunk-PAIR keys
     ("s|ck|vi|vj", the same lsh._phash_keys_expr fragment as the batch
@@ -400,13 +393,12 @@ def _fuzzy_tier(spark, assigned, warehouse: str, cfg):
     NOT merge — state is read at its pre-batch commit — mirroring the
     exact tier's pHash in-batch rule: under-merge is the safe direction.
 
-    Returns (remapped assigned, (commit_fn, (touched_band, touched_sim),
-    persisted handles)) — the caller commits fuzzy state LAST (see
-    _assign_batch) so crash replay stays idempotent, and unpersists the
-    handles in a finally so a failed commit can't pin cache across retried
-    micro-batches."""
+    Every table it caches goes through the caller's `hold`. Returns
+    (remapped assigned, folds): folds is the lazy (state, merged, touched)
+    of the band and then the sim state, for each tier the batch touches;
+    the caller commits them after the exact state (see _assign_batch)."""
     from .deploy import ensure_shipped
-    from .lsh import _phash_keys_expr, band_keys_expr, with_minhash
+    from .lsh import _phash_keys_expr, band_keys_expr, with_minhash, with_shingles
 
     ensure_shipped(spark)  # the minhash pandas UDF runs on workers
     band_state = StreamState(
@@ -437,7 +429,7 @@ def _fuzzy_tier(spark, assigned, warehouse: str, cfg):
         .select("cluster_id", "caption")
         .distinct()
     )
-    keyed_b = (
+    keyed_b = hold(  # consumed by touched-buckets, lookup, and the fold
         with_minhash(cands_c, "caption", cfg)
         .select("cluster_id", "caption", F.explode(F.expr(band_keys_expr(cfg))).alias("bh"))
         # band index is already mixed into the hash (xxhash64(b, slice)),
@@ -447,9 +439,8 @@ def _fuzzy_tier(spark, assigned, warehouse: str, cfg):
             F.concat(F.lit("m|"), F.col("bh").cast("string")).alias("key"),
         )
         .withColumn("bucket", band_state.bucket_col("key"))
-        .persist()  # consumed by touched-buckets, lookup, and the fold
     )
-    keyed_s = (
+    keyed_s = hold(
         assigned.where(F.col("phash").isNotNull())
         .select("cluster_id", "phash")
         .distinct()
@@ -459,22 +450,7 @@ def _fuzzy_tier(spark, assigned, warehouse: str, cfg):
             F.concat_ws("|", F.lit("s"), F.col("k.ck"), F.col("k.vi"), F.col("k.vj")).alias("key"),
         )
         .withColumn("bucket", sim_state.bucket_col("key"))
-        .persist()
     )
-    handles = [keyed_b, keyed_s]
-    try:
-        return _fuzzy_tier_body(
-            spark, assigned, cfg, band_state, sim_state, keyed_b, keyed_s, handles
-        )
-    except BaseException:
-        for h in handles:
-            h.unpersist()
-        raise
-
-
-def _fuzzy_tier_body(spark, assigned, cfg, band_state, sim_state, keyed_b, keyed_s, handles):
-    from .lsh import with_shingles
-
     # ONE unioned collect with no shuffle of its own materializes both
     # caches and returns both tiers' touched-bucket sets, deduplicated on the
     # driver as in _touched_buckets (two sequential collects would pay one
@@ -490,9 +466,7 @@ def _fuzzy_tier_body(spark, assigned, cfg, band_state, sim_state, keyed_b, keyed
         for t in (0, 1)
     )
     if not touched_b and not touched_s:  # every caption AND phash NULL
-        for h in handles:
-            h.unpersist()
-        return assigned, None
+        return assigned, []
     # lookups only for clusters that rooted new this batch; broadcast the
     # (small, distinct) set of the groups' state-hit reps for the anti joins
     hit_reps = (
@@ -500,12 +474,10 @@ def _fuzzy_tier_body(spark, assigned, cfg, band_state, sim_state, keyed_b, keyed
         .select(F.col("hit_rep").alias("cluster_id"))
         .distinct()
     )
+    # a tier the batch does not touch (e.g. all captions NULL) reads no
+    # state: no manifest read or empty-DF construction every trigger
     accepts = []
-    # state reads live INSIDE the touched guards: a batch that touches only
-    # one tier (e.g. all captions NULL) must not pay the other tier's
-    # manifest read + empty-DF construction every trigger (review finding);
-    # the commit closure below is guarded on the same touched lists.
-    seen_b = None
+    seen_b = seen_s = None
     if touched_b:
         seen_b = band_state.read_buckets(spark, touched_b)
         m = (
@@ -527,7 +499,6 @@ def _fuzzy_tier_body(spark, assigned, cfg, band_state, sim_state, keyed_b, keyed
             uni > 0, F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / uni
         ).otherwise(F.lit(0.0))
         accepts.append(m.where(score >= cfg.jaccard_threshold).select("cluster_id", "rep_id"))
-    seen_s = None
     if touched_s:
         seen_s = sim_state.read_buckets(spark, touched_s)
         m_s = (
@@ -544,20 +515,8 @@ def _fuzzy_tier_body(spark, assigned, cfg, band_state, sim_state, keyed_b, keyed
     acc = accepts[0]
     for extra in accepts[1:]:
         acc = acc.unionByName(extra)
-    remap = (
-        acc.groupBy("cluster_id")
-        .agg(F.min("rep_id").alias("fuzzy_rep"))
-        .persist()
-    )
-    handles.append(remap)
-    # force the cached tables now, while the exact-tier state dirs this
-    # plan's lineage reads (via assigned -> seen) still exist: the exact
-    # commit that runs between here and the fuzzy commits GCs the version
-    # dirs it supersedes, and a lazy re-read of them from inside the state
-    # folds would hit FileNotFound. persist() is MEMORY_AND_DISK, so a pressured
-    # executor spills rather than recomputes through the dead lineage.
-    # (keyed_b/keyed_s were materialized by the touched-bucket collects.)
-    remap.count()
+    # filled by the assignment write's broadcast, read again by the folds
+    remap = hold(acc.groupBy("cluster_id").agg(F.min("rep_id").alias("fuzzy_rep")))
     remapped = (
         assigned.join(F.broadcast(remap), "cluster_id", "left")
         .withColumn("cluster_id", F.coalesce("fuzzy_rep", "cluster_id"))
@@ -578,119 +537,96 @@ def _fuzzy_tier_body(spark, assigned, cfg, band_state, sim_state, keyed_b, keyed
             .select("key", "r.rep_id", f"r.{payload}", "bucket")
         )
 
-    def commit(batch_id: int, touched) -> None:
-        tb, ts = touched
-        deferred: list[str] = []
-        if tb:
-            # defer the band GC past the sim commit: the sim fold job may
-            # recompute persisted lineage (remap -> seen_b) through the
-            # superseded band version dirs on executor loss — the same window
-            # the exact tier's deferred GC closes in _commit_batch
-            deferred = band_state.commit(
-                _capped_fold(seen_b, keyed_b, "caption", band_state), tb, batch_id,
-                gc=not ts,
-            )
-        if ts:
-            sim_state.commit(_capped_fold(seen_s, keyed_s, "phash", sim_state), ts, batch_id)
-        for old in deferred:
-            band_state.fs.delete(old, recursive=True)
-
-    return remapped, (commit, (touched_b, touched_s), handles)
+    folds = []
+    if touched_b:
+        folds.append((band_state, _capped_fold(seen_b, keyed_b, "caption", band_state), touched_b))
+    if touched_s:
+        folds.append((sim_state, _capped_fold(seen_s, keyed_s, "phash", sim_state), touched_s))
+    return remapped, folds
 
 
 def _assign_batch(
     batch: DataFrame, batch_id: int, warehouse: str,
     fuzzy: bool = False, cfg=None,
 ) -> None:
+    """One micro-batch: assign, publish, then commit each state in a fixed
+    order — exact, band, sim — and only after the last commit delete the
+    version dirs the commits unmapped.
+
+    Crash replay: a crash between two commits replays the batch, whose
+    earlier commits early-return (their manifests are already at this
+    batch_id) while the rest complete idempotently — the replayed rows all
+    resolve through the just-committed exact keys, so `assigned` and every
+    fold come out identical. No version dir of the batch's lineage is
+    deleted before the last commit, so no job of the batch can read a
+    deleted dir; a crash before the GC leaves orphans that the next
+    commit of the same state returns.
+
+    Every table the batch caches goes through `hold` and is released in the
+    one `finally`, so a failed commit (e.g. the checkpoint-reset refusal)
+    cannot pin cache for the life of a --follow application, one set per
+    retried micro-batch."""
     spark = batch.sparkSession
     state = StreamState(os.path.join(warehouse, "stream_state"))
     out_dir = os.path.join(warehouse, "stream_assignments", f"batch_id={batch_id}")
+    held: list[DataFrame] = []
 
-    # persist the SLIM keyed projection (ids + keys, no bytes): every
-    # downstream action — the touched-bucket collect, the fuzzy tiers, the
-    # assignment write, the state folds — would otherwise re-trigger the
-    # bytes scan + sha2 through `assigned`'s lineage (measured 3x in exact
-    # mode, 5x with fuzzy at 60k rows: the dominant per-batch cost). This is
-    # the stream analog of the batch pipeline's scan-bytes-once keys stage.
-    keyed = batch.select(
-        "image_id",
-        "caption",
-        "phash",  # the fuzzy image tier reads it off `assigned`
-        F.concat(
-            F.lit("e|"), F.concat_ws("|", F.sha2(F.col("bytes"), 256), F.col("caption"))
-        ).alias("k_exact"),
-        F.concat(F.lit("c|"), F.col("caption")).alias("k_caption"),
-        F.concat(F.lit("p|"), F.col("phash").cast("string")).alias("k_phash"),
-    ).persist()
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return df
+
     try:
-        _assign_batch_body(spark, keyed, state, out_dir, batch_id, warehouse, fuzzy, cfg)
-    finally:
-        keyed.unpersist()
-
-
-def _assign_batch_body(spark, keyed, state, out_dir, batch_id, warehouse, fuzzy, cfg):
-    # refuse a reset checkpoint BEFORE any output publishes (the batch's
-    # stream_assignments dir would otherwise be overwritten first and the
-    # refusal would fire only at state-commit time, leaving a corrupted
-    # public table behind)
-    state.check_batch_monotonic(batch_id)
-    touched = _touched_buckets(_keys(keyed).withColumn("bucket", state.bucket_col("key")))
-    if not touched:
-        # empty micro-batch (e.g. a zero-row input file): nothing to assign,
-        # nothing to fold into state. Skipping the commit entirely is safe —
-        # replaying an empty batch is a no-op — and avoids writing a dataless
-        # version dir every empty trigger.
-        return
-    seen = state.read_buckets(spark, touched)
-    # persist the slim assignment table: its lineage (state bucket read +
-    # the group lookup) is consumed by the assignment write and the exact
-    # fold, and in fuzzy mode also by the fuzzy cache fills, the hit-rep
-    # anti joins and the remap force — the same scan-once move as `keyed`
-    # above, one level up. Filled by the first downstream action, before
-    # the exact commit GCs the state dirs the lineage reads.
-    assigned0 = _group_lookup(keyed, seen).persist()
-    assigned = assigned0
-    band = None
-    try:
+        # refuse a reset checkpoint BEFORE any output publishes (the batch's
+        # stream_assignments dir would otherwise be overwritten first and the
+        # refusal would fire only at state-commit time, leaving a corrupted
+        # public table behind)
+        state.check_batch_monotonic(batch_id)
+        # the SLIM keyed projection (ids + keys, no bytes): every downstream
+        # action — the touched-bucket collect, the fuzzy tiers, the
+        # assignment write, the state folds — would otherwise re-trigger the
+        # bytes scan + sha2 (measured 3x in exact mode, 5x with fuzzy at 60k
+        # rows: the dominant per-batch cost). This is the stream analog of
+        # the batch pipeline's scan-bytes-once keys stage.
+        keyed = hold(batch.select(
+            "image_id",
+            "caption",
+            "phash",  # the fuzzy image tier reads it off `assigned`
+            F.concat(
+                F.lit("e|"), F.concat_ws("|", F.sha2(F.col("bytes"), 256), F.col("caption"))
+            ).alias("k_exact"),
+            F.concat(F.lit("c|"), F.col("caption")).alias("k_caption"),
+            F.concat(F.lit("p|"), F.col("phash").cast("string")).alias("k_phash"),
+        ))
+        touched = _touched_buckets(_keys(keyed).withColumn("bucket", state.bucket_col("key")))
+        if not touched:
+            # empty micro-batch (e.g. a zero-row input file): nothing to
+            # assign or fold. Replaying an empty batch is a no-op, and no
+            # dataless version dir is written every empty trigger.
+            return
+        seen = state.read_buckets(spark, touched)
+        # the slim assignment table, one level up from `keyed`: its lineage
+        # (state bucket read + the group lookup) feeds the assignment write
+        # and the exact fold, and in fuzzy mode also the fuzzy cache fills
+        # and the hit-rep anti joins
+        assigned = hold(_group_lookup(keyed, seen))
+        folds = []
         if fuzzy:
             from .config import DEFAULT
 
-            assigned, band = _fuzzy_tier(spark, assigned, warehouse, cfg or DEFAULT)
-        _commit_batch(spark, assigned, state, seen, out_dir, touched, batch_id, band)
+            assigned, folds = _fuzzy_tier(spark, assigned, warehouse, cfg or DEFAULT, hold)
+        assigned.select("image_id", "cluster_id").write.mode("overwrite").parquet(out_dir)
+        # fold this batch's keys into the TOUCHED buckets only; min(rep_id)
+        # keeps the merge idempotent under checkpoint replay
+        new_keys = _keys(assigned, "cluster_id AS rep_id").select("key", "rep_id")
+        exact = (state, state.merge(seen, new_keys, F.min("rep_id").alias("rep_id")), touched)
+        unmapped = []
+        for st, merged, tch in [exact, *folds]:
+            unmapped += [(st.fs, d) for d in st.commit(merged, tch, batch_id)]
+        for fs, d in unmapped:
+            fs.delete(d, recursive=True)
     finally:
-        # unpersist unconditionally: a failed commit (e.g. the
-        # checkpoint-reset refusal) would otherwise pin the cached tables
-        # for the life of a --follow application, one set per retried
-        # micro-batch (review finding)
-        assigned0.unpersist()
-        if band is not None:
-            for h in band[2]:
-                h.unpersist()
-
-
-def _commit_batch(spark, assigned, state, seen, out_dir, touched, batch_id, band):
-    out = assigned.select("image_id", "cluster_id")
-    out.write.mode("overwrite").parquet(out_dir)
-
-    # fold this batch's keys into the TOUCHED buckets only; min(rep_id) keeps
-    # the merge idempotent under checkpoint replay
-    new_keys = _keys(assigned, "cluster_id AS rep_id").select("key", "rep_id")
-    merged = state.merge(seen, new_keys, F.min("rep_id").alias("rep_id"))
-    # exact commit with DEFERRED GC: the fuzzy fold jobs below may still
-    # recompute lineage through the superseded exact-state dirs (executor
-    # loss re-derives persisted partitions from the original plan), so the
-    # old dirs are deleted only after every job of this batch has run
-    replaced = state.commit(merged, touched, batch_id, gc=False)
-    if band is not None:
-        # band-state commit LAST: a crash between the two commits replays
-        # the batch, whose exact-tier fold early-returns (already at this
-        # batch_id) while the band fold — recomputed from an `assigned`
-        # that is identical because every row now resolves through the
-        # just-committed exact keys — completes idempotently.
-        band_commit, band_touched, _handles = band
-        band_commit(batch_id, band_touched)
-    for old in replaced:
-        state.fs.delete(old, recursive=True)
+        for df in held:
+            df.unpersist()
 
 
 def compact_fuzzy(
@@ -698,13 +634,13 @@ def compact_fuzzy(
     cfg=None,
 ) -> DataFrame:
     """Periodic batch compaction of the FUZZY dedup tiers over everything
-    landed so far. The exact tier is incremental per micro-batch (above);
-    MinHash/pHash band state is not meaningfully incremental at one-row
-    granularity, so the full batch pipeline — already resumable mid-band —
-    runs over the accumulated landing dir. Its assignments supersede the
-    stream's exact-tier table (they refine it: exact-dup edges are a subset
-    of the pipeline's edge set, so compacted clusters only merge, never
-    split, stream clusters). Committed with full lineage under
+    landed so far. The stream's tiers are incremental per micro-batch
+    (above) but never merge in-batch near-dups or close transitively, so the
+    full batch pipeline — already resumable mid-band — runs over the
+    accumulated landing dir. Its assignments supersede the stream's table
+    (they refine it: every stream merge is a pair the pipeline accepts, and
+    _merge_stream_spans makes never-split structural). Committed with full
+    lineage under
     {warehouse}/compact/{run_id}; rerunning after more arrivals resumes from
     the first stage whose input changed (fresh run_id) or skips completed
     stages (same run_id)."""
@@ -729,9 +665,11 @@ def _merge_stream_spans(spark: SparkSession, res: DataFrame, warehouse: str) -> 
     already-published assignment there is strictly recall-positive and
     keeps the contract unconditional rather than
     modulo-capping. Violations are therefore rare-to-empty: the span table
-    (distinct stream->compact cluster pairs, grouped) is tiny and the
-    transitive closure runs as a driver union-find over only the violating
-    cluster ids."""
+    (distinct stream->compact cluster pairs, grouped) is tiny, and the
+    transitive closure is connected_components over its edges only (min-id
+    roots; the driver union-find route at this size)."""
+    from .components import connected_components
+
     sa_dir = os.path.join(warehouse, "stream_assignments")
     if not get_fs(sa_dir).exists(sa_dir):
         return res  # batch-only warehouse: nothing to reconcile
@@ -748,27 +686,17 @@ def _merge_stream_spans(spark: SparkSession, res: DataFrame, warehouse: str) -> 
     groups = [r["cids"] for r in spans.collect()]
     if not groups:
         return res
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for g in groups:
-        root = find(min(g))
-        for c in g:
-            rc = find(c)
-            a, b = sorted((root, rc))
-            parent[b] = a
-            root = a
-    remap = [(c, find(c)) for c in parent]
-    remap_df = spark.createDataFrame(remap, "cluster_id string, merged string")
+    # one edge from each spanning stream cluster's min compacted id to each
+    # of its compacted ids
+    edges = spark.createDataFrame(
+        [(min(g), c) for g in groups for c in g], "src string, dst string"
+    )
+    ids = spark.createDataFrame(sorted({(c,) for g in groups for c in g}), "id string")
+    roots = connected_components(edges, ids).select(
+        F.col("image_id").alias("cluster_id"), F.col("cluster_id").alias("merged")
+    )
     return (
-        res.join(F.broadcast(remap_df), "cluster_id", "left")
+        res.join(F.broadcast(roots), "cluster_id", "left")
         .select(
             "image_id",
             F.coalesce("merged", "cluster_id").alias("cluster_id"),

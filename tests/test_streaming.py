@@ -879,9 +879,10 @@ def test_fuzzy_crash_between_band_and_sim_commits_replays_clean(spark, tmp_path)
     assert got2 == got1
 
 
-def _fold(spark, state, pairs, batch_id, gc=True):
+def _fold(spark, state, pairs, batch_id):
     """One state fold as the exact tier does it: read the touched buckets,
-    min-merge the new (key, rep_id) pairs in, commit."""
+    min-merge the new (key, rep_id) pairs in, commit; returns the version
+    dirs the commit left for its caller to delete."""
     from pyspark.sql import functions as F
 
     new = spark.createDataFrame(pairs, "key string, rep_id string")
@@ -889,7 +890,7 @@ def _fold(spark, state, pairs, batch_id, gc=True):
         r["b"] for r in new.select(state.bucket_col("key").alias("b")).distinct().collect()
     )
     merged = state.merge(state.read_buckets(spark, touched), new, F.min("rep_id").alias("rep_id"))
-    return state.commit(merged, touched, batch_id, gc=gc)
+    return state.commit(merged, touched, batch_id)
 
 
 def _vdirs_on_disk(root):
@@ -934,40 +935,34 @@ def test_read_buckets_returns_only_live_versions(spark, tmp_path):
 
 
 def test_version_dir_gc_follows_manifest_refcount(spark, tmp_path):
-    """A version dir is deleted exactly when no bucket maps to it any more:
-    with gc=True the dirs on disk are always exactly the mapped ones; with
-    gc=False the commit deletes nothing and returns exactly the unmapped
-    dirs for the caller to delete."""
+    """A commit deletes no version dir: it returns exactly the dirs no
+    bucket maps to any more, for the caller to delete."""
     from dedup.streaming import StreamState
 
-    for gc in (True, False):
-        root = str(tmp_path / f"state_gc{gc}")
-        state = StreamState(root)
-        # v0 maps every bucket; fold 1 remaps < 24 (v0 still live), fold 2
-        # remaps >= 24 (v0 unmapped), fold 3 remaps < 24 again (v1 unmapped)
-        spans = [(0, 63, "r9"), (0, 23, "r5"), (24, 63, "r5"), (0, 23, "r3")]
-        vdir = lambda i: os.path.join(root, f"v{i:09d}")  # noqa: E731
-        unmapped = {0: [], 1: [], 2: [vdir(0)], 3: [vdir(1)]}
-        for bid, pairs in enumerate(_bucket_range_folds(spark, state, spans)):
-            before = _vdirs_on_disk(root) if bid else set()
-            ret = _fold(spark, state, pairs, bid, gc=gc)
-            mapped = set(state.manifest()["buckets"].values())
-            on_disk = _vdirs_on_disk(root)
-            assert mapped <= on_disk  # nothing still mapped is ever deleted
-            if gc:
-                assert ret == [] and on_disk == mapped, bid
-            else:
-                assert ret == unmapped[bid] and on_disk == before | {vdir(bid)}, bid
-                for d in ret:
-                    state.fs.delete(d, recursive=True)
-                assert _vdirs_on_disk(root) == mapped, bid
+    root = str(tmp_path / "state")
+    state = StreamState(root)
+    # v0 maps every bucket; fold 1 remaps < 24 (v0 still live), fold 2
+    # remaps >= 24 (v0 unmapped), fold 3 remaps < 24 again (v1 unmapped)
+    spans = [(0, 63, "r9"), (0, 23, "r5"), (24, 63, "r5"), (0, 23, "r3")]
+    vdir = lambda i: os.path.join(root, f"v{i:09d}")  # noqa: E731
+    unmapped = {0: [], 1: [], 2: [vdir(0)], 3: [vdir(1)]}
+    for bid, pairs in enumerate(_bucket_range_folds(spark, state, spans)):
+        before = _vdirs_on_disk(root) if bid else set()
+        ret = _fold(spark, state, pairs, bid)
+        mapped = set(state.manifest()["buckets"].values())
+        on_disk = _vdirs_on_disk(root)
+        assert mapped <= on_disk  # nothing still mapped is ever deleted
+        assert ret == unmapped[bid] and on_disk == before | {vdir(bid)}, bid
+        for d in ret:
+            state.fs.delete(d, recursive=True)
+        assert _vdirs_on_disk(root) == mapped, bid
 
 
 def test_fuzzy_tiers_gc_unmapped_version_dirs(spark, tmp_path):
-    """The fuzzy tiers' deferred band GC and the exact tier's deferred GC
-    leave, after every micro-batch, exactly the mapped version dirs of each
-    state on disk; a batch repeating the previous batch's keys unmaps (and
-    so deletes) that batch's dirs in all three states."""
+    """The one GC after a micro-batch's last commit leaves exactly the
+    mapped version dirs of each state on disk; a batch repeating the
+    previous batch's keys unmaps (and so deletes) that batch's dirs in all
+    three states."""
     import json
 
     from dedup.streaming import _assign_batch
@@ -1148,32 +1143,46 @@ def test_parent_layout_state_refuses(spark, tmp_path):
     assert not os.path.exists(os.path.join(root, "v000000001"))
 
 
-# A child process that runs micro-batch 1 and dies by os._exit at a patched
-# point of the exact-tier commit: before it (the stream_assignments write
-# has run) or right after it returns (before its deferred version-dir GC).
+# A child process that runs micro-batch 1 and dies by os._exit once N
+# StreamState.commit calls have returned: N=0 dies entering the exact
+# commit (the stream_assignments write has run); in the exact tier N=1 dies
+# after its one commit, before the version-dir GC; with fuzzy=True, N=1 dies
+# after the exact commit (band not yet) and N=2 after the band commit (sim
+# not yet).
 _CRASH_CHILD = """
 import os, sys
 from dedup.session import get_spark
 from dedup.streaming import StreamState, _assign_batch
 
-point, src, wh = sys.argv[1:]
+n, fuzzy, src, wh = int(sys.argv[1]), sys.argv[2] == "fuzzy", sys.argv[3], sys.argv[4]
 commit = StreamState.commit
+done = []
 
 def crash(self, *a, **kw):
-    if point == "after_commit":
-        commit(self, *a, **kw)
-    os._exit(17)
+    if len(done) == n:
+        os._exit(17)
+    done.append(commit(self, *a, **kw))
+    if len(done) == n:
+        os._exit(17)
+    return done[-1]
 
 StreamState.commit = crash
 spark = get_spark("crash", cores=2, shuffle_partitions=4)
-_assign_batch(spark.read.parquet(src), 1, wh)
+_assign_batch(spark.read.parquet(src), 1, wh, fuzzy=fuzzy)
 """
+
+# the three states in commit order, with their row schemas
+_STATES = (
+    ("stream_state", "key string, rep_id string"),
+    ("band_state", "key string, rep_id string, rep_caption string"),
+    ("simhash_state", "key string, rep_id string, rep_phash long"),
+)
 
 
 def _crash_batches(tmp_path):
     """Three micro-batch files. Batch 1 repeats every batch-0 row under a
-    new id, so it touches all of batch 0's buckets and its commit unmaps
-    v000000000 entirely."""
+    new id, so it touches all of batch 0's buckets in every state and its
+    commits unmap each state's v000000000 entirely."""
     rows = synth.generate(90, seed=29)
 
     def copies(src, tag):
@@ -1198,76 +1207,142 @@ def _crash_batches(tmp_path):
 
 
 def _snapshot(spark, wh):
+    """Sorted assignments, then the sorted live rows of each state (empty
+    for a state the run never wrote)."""
     from dedup.streaming import StreamState
 
     asg = sorted(
         tuple(r) for r in spark.read.parquet(os.path.join(wh, "stream_assignments")).collect()
     )
-    state = StreamState(os.path.join(wh, "stream_state"))
-    live = sorted(tuple(r) for r in state.read_buckets(spark, list(range(64))).collect())
+    live = [
+        sorted(
+            tuple(r) for r in StreamState(os.path.join(wh, name), columns)
+            .read_buckets(spark, list(range(64))).collect()
+        )
+        for name, columns in _STATES
+    ]
     return asg, live
 
 
 @pytest.fixture(scope="module")
 def crash_reference(spark, tmp_path_factory):
-    """The three batches run with no crash: (input files, snapshot after
-    batch 1, snapshot after batch 2)."""
+    """fuzzy -> the three batches run with no crash: (input files, snapshot
+    after batch 1, snapshot after batch 2), computed once per tier mode."""
     from dedup.streaming import _assign_batch
 
-    tmp = tmp_path_factory.mktemp("crash_ref")
-    paths = _crash_batches(tmp)
-    wh = str(tmp / "wh")
-    snaps = []
-    for bid, p in enumerate(paths):
-        _assign_batch(spark.read.parquet(p), bid, wh)
-        snaps.append(_snapshot(spark, wh))
-    return paths, snaps[1], snaps[2]
+    refs = {}
+
+    def ref(fuzzy):
+        if fuzzy not in refs:
+            tmp = tmp_path_factory.mktemp("crash_ref")
+            paths = _crash_batches(tmp)
+            wh = str(tmp / "wh")
+            snaps = []
+            for bid, p in enumerate(paths):
+                _assign_batch(spark.read.parquet(p), bid, wh, fuzzy=fuzzy)
+                snaps.append(_snapshot(spark, wh))
+            refs[fuzzy] = (paths, snaps[1], snaps[2])
+        return refs[fuzzy]
+
+    return ref
 
 
-@pytest.mark.parametrize("point", ["before_commit", "after_commit"])
-def test_exact_crash_replays_clean(spark, tmp_path, crash_reference, point):
+@pytest.mark.parametrize(
+    "n, fuzzy",
+    [
+        pytest.param(0, False, id="before_commit"),
+        pytest.param(1, False, id="after_commit"),
+        pytest.param(1, True, id="fuzzy_after_exact_commit"),
+        pytest.param(2, True, id="fuzzy_after_band_commit"),
+    ],
+)
+def test_exact_crash_replays_clean(spark, tmp_path, crash_reference, n, fuzzy):
     """A process killed mid micro-batch — after the stream_assignments
-    write but before the exact-state commit, or after that commit but
-    before its deferred GC — replays the same batch id to assignments and
-    live state identical to an uncrashed run, with the manifest at that
-    batch id; no orphaned version dir survives the next commit."""
+    write but before the exact-state commit, after that commit but before
+    the version-dir GC, or (fuzzy) between the exact and band or the band
+    and sim commits — replays the same batch id to assignments and live
+    rows of all three states identical to an uncrashed run, with every
+    manifest at that batch id. The crashed batch deleted no version dir;
+    after the next batch only mapped ones are left on disk."""
     import json
     import subprocess
     import sys
 
     from dedup.streaming import _assign_batch
 
-    paths, want1, want2 = crash_reference
+    paths, want1, want2 = crash_reference(fuzzy)
     wh = str(tmp_path / "wh")
-    root = os.path.join(wh, "stream_state")
-    man_path = os.path.join(root, "_state_manifest.json")
-    _assign_batch(spark.read.parquet(paths[0]), 0, wh)
+    roots = [os.path.join(wh, name) for name, _ in _STATES[: 3 if fuzzy else 1]]
+
+    def manifest(root):
+        with open(os.path.join(root, "_state_manifest.json")) as f:
+            return json.load(f)
+
+    _assign_batch(spark.read.parquet(paths[0]), 0, wh, fuzzy=fuzzy)
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, PYTHONPATH=repo, SPARK_DRIVER_MEM="1g")
     out = subprocess.run(
-        [sys.executable, "-c", _CRASH_CHILD, point, paths[1], wh],
+        [sys.executable, "-c", _CRASH_CHILD, str(n), "fuzzy" if fuzzy else "exact", paths[1], wh],
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 17, out.stderr[-3000:]
-    # the crash landed where intended
+    # the crash landed where intended: the first n states committed batch 1
+    # and kept their unmapped v0 on disk, the rest are still at batch 0
     assert os.path.isdir(os.path.join(wh, "stream_assignments", "batch_id=1"))
-    with open(man_path) as f:
-        man = json.load(f)
-    v0 = os.path.join(root, "v000000000")
-    if point == "before_commit":
-        assert man["batch_id"] == 0
-    else:
-        assert man["batch_id"] == 1
-        assert os.path.isdir(v0) and v0 not in man["buckets"].values()  # the orphan
+    for i, root in enumerate(roots):
+        man = manifest(root)
+        v0 = os.path.join(root, "v000000000")
+        if i < n:
+            assert man["batch_id"] == 1, root
+            assert os.path.isdir(v0) and v0 not in man["buckets"].values(), root  # the orphan
+        else:
+            assert man["batch_id"] == 0, root
 
-    _assign_batch(spark.read.parquet(paths[1]), 1, wh)  # checkpoint replay
-    with open(man_path) as f:
-        assert json.load(f)["batch_id"] == 1
+    _assign_batch(spark.read.parquet(paths[1]), 1, wh, fuzzy=fuzzy)  # checkpoint replay
+    assert [manifest(root)["batch_id"] for root in roots] == [1] * len(roots)
     assert _snapshot(spark, wh) == want1
 
-    _assign_batch(spark.read.parquet(paths[2]), 2, wh)
+    _assign_batch(spark.read.parquet(paths[2]), 2, wh, fuzzy=fuzzy)
     assert _snapshot(spark, wh) == want2
-    with open(man_path) as f:
-        mapped = set(json.load(f)["buckets"].values())
-    assert _vdirs_on_disk(root) == mapped
+    for root in roots:
+        assert _vdirs_on_disk(root) == set(manifest(root)["buckets"].values()), root
+
+
+def test_micro_batch_releases_every_cache(spark, tmp_path, monkeypatch):
+    """No micro-batch leaves a persisted RDD behind: an exact batch, a fuzzy
+    batch, a fuzzy batch whose captions and pHashes are all NULL (neither
+    fuzzy tier runs), and a fuzzy batch whose sim commit raises."""
+    from dedup.streaming import StreamState, _assign_batch
+
+    sc = spark.sparkContext
+    wh = str(tmp_path / "wh")
+    rows = synth.generate(120, seed=23)
+    null_rows = [dict(r, image_id=f"null{i:05d}", caption=None, phash=None)
+                 for i, r in enumerate(rows[80:100])]
+    commit = StreamState.commit
+
+    def sim_fails(self, *a, **kw):
+        if os.path.basename(self.root) == "simhash_state":
+            raise RuntimeError("injected sim commit failure")
+        return commit(self, *a, **kw)
+
+    cases = [
+        (rows[:40], False, None),
+        (rows[40:80], True, None),
+        (null_rows, True, None),
+        (rows[100:], True, sim_fails),
+    ]
+    for bid, (batch_rows, fuzzy, patch) in enumerate(cases):
+        batch = spark.createDataFrame(synth.to_arrow(batch_rows).to_pandas())
+        # by id, not by count: the context holds persisted RDDs weakly, so
+        # unreferenced caches of earlier tests may vanish during the batch
+        cached = set(sc._jsc.getPersistentRDDs().keys())
+        with monkeypatch.context() as m:
+            if patch is None:
+                _assign_batch(batch, bid, wh, fuzzy=fuzzy)
+            else:
+                m.setattr(StreamState, "commit", patch)
+                with pytest.raises(RuntimeError, match="injected sim commit failure"):
+                    _assign_batch(batch, bid, wh, fuzzy=fuzzy)
+        assert set(sc._jsc.getPersistentRDDs().keys()) <= cached, bid

@@ -52,10 +52,10 @@ def test_load_checks_yaml_and_evaluate(spark, tmp_path):
 
 
 def test_compact_fuzzy_refines_stream_clusters(spark, tmp_path):
-    """The incremental stream handles only the exact tier; compact_fuzzy runs
-    the batch pipeline over the landed files and must (a) merge the near-dup
-    families the stream could not, (b) never split a stream cluster, and
-    (c) equal the brute-force oracle."""
+    """An exact-tier stream (the default, fuzzy=False) drains the landing
+    dir; compact_fuzzy runs the batch pipeline over the landed files and
+    must (a) merge the near-dup families the stream did not, (b) never
+    split a stream cluster, and (c) equal the brute-force oracle."""
     landing = tmp_path / "landing"
     landing.mkdir()
     rows = synth.generate(300, seed=21)
