@@ -4,8 +4,8 @@ Replaces the reference's dense all-pairs `model.similarity(E, E)`
 (/root/reference/README.md:38-47, /root/reference/eridu/train/utils.py:153-235)
 with two engine paths:
 
-  - brute-force cosine top-k (baseline; exact) — JVM higher-order functions
-    (`zip_with` dot product + `aggregate` norms), broadcast query vector;
+  - exact cosine top-k (baseline; `batch_topk`) — JVM higher-order
+    functions (`zip_with` dot product + `aggregate` norms), broadcast probes;
   - random-hyperplane LSH (SimHash for vectors): b sign-bits per table ->
     bucket join, exact cosine re-ranked only within colliding buckets — the
     scale path (bucket sizes ~n/2^b; per-row cost O(tables * b * dim) in one
@@ -26,24 +26,6 @@ _NORM = "sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DO
 def cosine_expr(a: str, b: str):
     return F.expr(
         f"{_DOT.format(a=a, b=b)} / ({_NORM.format(a=a)} * {_NORM.format(a=b)})"
-    )
-
-
-def brute_force_topk(
-    embeddings: DataFrame, query: list[float], k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k vs one query vector (TakeOrderedAndProject plan)."""
-    spark = embeddings.sparkSession
-    qdf = spark.createDataFrame([(query,)], T.StructType(
-        [T.StructField("qe", T.ArrayType(T.FloatType()))]
-    ))
-    return (
-        embeddings.crossJoin(F.broadcast(qdf))
-        .withColumn("cosine", cosine_expr(vec_col, "qe"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, "cosine")
     )
 
 

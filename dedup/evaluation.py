@@ -270,24 +270,6 @@ def error_category_rollup(errors: DataFrame, score_col: str = "score") -> DataFr
     )
 
 
-def export_error_categories(errors: DataFrame, out_dir: str) -> DataFrame:
-    """Categorize an FP/FN errors table and export one CSV directory per
-    category — the reference's per-category error files
-    (/root/reference/eridu/etl/checks_evaluation.py:311-334, one
-    errors_<category>.csv each). A partitionBy write produces the
-    per-category layout in ONE distributed pass (no driver-side loop over
-    categories); returns the categorized frame so callers can roll it up
-    with error_category_rollup against the same rows that were written."""
-    cat = errors if "error_category" in errors.columns else categorize_errors(errors)
-    (
-        cat.write.mode("overwrite")
-        .option("header", True)
-        .partitionBy("error_category")
-        .csv(out_dir)
-    )
-    return cat
-
-
 def load_checks_yaml(spark, path: str, schemas: list[str] | None = None):
     """S6 YAML golden-checks source (reference checks_evaluation.py:23-69):
     a `{checks: [{match, schema, label, query: {name}, candidate: {name}}]}`

@@ -57,24 +57,6 @@ from .components import cc_route, connected_components
 from .config import DedupConfig, DEFAULT
 from .io import Warehouse
 
-STAGES = [
-    "keys",
-    "reps",
-    "signatures",
-    "scored_minhash_b00_07",
-    "scored_minhash_b08_15",
-    "scored_minhash_b16_23",
-    "scored_minhash_b24_31",
-    "edges_minhash",
-    "edges_simhash",
-    "edges_substring",
-    "pairs",
-    "assignments",
-    "metrics",
-    "member_scores",
-]
-
-
 def exact_member_edges(
     keys: DataFrame,
     hot_key_rows: int = 1_000_000,
@@ -745,15 +727,3 @@ class Pipeline:
 
         sched.run(declared())
         return out["assignments"]
-
-    @staticmethod
-    def tight_clusters(
-        metrics: DataFrame, max_intra_dist: float = 0.2, min_size: int = 5
-    ) -> DataFrame:
-        """P6 threshold-band filter (reference cluster_split.py:62-67): keep
-        clusters that are cohesive (intra distance <= bound) and non-trivial
-        (size >= bound). Singleton clusters have NULL intra_mean_dist and are
-        excluded by the size bound anyway."""
-        return metrics.where(
-            (F.col("intra_mean_dist") <= max_intra_dist) & (F.col("size") >= min_size)
-        )

@@ -601,15 +601,14 @@ def q23(spark, sf):
 def q24(spark, sf):
     """Brute-force cosine top-k vs a query vector (ANN baseline; J5 replaced):
     broadcast single-row query, zip_with dot product, TakeOrdered top-k."""
+    from .ann import cosine_expr
+
     e = _t(spark, sf, "embeddings")
     qv = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    dot = F.expr("aggregate(zip_with(embedding, qe, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
-    na = F.sqrt(F.expr("aggregate(embedding, CAST(0.0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"))
-    nb = F.sqrt(F.expr("aggregate(qe, CAST(0.0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"))
     return (
         e.where(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(qv))
-        .withColumn("cos", dot / (na * nb))
+        .withColumn("cos", cosine_expr("embedding", "qe"))
         .orderBy(F.desc("cos"), F.asc("vec_id"))
         .limit(15)
         .select("vec_id", F.round("cos", 3).alias("cosine"))
@@ -1368,7 +1367,7 @@ def q41(spark, sf):
     within-cluster pairs, keep clusters with intra <= 0.82 AND size >= 5.
     The pairwise work is bounded (doc_id < 300, pairs only WITHIN a source)
     and fully JVM-side (array_intersect); the pipeline-scale analog is the
-    metrics stage's intra/inter/rep distance columns + Pipeline.tight_clusters."""
+    metrics stage's intra/inter/rep distance columns."""
     d = _t(spark, sf, "documents").where(F.col("doc_id") < 300)
     sh = d.select(
         "doc_id",

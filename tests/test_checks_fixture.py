@@ -93,20 +93,3 @@ def test_metrics_distance_columns(spark, assignments_wh):
     assert metrics.where((F.col("size") > 1) & F.col("intra_mean_dist").isNull()).count() == 0
     # exact-dup-dominated corpus: some clusters are perfectly tight (dist 0)
     assert metrics.where(F.col("intra_mean_dist") == 0.0).count() > 0
-
-
-def test_tight_clusters_filter(spark, assignments_wh):
-    """P6 threshold-band filter (reference cluster_split.py:62-67): the
-    tight-clusters set is exactly the rows passing both bounds."""
-    from dedup.pipeline import Pipeline
-
-    metrics = spark.read.parquet(f"{assignments_wh}/metrics")
-    tight = Pipeline.tight_clusters(metrics, max_intra_dist=0.2, min_size=2)
-    got = {r["cluster_id"] for r in tight.collect()}
-    want = {
-        r["cluster_id"]
-        for r in metrics.collect()
-        if r["intra_mean_dist"] is not None
-        and r["intra_mean_dist"] <= 0.2 and r["size"] >= 2
-    }
-    assert got == want and got

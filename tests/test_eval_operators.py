@@ -162,48 +162,6 @@ def test_member_scores_stage_committed(spark, tmp_path):
     assert j.where(F.col("cluster_id") != F.col("c2")).count() == 0
 
 
-def test_export_error_categories(spark, tmp_path):
-    """One CSV directory per category; per-category row counts equal the
-    rollup's (reference checks_evaluation.py:311-334)."""
-    from dedup.evaluation import (
-        categorize_errors,
-        error_category_rollup,
-        export_error_categories,
-    )
-
-    errors = spark.createDataFrame(
-        [
-            ("acme corp", "acmecorp", "False Positive", 0.9),
-            ("jane p doe", "janep doe", "False Negative", 0.4),
-            ("big blue llc", "big blue inc", "False Positive", 0.8),
-            ("dr john smith", "john smith", "False Negative", 0.3),
-            ("alpha beta", "beta alpha", "False Positive", 0.6),
-        ],
-        "name_a string, name_b string, error_type string, score double",
-    )
-    out_dir = str(tmp_path / "errors_by_category")
-    cat = export_error_categories(errors, out_dir)
-    rollup = {
-        r["error_category"]: r["n"]
-        for r in error_category_rollup(cat).groupBy("error_category")
-        .agg(F.sum("n").alias("n")).collect()
-    }
-    from urllib.parse import unquote
-
-    dirs = {
-        unquote(d.split("=", 1)[1])
-        for d in os.listdir(out_dir)
-        if d.startswith("error_category=")
-    }
-    assert dirs == set(rollup)  # one CSV directory per category
-    back = spark.read.option("header", True).csv(out_dir)  # partition col restored
-    got = {
-        r["error_category"]: r["n"]
-        for r in back.groupBy("error_category").agg(F.count("*").alias("n")).collect()
-    }
-    assert got == rollup
-
-
 def test_rollups_match_brute_force(spark):
     """metrics and member_scores against a pandas brute force over
     hand-built stage rows, covering: a singleton (z); a cluster with no

@@ -78,7 +78,7 @@ def test_warehouse_on_hadoop_uri_commits_and_resumes(spark, synth_parquet, tmp_p
 
 def test_stage_order_knows_auto_band_groups(spark, synth_parquet, tmp_path):
     """invalidate_after must see the auto-resolved band-group stage names
-    (r03 advice: STAGES hardcodes the 4-group names)."""
+    (r03 advice: a fixed stage list misses the auto-resolved group)."""
     from dedup.pipeline import Pipeline
 
     wh = str(tmp_path / "wh")

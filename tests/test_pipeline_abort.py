@@ -274,13 +274,19 @@ Pipeline(wh).run(spark, spark.read.parquet(src))
 """
 
 
-@pytest.mark.parametrize("point", ["before_manifest", "before_lineage"])
-def test_crash_at_stage_commit_point_resumes(spark, tmp_path, point):
-    """A process killed at one of the `pairs` stage's commit points — after
-    its parquet write but before its manifest, or after the manifest but
-    before the lineage append — resumes to the oracle's clusters. Every
-    stage whose manifest committed before the crash keeps its committed_at
-    (none is recomputed), and stage_order lists the crashed stage."""
+@pytest.mark.parametrize("point,stage", [
+    pytest.param(point, stage, id=point + suffix)
+    for stage, suffix in [("pairs", ""), ("scored_minhash_b16_23", "-band")]
+    for point in ("before_manifest", "before_lineage")
+])
+def test_crash_at_stage_commit_point_resumes(spark, tmp_path, point, stage):
+    """A process killed at one of `stage`'s commit points — after its
+    parquet write but before its manifest, or after the manifest but before
+    the lineage append — resumes to the oracle's clusters. Every stage whose
+    manifest committed before the crash keeps its committed_at (none is
+    recomputed), and stage_order lists the crashed stage. The band case
+    kills the run between band groups: the default 4 groups of 8 bands have
+    committed groups 0-1, and the rerun resumes at group 2."""
     import subprocess
     import sys
 
@@ -291,20 +297,25 @@ def test_crash_at_stage_commit_point_resumes(spark, tmp_path, point):
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, PYTHONPATH=repo, SPARK_DRIVER_MEM="1g")
     out = subprocess.run(
-        [sys.executable, "-c", _CRASH_CHILD, point, "pairs", src, wh],
+        [sys.executable, "-c", _CRASH_CHILD, point, stage, src, wh],
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 17, out.stderr[-3000:]
     # the crash landed where intended
     p = Pipeline(wh)
     committed = {s: m["committed_at"] for s in p.wh.stage_order() if (m := p.wh.manifest(s))}
-    assert os.path.isdir(os.path.join(wh, "pairs"))
-    assert ("pairs" in committed) == (point == "before_lineage")
-    assert "pairs" not in {entry["stage"] for entry in p.wh.lineage()}
+    assert os.path.isdir(os.path.join(wh, stage))
+    assert (stage in committed) == (point == "before_lineage")
+    assert stage not in {entry["stage"] for entry in p.wh.lineage()}
     assert "keys" in committed and "assignments" not in committed
+    if stage.startswith("scored_minhash_"):
+        assert {"scored_minhash_b00_07", "scored_minhash_b08_15"} <= set(committed)
+        assert "scored_minhash_b24_31" not in committed
 
     res = {r["image_id"]: r["cluster_id"] for r in p.run(spark, spark.read.parquet(src)).collect()}
     assert res == oracle_clusters(rows, oracle_pairs(rows))
     for s, ts in committed.items():
         assert p.wh.manifest(s)["committed_at"] == ts, s
-    assert "pairs" in p.wh.stage_order()
+    assert stage in p.wh.stage_order()
+    if stage.startswith("scored_minhash_"):
+        assert p.wh.manifest(stage)["band_lo"] == 16

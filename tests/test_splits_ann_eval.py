@@ -47,13 +47,6 @@ def vec_df(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_brute_force_topk(spark, vec_df):
-    q = vec_df.where(F.col("vec_id") == 0).first()["embedding"]
-    top = ann.brute_force_topk(vec_df, [float(x) for x in q], k=3).collect()
-    assert top[0]["vec_id"] == 0 and abs(top[0]["cosine"] - 1.0) < 1e-9
-    assert top[1]["vec_id"] == 1000  # its near-duplicate ranks next
-
-
 def test_lsh_near_pairs_recall(spark, vec_df):
     ensure_shipped(spark)
     got = {
