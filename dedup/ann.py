@@ -663,7 +663,7 @@ def semantic_dedup(
     exemplar (the cluster root; singletons keep themselves). Quality-based
     exemplar choice composes via splits.select_exemplars on the returned
     assignments instead of the keep flag."""
-    from .components import connected_components
+    from .components import connected_components, edge_bytes_est
     from .config import DEFAULT as _CFG_DEFAULT
 
     n = None
@@ -727,7 +727,7 @@ def semantic_dedup(
     try:
         g = pairs.agg(
             F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.length("src") + F.length("dst") + F.lit(48)), F.lit(0)).alias("b"),
+            edge_bytes_est("src", "dst").alias("b"),
         ).first()
         asg = connected_components(
             pairs, vecs.select(F.col("id").alias("image_id")),

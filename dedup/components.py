@@ -8,16 +8,18 @@ with the same output contract: every row gets a cluster id; rows with no dup
 edge keep cluster_id = own id (noise -> singleton,
 /root/reference/Clusters.md:51-55).
 
-Each round is two shuffle stages (groupBy-min + join); the edge set is
-`localCheckpoint()`ed every round to truncate lineage (Catalyst has no
-fixpoint operator). Convergence = stable (count, xor-of-hashes) checksum,
-one cheap aggregate action per round. Node ids are compared as strings; the
+Each round runs a groupBy-min, a join and a distinct in each of its two
+halves (large-star, then small-star), on the session's own shuffle
+partitions as AQE coalesces them; the edge set is `localCheckpoint()`ed
+every round to truncate lineage (Catalyst has no fixpoint operator).
+Convergence = stable (count, xor-of-hashes) checksum, one cheap aggregate
+action per round. Node ids are compared as strings; the
 component root is the lexicographic min id, which makes assignments
 deterministic across parallelism levels (min-id everywhere, no rand)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .config import DedupConfig, DEFAULT
 
@@ -53,18 +55,20 @@ def _small_star(e: DataFrame) -> DataFrame:
     return linked.where(F.col("src") != F.col("dst")).distinct()
 
 
-def _checksum(e: DataFrame) -> tuple[int, int, int]:
-    """(row count, xor-of-hashes, estimated bytes) in ONE aggregate action.
-
-    The byte estimate (sum of id lengths + ~48B of python/pandas overhead per
-    edge) gates the driver union-find fast path: edge COUNT alone
+def edge_bytes_est(src: str, dst: str) -> Column:
+    """Aggregate: estimated driver heap of the edge set (src, dst) — the sum
+    of id lengths + ~48B of python/pandas overhead per edge, 0 when empty.
+    It gates the driver union-find fast path (cc_route): edge COUNT alone
     under-estimates driver heap when ids are long URIs."""
+    return F.coalesce(F.sum(F.length(src) + F.length(dst) + F.lit(48)), F.lit(0))
+
+
+def _checksum(e: DataFrame) -> tuple[int, int, int]:
+    """(row count, xor-of-hashes, edge_bytes_est) in ONE aggregate action."""
     row = e.agg(
         F.count("*").alias("n"),
         F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-        F.coalesce(
-            F.sum(F.length("src") + F.length("dst") + F.lit(48)), F.lit(0)
-        ).alias("b"),
+        edge_bytes_est("src", "dst").alias("b"),
     ).collect()[0]
     return int(row["n"]), int(row["h"]), int(row["b"])
 
@@ -167,6 +171,30 @@ def cc_route(n_edges: int, edge_bytes: int, cfg: DedupConfig = DEFAULT) -> dict:
     }
 
 
+def _star_roots(raw: DataFrame) -> DataFrame:
+    """Converged (image_id, cluster_id) roots of the distributed
+    large-star/small-star loop over `raw`; raises after _MAX_STAR_ROUNDS
+    rounds without a stable checksum."""
+    e = raw.distinct().localCheckpoint()
+    prev = _checksum(e)
+    for _ in range(_MAX_STAR_ROUNDS):
+        if prev[0] == 0:
+            break
+        # one star round per materialization: each operator consumes its
+        # input from the checkpoint; stacking unmaterialized rounds
+        # re-executes the inner plan once per branch (union + both join
+        # sides) — measured 5x slower, not faster
+        e = _small_star(_large_star(e)).localCheckpoint()
+        cur = _checksum(e)
+        if cur == prev:
+            break
+        prev = cur
+    else:
+        raise RuntimeError(f"connected_components did not converge in {_MAX_STAR_ROUNDS} rounds")
+    # converged: e is a star graph node -> component-min root
+    return e.select(F.col("src").alias("image_id"), F.col("dst").alias("cluster_id"))
+
+
 def connected_components(
     edges: DataFrame, vertices: DataFrame, cfg: DedupConfig = DEFAULT,
     pre_gate: tuple[int, int] | None = None,
@@ -178,13 +206,13 @@ def connected_components(
     rows AND cfg.cc_driver_max_bytes estimated driver heap take the driver
     union-find fast path; above either bound, the distributed
     large-star/small-star loop (set the threshold to 0 to force it); a loop
-    that has not converged after _MAX_STAR_ROUNDS rounds raises.
+    that has not converged after _MAX_STAR_ROUNDS rounds raises. Neither
+    route changes session conf.
 
     pre_gate: optional (row_count, estimated_bytes) the caller already
     knows — e.g. observed on the committed pairs stage's write job — which
     skips the gate aggregate here entirely. Over-estimates are safe (the
     gate is conservative); the routing never changes results."""
-    spark = edges.sparkSession
     raw = edges.select(F.col("src").cast("string"), F.col("dst").cast("string")).where(
         F.col("src") != F.col("dst")
     )
@@ -195,60 +223,22 @@ def connected_components(
     # edges only add redundant adjacency rows to the driver union-find
     # (same fixpoint), and at 1M/local[32] that distinct was ~2s of pure
     # overhead.
-    prev = (pre_gate[0], 0, pre_gate[1]) if pre_gate is not None else _checksum(raw)
-    if cc_route(prev[0], prev[2], cfg)["route"] == "driver":
+    n, _, nbytes = (pre_gate[0], 0, pre_gate[1]) if pre_gate is not None else _checksum(raw)
+    if cc_route(n, nbytes, cfg)["route"] == "driver":
         roots, roots_nbytes = _driver_union_find(raw)
-        # join-back: the roots side holds only edge-touched vertices —
-        # broadcast it so the big vertex table never shuffles; singletons
-        # coalesce to self. Sized on the EXACT Arrow bytes of the roots
-        # relation (known driver-side), not the per-edge gate estimate:
-        # at 1M dup-dense rows the estimate read ~195MB (-> shuffle_hash,
-        # two 1M-row exchanges) while the actual build side is ~25MB of
-        # strings — comfortably broadcastable.
+        # the roots side holds only edge-touched vertices — broadcast it so
+        # the big vertex table never shuffles. Sized on the EXACT Arrow
+        # bytes of the roots relation (known driver-side), not the per-edge
+        # gate estimate: at 1M dup-dense rows the estimate read ~195MB
+        # (-> shuffle_hash, two 1M-row exchanges) while the actual build
+        # side is ~25MB of strings — comfortably broadcastable.
         small = roots_nbytes <= 128 * 1024 * 1024
-        r = F.broadcast(roots) if small else roots.hint("shuffle_hash")
-        return (
-            vertices.select(F.col(vertices.columns[0]).alias("image_id"))
-            .join(r, "image_id", "left")
-            .select("image_id", F.coalesce("cluster_id", "image_id").alias("cluster_id"))
-        )
-    e = raw.distinct().localCheckpoint()
-    prev = _checksum(e)
-    # the loop runs ~log(n) rounds of 2 shuffles each; with big shuffle
-    # partition counts the per-round task overhead dominates small edge sets,
-    # so size partitions to the data (~250k edges/partition) for the loop
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    loop_parts = max(8, min(int(old_parts), prev[0] // 250_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    # AQE re-plans per action; across ~2 log(n) tiny-stage rounds that
-    # planning overhead dominates — partitions are already sized explicitly
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        for _ in range(_MAX_STAR_ROUNDS):
-            if prev[0] == 0:
-                break
-            # one star round per materialization: each operator consumes its
-            # input from the checkpoint; stacking unmaterialized rounds
-            # re-executes the inner plan once per branch (union + both join
-            # sides) — measured 5x slower, not faster
-            e = _small_star(_large_star(e)).localCheckpoint()
-            cur = _checksum(e)
-            if cur == prev:
-                break
-            prev = cur
-        else:
-            raise RuntimeError(f"connected_components did not converge in {_MAX_STAR_ROUNDS} rounds")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-    # converged: e is a star graph node -> component-min root
-    roots = e.select(F.col("src").alias("image_id"), F.col("dst").alias("cluster_id"))
+        roots = F.broadcast(roots) if small else roots.hint("shuffle_hash")
+    else:
+        roots = _star_roots(raw)
+    # join-back: singletons coalesce to self
     return (
         vertices.select(F.col(vertices.columns[0]).alias("image_id"))
         .join(roots, "image_id", "left")
-        .select(
-            "image_id",
-            F.coalesce("cluster_id", "image_id").alias("cluster_id"),
-        )
+        .select("image_id", F.coalesce("cluster_id", "image_id").alias("cluster_id"))
     )

@@ -57,10 +57,12 @@ class DedupConfig:
     # URIs at 100TB cardinalities, so a row count alone under-estimates
     # driver heap). Above either bound -> distributed large-star/small-star
     # loop. Both paths are oracle-tested identical. The bounds follow the
-    # fast path's cost model: since the per-edge Python union-find became
-    # vectorized numpy label propagation (components._driver_union_find),
-    # 4M edges cost ~5s driver-side vs ~40s of distributed-loop rounds at
-    # local[4] — the same size-adaptive reasoning AQE applies to broadcasts.
+    # fast path's cost model, measured on random 16-node trees with 12-char
+    # ids (CC + join-back + one aggregate, fresh local[4] session on 4
+    # shared vCPUs, loadavg 2.9-4.6): 1M edges took 13-16s on the driver
+    # route vs 57-67s in the star loop; 4M edges (driver route forced past
+    # the byte bound) 29s vs 192s — the same size-adaptive reasoning AQE
+    # applies to broadcasts.
     # ~70B/edge estimated => the byte bound trips near 3.8M typical edges,
     # well inside an 8g driver (measured ~600MB python-side at 5M edges).
     cc_driver_edge_threshold: int = 4_000_000

@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
 from . import lsh, verify
-from .components import cc_route, connected_components
+from .components import cc_route, connected_components, edge_bytes_est
 from .config import DedupConfig, DEFAULT
 from .io import Warehouse
 
@@ -65,6 +65,12 @@ def exact_member_edges(
 ) -> DataFrame:
     """reps stage body: exact-dup collapse edges (member -> group-min rep)
     for the three collapse keys, stacked into ONE aggregate shape.
+
+    corpus_rows is an UPPER BOUND on `keys`' row count, taken on trust (not
+    checked here). An over-estimate is safe: at worst `mins` is not
+    broadcast and hot-key detection runs. An under-estimate is not: it can
+    broadcast a too-large `mins` and skip detection, sending a hot key
+    through the sort-merge join-back in one task.
 
     Skew contract (the r03 judge's one scale-killer on the default path):
     the group min is computed with groupBy().agg(min) — partial-aggregated
@@ -710,9 +716,8 @@ class Pipeline:
             # its own gate aggregate job (1-2s of serial-chain constant at 1M)
             yield Stage(
                 "pairs", ("reps", "edges_minhash", "edges_simhash", "edges_substring"),
-                build_pairs, kw={"observe_cols": {"edge_bytes_est": F.coalesce(
-                    F.sum(F.length("id_a") + F.length("id_b") + F.lit(48)), F.lit(0)
-                )}},
+                build_pairs,
+                kw={"observe_cols": {"edge_bytes_est": edge_bytes_est("id_a", "id_b")}},
             )
             yield Stage("assignments", ("pairs", "keys"), build_assignments)
             yield Stage(

@@ -90,6 +90,28 @@ def test_cc_giant_component(spark):
     assert set(res.values()) == {"v0000"}
 
 
+def test_cc_star_route_keeps_session_conf(spark, monkeypatch):
+    """The star loop plans every job under the session's own AQE and
+    shuffle-partition settings: it must not switch them for the whole
+    session (other runs may plan jobs on the same session meanwhile)."""
+    from dedup import components
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = tuple(spark.conf.get(k) for k in keys)
+    seen = []
+    orig = components._checksum
+    monkeypatch.setattr(
+        components, "_checksum",
+        lambda e: seen.append(tuple(spark.conf.get(k) for k in keys)) or orig(e),
+    )
+    n = 300
+    vertices = [f"v{i:04d}" for i in range(n)]
+    edges = [(vertices[i], vertices[i + 1]) for i in range(n - 1)]
+    assert _run(spark, edges, vertices, threshold=0) == _oracle(edges, vertices)
+    assert len(seen) > 2, "the star loop must run its convergence checks"
+    assert set(seen) == {before}
+
+
 def test_cc_byte_gate_forces_distributed(spark, monkeypatch):
     """Long-URI ids must push CC off the driver fast path even when the edge
     COUNT is tiny: the gate is byte-estimated (cfg.cc_driver_max_bytes), not
