@@ -1,17 +1,23 @@
 """Approximate nearest neighbour over embedding columns (array<float>).
 
 Replaces the reference's dense all-pairs `model.similarity(E, E)`
-(/root/reference/README.md:38-47, /root/reference/eridu/train/utils.py:153-235)
-with two engine paths:
+(reference README.md:38-47, eridu/train/utils.py:153-235) with four engine
+paths:
 
   - exact cosine top-k (baseline; `batch_topk`) — JVM higher-order
     functions (`zip_with` dot product + `aggregate` norms), broadcast probes;
-  - random-hyperplane LSH (SimHash for vectors): b sign-bits per table ->
-    bucket join, exact cosine re-ranked only within colliding buckets — the
-    scale path (bucket sizes ~n/2^b; per-row cost O(tables * b * dim) in one
-    vectorized pandas UDF).
+  - random-hyperplane LSH (SimHash for vectors; `batch_topk_lsh`,
+    `lsh_near_pairs`): b sign-bits per table -> bucket join, exact cosine
+    re-ranked only within colliding buckets — bucket sizes ~n/2^b, per-row
+    cost O(tables * b * dim) in one vectorized pandas UDF;
+  - IVF-Flat (`ivf_topk`): a spherical-k-means coarse quantizer trained on
+    a bounded sample; corpus rows join the probes' nprobe nearest cells and
+    the exact cosine re-ranks within them;
+  - SemDeDup (`semantic_dedup`): the same quantizer, an exact-cosine
+    within-cell self-join, connected components, one exemplar per group.
 
-Hyperplanes are seeded -> deterministic across runs and parallelism."""
+Hyperplanes and quantizer training are seeded -> deterministic across runs
+and parallelism."""
 
 from __future__ import annotations
 
@@ -147,40 +153,27 @@ def batch_topk_lsh(
     )
 
 
-def auto_nlist(n_rows: int, lo: int = 16, hi: int = 65_536) -> int:
+# IVF quantizer sizing and training: the sample cap bounds the one driver
+# collect (~2x cap rows, <= 32 MB at 128-dim), the nlist floor keeps tiny
+# corpora partitioned, and the ceiling keeps the broadcast centroid table
+# small (65,536 x 128-dim float32 = 32 MB).
+_SAMPLE_CAP = 32_768
+_KMEANS_ITERS = 10
+_NLIST_MIN, _NLIST_MAX = 16, 65_536
+
+
+def auto_nlist(n_rows: int) -> int:
     """Size the IVF coarse quantizer to the corpus: ``nlist ~ sqrt(n)``
     minimizes probe cost (centroid scan ``nlist*dim`` + candidate re-rank
-    ``nprobe*(n/nlist)*dim``), the standard IVF sizing. Clamped: a floor so
-    tiny corpora still partition meaningfully, a ceiling so the broadcast
-    centroid table stays small (65,536 x 128-dim float32 = 32 MB)."""
+    ``nprobe*(n/nlist)*dim``), the standard IVF sizing, clamped to
+    [_NLIST_MIN, _NLIST_MAX]."""
     import math
 
-    return int(min(hi, max(lo, math.ceil(math.sqrt(max(n_rows, 1))))))
-
-
-def _sample_matrix(
-    embeddings: DataFrame, n: int, sample_cap: int,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> np.ndarray:
-    """Bounded deterministic driver sample as a normalized float32 matrix:
-    hash-thinned on the id (content-based — the SAME rows are chosen at any
-    partitioning/parallelism, ~<= 2*sample_cap rows survive), one collect,
-    sorted by id so the matrix is order-independent."""
-    s = embeddings.select(id_col, vec_col)
-    mod = max(1, n // sample_cap)
-    if mod > 1:
-        s = s.where(F.pmod(F.xxhash64(F.col(id_col)), F.lit(mod)) == 0)
-    rows = sorted(s.collect(), key=lambda r: r[0])
-    if not rows:
-        return np.zeros((0, 1), dtype=np.float32)
-    X = np.asarray([r[1] for r in rows], dtype=np.float32)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    return X
+    return int(min(_NLIST_MAX, max(_NLIST_MIN, math.ceil(math.sqrt(max(n_rows, 1))))))
 
 
 def ivf_centroids(
     embeddings: DataFrame, nlist: int, seed: int = 31337,
-    sample_cap: int = 32_768, iters: int = 10,
     id_col: str = "vec_id", vec_col: str = "embedding",
     n_rows: int | None = None,
 ) -> np.ndarray:
@@ -191,31 +184,37 @@ def ivf_centroids(
 
     Scale contract: the sample is hash-thinned on the id (content-based, so
     the SAME rows are chosen at any partitioning/parallelism), capped at
-    ~2*sample_cap rows (<= 32 MB at 128-dim) before the one driver collect;
-    Lloyd iterations are vectorized numpy on that bounded sample. Everything
-    downstream (assignment, search) is distributed.
+    ~2*_SAMPLE_CAP rows before the one driver collect, and sorted by id so
+    the matrix is order-independent; Lloyd iterations are vectorized numpy
+    on that bounded sample. Everything downstream (assignment, search) is
+    distributed.
 
     n_rows: pass a known corpus count to skip the sizing count() job
-    (ivf_topk's auto path already counted)."""
+    (the auto-nlist path of _quantizer already counted)."""
     n = embeddings.count() if n_rows is None else n_rows
-    X = _sample_matrix(embeddings, n, sample_cap, id_col, vec_col)
-    if not len(X):
+    s = embeddings.select(id_col, vec_col)
+    mod = max(1, n // _SAMPLE_CAP)
+    if mod > 1:
+        s = s.where(F.pmod(F.xxhash64(F.col(id_col)), F.lit(mod)) == 0)
+    rows = sorted(s.collect(), key=lambda r: r[0])
+    if not rows:
         raise ValueError(
             "IVF training sample is empty (empty corpus?) — centroids need "
             "at least one vector; use batch_topk for degenerate inputs"
         )
-    return _spherical_kmeans(X, nlist, seed, iters)
+    X = np.asarray([r[1] for r in rows], dtype=np.float32)
+    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    return _spherical_kmeans(X, nlist, seed)
 
 
-def _spherical_kmeans(X: np.ndarray, k: int, seed: int, iters: int) -> np.ndarray:
-    """Vectorized spherical-kmeans Lloyd loop on normalized rows X, shared
-    by ivf_centroids (cells) and _centroid_groups (groups-of-cells — the
-    same algorithm one level up). Deterministic: seeded init, stable
-    worst-served reseed of dead clusters. Returns L2-normalized (k, dim)."""
+def _spherical_kmeans(X: np.ndarray, k: int, seed: int) -> np.ndarray:
+    """Vectorized spherical-kmeans Lloyd loop on normalized rows X.
+    Deterministic: seeded init, stable worst-served reseed of dead clusters.
+    Returns L2-normalized (k, dim)."""
     k = min(k, len(X))
     rng = np.random.default_rng(seed)
     C = X[np.sort(rng.choice(len(X), size=k, replace=False))].copy()
-    for _ in range(iters):
+    for _ in range(_KMEANS_ITERS):
         assign = np.argmax(X @ C.T, axis=1)
         sums = np.zeros_like(C)
         np.add.at(sums, assign, X)
@@ -229,144 +228,50 @@ def _spherical_kmeans(X: np.ndarray, k: int, seed: int, iters: int) -> np.ndarra
     return C
 
 
-# above this many cells the flat (nlist x dim) assignment matvec dominates
-# per-row cost and the two-level (IMI-style) route becomes a CANDIDATE:
-# ivf_topk calibrates its group fan-out on a corpus sample and uses it only
-# where the measured FLOP savings clear the loop overhead (see BENCH.md)
-TWO_LEVEL_NLIST = 4096
+def _quantizer(
+    embeddings: DataFrame, nlist: int | str, nprobe: int | str, seed: int,
+    id_col: str, vec_col: str, centroids: np.ndarray | None,
+) -> tuple[int, np.ndarray]:
+    """Resolve the (nprobe, centroids) pair ivf_topk and semantic_dedup
+    share. nlist="auto" counts the corpus once (auto_nlist) and forwards
+    the count to training; nprobe="auto" scans ~30% of cells, floor 8 (the
+    unstructured-data fallback ivf_topk documents). A pre-trained quantizer
+    sizes the auto nprobe against its REAL cell count, not against what
+    auto_nlist would have trained: a 1000-cell quantizer over a 2k-row
+    corpus would otherwise probe 14 cells = 1.4% instead of ~30%."""
+    import math
 
-
-_GROUPS_CACHE: dict[tuple, tuple] = {}
-
-
-def _centroid_groups(C: np.ndarray, seed: int = 31337, iters: int = 8):
-    """Cluster the CENTROIDS into ~sqrt(nlist) groups (driver-side numpy on
-    the tiny centroid table) for two-level assignment. Returns normalized
-    group centroids G and, per group, the member-centroid index arrays.
-    Memoized on the centroid bytes: ivf_topk needs the same grouping three
-    times (calibration + each join side) and the Lloyd loop is ~1.5s at the
-    65,536-cell ceiling; the hash is ~ms on the 32 MB table."""
-    import hashlib
-
-    key = (hashlib.sha256(np.ascontiguousarray(C).tobytes()).hexdigest(), seed, iters)
-    hit = _GROUPS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    g = max(1, int(np.ceil(np.sqrt(len(C)))))
-    G = _spherical_kmeans(C, g, seed, iters)
-    a = np.argmax(C @ G.T, axis=1)
-    members = [np.nonzero(a == i)[0].astype(np.int64) for i in range(len(G))]
-    # the FINAL assignment (after the last G update) can leave a group with
-    # zero member centroids; drop such groups — they can never contribute a
-    # candidate cell, and keeping them would let assign_cells land a row on
-    # cell 0 with best_d = -inf when all its fanout groups were empty
-    keep = [i for i, m in enumerate(members) if len(m)]
-    if len(keep) < len(G):
-        G = G[keep]
-        members = [members[i] for i in keep]
-    if len(_GROUPS_CACHE) >= 8:  # bounded: a handful of live corpora at most
-        _GROUPS_CACHE.clear()
-    _GROUPS_CACHE[key] = (G, members)
-    return G, members
-
-
-def assign_cells(
-    Xn: np.ndarray, C: np.ndarray, GM=None, fanout: int = 2
-) -> np.ndarray:
-    """Vectorized nearest-cell per normalized row (the corpus path,
-    nprobe=1): whole-batch BLAS gemms, no per-row Python. Ties -> lowest
-    cell id (argmax takes the first maximum; members arrays are sorted).
-    GM = (group_centroids, member_index_arrays) from _centroid_groups
-    switches to the two-level route: scan only the members of each row's
-    `fanout` nearest groups. fanout >= len(G) degenerates to the exact flat
-    assignment (every centroid scanned)."""
-    n = len(Xn)
-    if GM is None:
-        # chunk rows so the (rows x nlist) score block stays ~64 MB
-        step = max(1, (64 << 20) // max(4 * len(C), 1))
-        out = np.empty(n, dtype=np.int64)
-        for s in range(0, n, step):
-            out[s:s + step] = np.argmax(Xn[s:s + step] @ C.T, axis=1)
-        return out
-    G, members = GM
-    # stable top-fanout groups per row (argsort, not argpartition: boundary
-    # ties must break identically to the per-row route)
-    gtop = np.argsort(-(Xn @ G.T), kind="stable", axis=1)[:, :fanout]
-    best_d = np.full(n, -np.inf, dtype=np.float32)
-    best_i = np.zeros(n, dtype=np.int64)
-    for g in range(len(G)):
-        rows = np.nonzero((gtop == g).any(axis=1))[0]
-        m = members[g]
-        if not len(rows) or not len(m):
-            continue
-        D = Xn[rows] @ C[m].T
-        loc = np.argmax(D, axis=1)
-        d = D[np.arange(len(rows)), loc]
-        ci = m[loc]
-        take = (d > best_d[rows]) | ((d == best_d[rows]) & (ci < best_i[rows]))
-        upd = rows[take]
-        best_d[upd] = d[take]
-        best_i[upd] = ci[take]
-    return best_i
-
-
-def calibrate_fanout(
-    Xs: np.ndarray, C: np.ndarray, GM, target: float = 0.95
-) -> int:
-    """Pick the smallest group fan-out whose two-level assignment agrees
-    with the exact flat assignment on >= target of the sample rows. Group
-    pruning quality is data-dependent (high-dim near-equidistant vectors
-    defeat it; clustered embedding-model output doesn't), so the fan-out is
-    MEASURED per corpus, never assumed: doubling from 2 until the agreement
-    bar is met, worst case fanout = len(G) where the route IS the flat
-    assignment (agreement 1.0 by construction)."""
-    flat = assign_cells(Xs, C)
-    g = len(GM[0])
-    fanout = 2
-    while fanout < g:
-        if float(np.mean(flat == assign_cells(Xs, C, GM, fanout))) >= target:
-            return fanout
-        fanout *= 2
-    return g
+    n = None
+    if centroids is not None:
+        nlist = len(centroids)
+    elif nlist == "auto":
+        n = embeddings.count()
+        nlist = auto_nlist(n)
+    if nprobe == "auto":
+        nprobe = min(nlist, max(8, math.ceil(0.3 * nlist)))
+    if centroids is None:
+        centroids = ivf_centroids(
+            embeddings, nlist, seed, id_col=id_col, vec_col=vec_col, n_rows=n
+        )
+    return nprobe, np.ascontiguousarray(centroids, dtype=np.float32)
 
 
 def with_ivf_cells(
     df: DataFrame, centroids: np.ndarray, vec_col: str = "embedding", nprobe: int = 1,
-    two_level: bool = False, fanout: int = 2,
 ) -> DataFrame:
     """Add `cells: array<int>` — the nprobe nearest coarse centroids by
-    cosine (spherical assignment; ties break to the lowest cell id, so the
-    column is deterministic). Centroids ride the UDF closure (broadcast once
-    per executor via the Arrow worker).
+    cosine, nearest first (spherical assignment; ties break to the lowest
+    cell id, so the column is deterministic). Centroids ride the UDF closure
+    (broadcast once per executor via the Arrow worker).
 
-    Per-row cost is one (nlist x dim) matvec — fine up to a few thousand
-    cells, but at the auto_nlist ceiling (65,536 cells for a 10^12 corpus)
-    that is ~17 MFLOP/row at dim=128. two_level switches to the IMI-style
-    hierarchical route: the centroids are themselves clustered into
-    ~sqrt(nlist) groups on the driver, each row resolves its `fanout`
-    nearest GROUPS and scans only their member centroids —
-    ~(fanout+1)*sqrt(nlist)*dim FLOPs per row. Two measured caveats govern
-    when that's actually faster (BENCH.md "IVF assignment at the nlist
-    ceiling"): group pruning may pick a near- instead of exactly-nearest
-    cell and HOW OFTEN is data-dependent, so callers must size fanout with
-    calibrate_fanout on a corpus sample (agreement >= 0.95 is the
-    contract); and the per-group gather loop carries ~10-30x constant
-    overhead over the flat route's single BLAS gemm, so pruning only wins
-    at SMALL calibrated fan-outs — ivf_topk does both and falls back to
-    flat otherwise. two_level defaults OFF: it is an explicit opt-in for
-    callers that calibrated a fan-out (ivf_topk's corpus side), never a
-    silent approximation of a previously-exact cell column.
-
-    two_level applies ONLY to nprobe=1 — the corpus side, whose n x nlist
-    matvec is the cost worth pruning. The nprobe>1 PROBE side always
-    assigns flat: probes are small by design (they ride a broadcast), and
-    group pruning would cap the reachable cells at ~fanout*sqrt(nlist),
-    silently ignoring any nprobe beyond that — nprobe=nlist must scan
-    EVERY cell so the exhaustive-probe == exact-topk gate
-    (tools/check_contract.py q50; test_ivf_exhaustive_probe_equals_exact)
-    holds by construction."""
+    Every cell is scanned: one whole-batch BLAS gemm per Arrow batch, so
+    nprobe == nlist reaches EVERY cell and the exhaustive-probe ==
+    exact-topk gate (tools/check_contract.py q50;
+    test_ivf_exhaustive_probe_equals_exact) holds by construction."""
     C = np.ascontiguousarray(centroids, dtype=np.float32)
-    GM = _centroid_groups(C) if (bool(two_level) and nprobe == 1) else None
+    # rows per chunk: the float32 (rows x nlist) scores plus the int64
+    # argsort output and the -D negation stay ~64 MB (16 B/element)
+    step = max(1, (64 << 20) // max(16 * len(C), 1))
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def _cells(vecs: pd.Series) -> pd.Series:
@@ -374,24 +279,16 @@ def with_ivf_cells(
             return pd.Series([], dtype=object)
         X = np.stack([np.asarray(v, dtype=np.float32) for v in vecs.to_numpy()])
         Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        if nprobe == 1:
-            return pd.Series([[int(i)] for i in assign_cells(Xn, C, GM, fanout)])
-        # nprobe > 1 assigns flat so every cell stays reachable (see the
-        # two_level docstring paragraph). Whole-batch gemm + row-wise
-        # argsort, chunked so the (rows x nlist) score block stays ~64 MB —
-        # the probe side is small by design, but semantic_dedup probes the
-        # CORPUS side multi-cell, where a per-row Python loop would be the
-        # hot path
-        # budget covers the float32 scores PLUS the full-width int64 argsort
-        # output and the -D negation (16 B/element, review finding); full
-        # argsort (not argpartition) keeps boundary ties breaking to the
-        # lowest cell id exactly like the per-row route — argpartition's
-        # tie SELECTION at the nprobe boundary is unspecified
-        step = max(1, (64 << 20) // max(16 * len(C), 1))
         out: list = []
         for s in range(0, len(Xn), step):
             D = Xn[s:s + step] @ C.T
-            idx = np.argsort(-D, kind="stable", axis=1)[:, :nprobe]
+            if nprobe == 1:
+                # argmax takes the first maximum: the lowest cell id
+                idx = np.argmax(D, axis=1)[:, None]
+            else:
+                # full stable argsort, not argpartition: its tie SELECTION
+                # at the nprobe boundary is unspecified
+                idx = np.argsort(-D, kind="stable", axis=1)[:, :nprobe]
             out.extend([int(i) for i in row] for row in idx)
         return pd.Series(out)
 
@@ -403,7 +300,7 @@ def ivf_topk(
     nlist: int | str = "auto", nprobe: int | str = "auto", seed: int = 31337,
     id_col: str = "vec_id", vec_col: str = "embedding",
     probe_id_col: str = "probe_id", probe_vec_col: str = "qe",
-    centroids: np.ndarray | None = None, two_level: bool | str = "auto",
+    centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """Approximate batch top-k via an IVF coarse quantizer (the FAISS
     IVF-Flat shape, re-expressed relationally): every corpus row lands in
@@ -441,48 +338,12 @@ def ivf_topk(
     than be resolved here."""
     from pyspark.sql import Window
 
-    n = None
-    if centroids is not None:
-        # pre-trained quantizer: size the auto nprobe fraction against the
-        # REAL cell count, not against what auto_nlist would have trained
-        # (same review finding as semantic_dedup)
-        nlist = len(centroids)
-    elif nlist == "auto":
-        n = embeddings.count()  # counted once; forwarded to training
-        nlist = auto_nlist(n)
-    if nprobe == "auto":
-        import math
-
-        nprobe = min(nlist, max(8, math.ceil(0.3 * nlist)))
-    if centroids is None:
-        centroids = ivf_centroids(
-            embeddings, nlist, seed, id_col=id_col, vec_col=vec_col, n_rows=n
-        )
-    C = np.ascontiguousarray(centroids, dtype=np.float32)
-    use_two = len(C) > TWO_LEVEL_NLIST if two_level == "auto" else bool(two_level)
-    fanout = 2
-    if use_two:
-        # group-pruning quality is data-dependent: MEASURE the fan-out on a
-        # bounded corpus sample (agreement >= 0.95 vs the flat assignment)
-        # instead of assuming top-2 groups suffice. One tiny extra collect,
-        # only on the two-level path (corpora past TWO_LEVEL_NLIST cells).
-        if n is None:
-            n = embeddings.count()
-        Xs = _sample_matrix(embeddings, n, 4096, id_col, vec_col)
-        if len(Xs):
-            GM = _centroid_groups(C)
-            fanout = calibrate_fanout(Xs, C, GM)
-            # measured cost model (BENCH.md "IVF assignment at the nlist
-            # ceiling"): the per-group gather loop carries ~10-30x overhead
-            # vs the flat route's single BLAS gemm, so pruning only pays
-            # when calibration lands a SMALL fan-out. In auto mode fall
-            # back to flat otherwise; an explicit two_level=True is kept
-            # (tests force the route).
-            if two_level == "auto" and fanout > max(2, len(GM[0]) // 32):
-                use_two = False
-    c = with_ivf_cells(
-        embeddings, C, vec_col, nprobe=1, two_level=use_two, fanout=fanout
-    ).select(F.col(id_col), F.col(vec_col), F.explode("cells").alias("cell"))
+    nprobe, C = _quantizer(
+        embeddings, nlist, nprobe, seed, id_col, vec_col, centroids
+    )
+    c = with_ivf_cells(embeddings, C, vec_col, nprobe=1).select(
+        F.col(id_col), F.col(vec_col), F.explode("cells").alias("cell")
+    )
     # projected to exactly (id, vec): the join-back below would otherwise
     # carry any extra probe column into cand (ambiguous against id_col/
     # vec_col). pdd is computed once per broadcast build (twice total) —
@@ -497,10 +358,7 @@ def ivf_topk(
     # the unexploded probe table and join back on probe_id after the cell
     # join; the broadcast budget is probes x nprobe slim rows + probes
     # vectors, and the corpus still never crosses an exchange.
-    p_cells = with_ivf_cells(
-        pdd, C, probe_vec_col,
-        nprobe=nprobe, two_level=use_two, fanout=fanout,
-    ).select(F.col(probe_id_col), F.explode("cells").alias("cell"))
+    p_cells = with_ivf_cells(pdd, C, probe_vec_col, nprobe=nprobe).select(F.col(probe_id_col), F.explode("cells").alias("cell"))
     cand = (
         c.join(F.broadcast(p_cells), "cell")
         .join(F.broadcast(pdd), probe_id_col)
@@ -666,26 +524,9 @@ def semantic_dedup(
     from .components import connected_components, edge_bytes_est
     from .config import DEFAULT as _CFG_DEFAULT
 
-    n = None
-    if centroids is not None:
-        # pre-trained quantizer: the REAL cell count is len(centroids) — the
-        # auto nprobe fraction must size against it, not against what
-        # auto_nlist would have trained (review finding: a 1000-cell
-        # quantizer over a 2k-row corpus would otherwise probe 14 cells =
-        # 1.4% instead of the documented ~30%)
-        nlist = len(centroids)
-    elif nlist == "auto":
-        n = embeddings.count()
-        nlist = auto_nlist(n)
-    if nprobe == "auto":
-        import math
-
-        nprobe = min(nlist, max(8, math.ceil(0.3 * nlist)))
-    if centroids is None:
-        centroids = ivf_centroids(
-            embeddings, nlist, seed, id_col=id_col, vec_col=vec_col, n_rows=n
-        )
-    C = np.ascontiguousarray(centroids, dtype=np.float32)
+    nprobe, C = _quantizer(
+        embeddings, nlist, nprobe, seed, id_col, vec_col, centroids
+    )
     vecs = embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     ).dropDuplicates(["id"])

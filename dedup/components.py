@@ -56,10 +56,14 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 def edge_bytes_est(src: str, dst: str) -> Column:
-    """Aggregate: estimated driver heap of the edge set (src, dst) — the sum
-    of id lengths + ~48B of python/pandas overhead per edge, 0 when empty.
-    It gates the driver union-find fast path (cc_route): edge COUNT alone
-    under-estimates driver heap when ids are long URIs."""
+    """Aggregate: size proxy of the edge set (src, dst) — the sum of id
+    lengths + a flat 48 B per edge, 0 when empty. It gates the driver
+    union-find fast path (cc_route): edge COUNT alone under-estimates driver
+    heap when ids are long URIs. It is not a heap model: on random 16-node
+    trees with 12-char ids it reads 72 B/edge, while _driver_union_find
+    (Arrow + numpy, no pandas) grows the Python driver's peak RSS by
+    ~230 B/edge — 221 MB at 1M edges, 868 MB at 4M (fresh local[4]
+    process, 4 shared vCPUs, loadavg 1.9-2.2)."""
     return F.coalesce(F.sum(F.length(src) + F.length(dst) + F.lit(48)), F.lit(0))
 
 

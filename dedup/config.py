@@ -63,8 +63,9 @@ class DedupConfig:
     # route vs 57-67s in the star loop; 4M edges (driver route forced past
     # the byte bound) 29s vs 192s — the same size-adaptive reasoning AQE
     # applies to broadcasts.
-    # ~70B/edge estimated => the byte bound trips near 3.8M typical edges,
-    # well inside an 8g driver (measured ~600MB python-side at 5M edges).
+    # 72 B/edge estimated on that input => the byte bound trips near 3.7M
+    # edges; there the Python driver's peak RSS grows ~230 B/edge (868 MB at
+    # 4M edges, see components.edge_bytes_est).
     cc_driver_edge_threshold: int = 4_000_000
     cc_driver_max_bytes: int = 256 * 1024 * 1024
     # inter_mean_dist (metrics stage) exact-scores a deterministic 1-in-K

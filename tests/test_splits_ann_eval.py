@@ -102,59 +102,12 @@ def test_ivf_topk_recall_on_clustered_corpus(spark, clustered_df):
         for r in ann.ivf_topk(clustered_df, probes, k=10, nlist=20, nprobe=2).collect()
     }
     assert len(approx & exact) / len(exact) >= 0.9
-    # the hierarchical (IMI-style) assignment — the cost route above
-    # TWO_LEVEL_NLIST cells — must hold the same recall bar when forced at
-    # small nlist: corpus and probes route through the same group rule
-    approx2 = {
-        (r["probe_id"], r["vec_id"])
-        for r in ann.ivf_topk(
-            clustered_df, probes, k=10, nlist=20, nprobe=2, two_level=True
-        ).collect()
-    }
-    assert len(approx2 & exact) / len(exact) >= 0.9
 
 
-def test_assign_cells_calibrated_fanout_agrees_with_flat():
-    """Pure-numpy kernel pin for the two-level route. Group pruning quality
-    is data-dependent (near-equidistant random vectors defeat a fixed top-2),
-    so the contract is the CALIBRATED one: calibrate_fanout must return a
-    fan-out whose assignment agrees >= 0.95 with the exact flat route on the
-    same sample — on adversarial random data too, where it may legitimately
-    escalate all the way to fanout=len(groups) (which IS the flat route)."""
-    rng = np.random.default_rng(5)
-    C = rng.normal(size=(512, 32)).astype(np.float32)
-    C /= np.linalg.norm(C, axis=1, keepdims=True)
-    GM = ann._centroid_groups(C)
-    for make in (
-        # clustered (embedding-model regime): points hug true centers
-        lambda: C[rng.integers(0, 512, size=4000)]
-        + 0.15 * rng.normal(size=(4000, 32)).astype(np.float32),
-        # adversarial: unstructured high-dim random
-        lambda: rng.normal(size=(4000, 32)).astype(np.float32),
-    ):
-        X = make().astype(np.float32)
-        X /= np.linalg.norm(X, axis=1, keepdims=True)
-        flat = ann.assign_cells(X, C)
-        fanout = ann.calibrate_fanout(X, C, GM)
-        two = ann.assign_cells(X, C, GM, fanout)
-        agree = float(np.mean(flat == two))
-        assert agree >= 0.95, (fanout, agree)
-        # determinism: same inputs -> identical assignment (stable ties)
-        assert np.array_equal(two, ann.assign_cells(X, C, GM, fanout))
-    # fanout >= group count degenerates to the exact flat assignment
-    X = rng.normal(size=(500, 32)).astype(np.float32)
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
-    assert np.array_equal(
-        ann.assign_cells(X, C), ann.assign_cells(X, C, GM, len(GM[0]))
-    )
-
-
-def test_probe_side_reaches_every_cell_above_two_level_ceiling(spark):
-    """Direct probe-contract pin at a REALISTIC cell count (the auto
-    two-level regime starts past 4096 cells, far above what the kmeans
-    fixtures train): with nprobe == nlist and two_level requested, every
-    one of the 4600 cells must come back, exactly ranked by cosine —
-    group pruning must never cap the probe side's reachable cells."""
+def test_probe_side_reaches_every_cell_at_4600_cells(spark):
+    """Direct probe-contract pin at a REALISTIC cell count (far above what
+    the kmeans fixtures train): with nprobe == nlist every one of the 4600
+    cells must come back, exactly ranked by cosine."""
     ensure_shipped(spark)
     rng = np.random.default_rng(5)
     C = rng.normal(size=(4600, 8)).astype(np.float32)
@@ -163,9 +116,7 @@ def test_probe_side_reaches_every_cell_above_two_level_ceiling(spark):
     df = spark.createDataFrame(
         [("p0", [float(x) for x in v])], "vec_id string, embedding array<float>"
     )
-    (row,) = ann.with_ivf_cells(
-        df, C, nprobe=len(C), two_level=True
-    ).select("cells").collect()
+    (row,) = ann.with_ivf_cells(df, C, nprobe=len(C)).select("cells").collect()
     assert len(row["cells"]) == len(C)
     vn = v / np.linalg.norm(v)
     exact = np.argsort(-(C @ vn), kind="stable")
@@ -183,15 +134,6 @@ def test_ivf_exhaustive_probe_equals_exact(spark, vec_df):
     exact = sorted(map(tuple, ann.batch_topk(vec_df, probes, k=5).collect()))
     exh = sorted(map(tuple, ann.ivf_topk(vec_df, probes, k=5, nlist=8, nprobe=8).collect()))
     assert exh == exact
-    # and under FORCED two-level routing: group pruning applies only to the
-    # corpus side's nprobe=1 assignment — the probe side always assigns
-    # flat, so nprobe=nlist still reaches EVERY cell (the probe-side cap at
-    # ~fanout*sqrt(nlist) reachable cells was a real bug: it silently
-    # ignored nprobe beyond the fanout groups)
-    exh2 = sorted(map(tuple, ann.ivf_topk(
-        vec_df, probes, k=5, nlist=8, nprobe=8, two_level=True
-    ).collect()))
-    assert exh2 == exact
 
 
 def test_ivf_cells_bounded_and_auto_nlist(spark, clustered_df):
@@ -355,18 +297,32 @@ def test_semantic_dedup_clustered_refines_then_recovers(spark, clustered_df):
     assert all(len(m) == 30 for m in g2.values())
 
 
-def test_with_ivf_cells_multiprobe_matches_per_row_argsort(spark, clustered_df):
-    """The chunked whole-batch nprobe>1 assignment must equal the naive
-    per-row argsort (order included) — it feeds both ivf_topk probes and
+@pytest.mark.parametrize("nprobe", [1, 5])
+def test_with_ivf_cells_multiprobe_matches_per_row_argsort(spark, clustered_df, nprobe):
+    """The chunked whole-batch assignment must equal the naive per-row
+    argsort (order and lowest-id tie-break included) — nprobe=1 is the
+    ivf_topk corpus side (argmax branch), nprobe>1 feeds ivf_topk probes and
     semantic_dedup's multi-probe corpus side."""
     cents = ann.ivf_centroids(clustered_df, nlist=16)
     C = np.ascontiguousarray(cents, dtype=np.float32)
     got = {
         r["vec_id"]: r["cells"]
-        for r in ann.with_ivf_cells(clustered_df, cents, nprobe=5).collect()
+        for r in ann.with_ivf_cells(clustered_df, cents, nprobe=nprobe).collect()
     }
     for r in clustered_df.collect():
         x = np.asarray(r["embedding"], dtype=np.float32)
         xn = x / max(np.linalg.norm(x), 1e-12)
-        want = np.argsort(-(C @ xn), kind="stable")[:5].tolist()
+        want = np.argsort(-(C @ xn), kind="stable")[:nprobe].tolist()
         assert got[r["vec_id"]] == want
+    # exact ties (basis-vector dot products are exact in float32): cells 0/2
+    # and 1/3 are duplicates, and the lower cell id must come first
+    E = np.eye(4, dtype=np.float32)
+    ties = spark.createDataFrame(
+        [(i, [float(x) for x in E[i]]) for i in range(2)],
+        "vec_id long, embedding array<float>",
+    )
+    got = {
+        r["vec_id"]: r["cells"]
+        for r in ann.with_ivf_cells(ties, E[[0, 1, 0, 1]], nprobe=nprobe).collect()
+    }
+    assert got == {0: [0, 2, 1, 3][:nprobe], 1: [1, 3, 0, 2][:nprobe]}

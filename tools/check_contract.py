@@ -2,13 +2,15 @@
 on Spark and its oracle_sql() twin on DuckDB at sf0.01; compare row count,
 column names, and an order-insensitive value hash.
 
-The four rows-only queries (q26/q33/q39/q50 — engine-native kernels with no
+The four rows-only queries (q26/q33/q50/q57 — engine-native kernels with no
 ANSI-SQL twin) additionally carry machine-checkable brute-force gates here
 (set-exactness / subset+recall vs an independent numpy oracle), so the
 contract run itself fails on a regression, not just pytest. Usage:
 
-    python tools/check_contract.py [sf_dir] [only_query_prefix]
+    python tools/check_contract.py [sf_dir] [query_prefix ...]
 
+Every query whose name starts with one of the prefixes runs (all of them
+when none is given); a prefix that matches no registered query is an error.
 Set CONTRACT_SKIP_GATES=1 to run only the SQL-twin comparisons."""
 
 from __future__ import annotations
@@ -23,6 +25,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+# the rows-only queries run_gates checks (q39's DuckDB twin computes the same
+# signatures, so its hash comparison is its set-exactness check)
+GATED = (
+    "q26_minhash_candidates", "q33_ann_lsh_topk",
+    "q50_ann_ivf_topk", "q57_semantic_dedup",
+)
 
 
 def norm_cell(v):
@@ -202,12 +210,20 @@ def run_gates(spark, sf_dir: str, qs: dict) -> list[str]:
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = sys.argv[2] if len(sys.argv) > 2 else ""
+    prefixes = tuple(sys.argv[2:])
 
     import __spark_entry__ as entry
     from dedup.session import get_spark
 
-    spark = get_spark("contract-check", cores=8)
+    qs = entry.queries()
+    unknown = [p for p in prefixes if not any(n.startswith(p) for n in qs)]
+    if unknown:
+        print(f"FAIL no registered query matches prefix {', '.join(unknown)}")
+        sys.exit(2)
+    if prefixes:
+        qs = {n: fn for n, fn in qs.items() if n.startswith(prefixes)}
+
+    spark = get_spark("contract-check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
@@ -216,14 +232,9 @@ def main():
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
-    compared = 0
     for name, fn in qs.items():
-        if only and not name.startswith(only):
-            continue
-        compared += 1
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
@@ -264,21 +275,13 @@ def main():
             print(f"ok   {name}: {len(srows)} rows, hash match [{wall:.1f}s]")
     gate_failures: list[str] = []
     if not os.environ.get("CONTRACT_SKIP_GATES"):
-        gated = {k: v for k, v in qs.items() if not only or k.startswith(only)}
-        gate_failures = run_gates(spark, sf_dir, gated)
-        n_gates = sum(
-            q in gated
-            for q in (
-                "q39_caption_simhash_pairs", "q33_ann_lsh_topk",
-                "q50_ann_ivf_topk", "q57_semantic_dedup",
-                "q26_minhash_candidates",
-            )
-        )
+        gate_failures = run_gates(spark, sf_dir, qs)
+        n_gates = sum(q in qs for q in GATED)
         if n_gates:
             print(f"{n_gates - len(gate_failures)}/{n_gates} brute-force gates ok")
     # query and gate tallies are reported separately: a failed gate is not a
     # failed SQL-twin comparison (and one query failing both counts once each)
-    print(f"\n{compared - len(failures)}/{compared} queries ok")
+    print(f"\n{len(qs) - len(failures)}/{len(qs)} queries ok")
     spark.stop()
     sys.exit(1 if failures or gate_failures else 0)
 
